@@ -25,10 +25,10 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..offsets import offset_struct
+from ..offsets import offset_lit, offset_struct
 
 CKPT_SCHEMA = "tablet_id string, term long, index long, write_id long, phase string"
 
@@ -71,6 +71,20 @@ def batch_offsets(events: DataFrame, phase: str = "streaming") -> DataFrame:
     )
 
 
+def merge_offset_rows(old_rows, new_rows) -> list[tuple]:
+    """O1 on driver-side rows: the per-tablet max of ``(term, index,
+    write_id)`` over ``(tablet_id, term, index, write_id, phase)`` rows,
+    sorted by tablet — the offset map ``CheckpointStore.commit`` stores."""
+    merged: dict[str, tuple] = {}
+    for t, term, index, wid, phase in list(old_rows or []) + [
+        tuple(r)[:5] for r in new_rows
+    ]:
+        off = (term, index, wid, phase)
+        if t not in merged or off[:3] > merged[t][:3]:
+            merged[t] = off
+    return sorted((t, *o) for t, o in merged.items())
+
+
 def resume_filter(events: DataFrame, ckpt: DataFrame | None) -> DataFrame:
     """O3 — keep only events strictly newer than the committed per-tablet
     offset. Broadcast join: the checkpoint is tiny by construction."""
@@ -87,6 +101,25 @@ def resume_filter(events: DataFrame, ckpt: DataFrame | None) -> DataFrame:
         .where(F.col("_ckpt_off").isNull() | (offset_struct() > F.col("_ckpt_off")))
         .drop("_ckpt_off")
     )
+
+
+def resume_predicate(ckpt_rows) -> Column:
+    """O3 as a row predicate over the driver-side offset map
+    (``CheckpointStore.load_rows`` form): true exactly for the events
+    ``resume_filter`` keeps. The map is O(#tablets), so it is a literal map
+    lookup that rides inside any projection or aggregate — no broadcast
+    join, which would cost a Spark job of its own."""
+    if not ckpt_rows:
+        return F.lit(True)
+    ckpt = F.create_map(
+        *[
+            c
+            for t, term, index, wid, _phase in ckpt_rows
+            for c in (F.lit(t), offset_lit(term, index, wid))
+        ]
+    )
+    # a tablet absent from the checkpoint keeps every row
+    return F.coalesce(offset_struct() > ckpt[F.col("tablet_id")], F.lit(True))
 
 
 class CheckpointStore:
@@ -192,18 +225,11 @@ class CheckpointStore:
         import pyarrow.parquet as pq
 
         if isinstance(new_offsets, DataFrame):
-            new_rows = [
+            new_offsets = [
                 (r["tablet_id"], r["term"], r["index"], r["write_id"], r["phase"])
                 for r in new_offsets.collect()
             ]
-        else:
-            new_rows = [tuple(r)[:5] for r in new_offsets]
-        merged: dict[str, tuple] = {}
-        for t, term, index, wid, phase in (self.load_rows() or []) + new_rows:
-            off = (term, index, wid, phase)
-            if t not in merged or off[:3] > merged[t][:3]:
-                merged[t] = off
-        rows = sorted((t, *o) for t, o in merged.items())
+        rows = merge_offset_rows(self.load_rows(), new_offsets)
         v = self._cur() + 1
         vdir = os.path.join(self.path, f"v{v:08d}")
         os.makedirs(vdir, exist_ok=True)

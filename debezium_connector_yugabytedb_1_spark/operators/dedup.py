@@ -914,11 +914,11 @@ class MinHashIndex:
         )
         committed = self._manifest()
         _t("banded")
-        # ---- the two store writes depend ONLY on per_doc/banded (both
-        # checkpointed), never on the candidate/verify phase, and the new
-        # ``batch=<n>`` dirs stay invisible until the manifest commit — so
-        # submit them NOW and let their wall hide under the entire
-        # candidate phase instead of joining its tail (guide §2.6). A
+        # ---- the two store writes depend ONLY on per_doc (checkpointed)
+        # and banded (a projection over it), never on the candidate/verify
+        # phase, and the new ``batch=<n>`` dirs stay invisible until the
+        # manifest commit — so submit them NOW and let their wall hide under
+        # the entire candidate phase instead of joining its tail. A
         # retried failed add (incl. a guard rejection below) reuses slot n
         # (max+1 is stable until the commit) and overwrites the orphan.
         from concurrent.futures import ThreadPoolExecutor
@@ -943,24 +943,15 @@ class MinHashIndex:
                 .parquet(os.path.join(self._sets, f"batch={n}"))
             )
 
-        pool = ThreadPoolExecutor(2)
-        write_futs = [pool.submit(_write_buckets), pool.submit(_write_sets)]
-        try:
+        # leaving the ``with`` block waits both writers out on every exit
+        # path, a failed write or candidate phase included (a caller may
+        # delete the store directory on error; racing writers corrupt
+        # nothing uncommitted, but must not outlive the call)
+        with ThreadPoolExecutor(2) as pool:
+            write_futs = [pool.submit(_write_buckets), pool.submit(_write_sets)]
             pairs = self._candidate_verify_phase(per_doc, banded, committed, docs, _t)
-        except BaseException:
-            # wait the writes out before propagating (a caller may delete
-            # the store directory on error; racing writers corrupt nothing
-            # uncommitted, but must not outlive the call)
             for f in write_futs:
-                try:
-                    f.result()
-                except Exception:
-                    pass
-            pool.shutdown()
-            raise
-        for f in write_futs:
-            f.result()  # re-raise any write failure before the commit
-        pool.shutdown()
+                f.result()  # re-raise any write failure before the commit
         _t("pairs_and_writes")
         self._commit_manifest(self._manifest() + [n])  # atomically visible
         return pairs

@@ -7,35 +7,63 @@ erroneous events, ``AbstractYugabyteDBPartitionMetrics.java:26-121``),
 growing-WAL-backlog warning when >10k consecutive records are filtered with
 none dispatched (``maybeWarnAboutGrowingWalBacklog:921-939``, const ``:66``).
 
-Spark-first: metrics are a ``groupBy(tablet_id, op).count()`` per batch,
-appended to a parquet metrics table — queryable lineage instead of JMX.
+Spark-first: a batch's lineage rows and its meter ticks both derive from
+one set of per-``(tablet_id, op)`` partials (``partial_aggs``: count,
+min/max index, newest offset in the unsigned HybridTime domain, last event,
+last COMMIT txn, captured tables). The reference keeps its meters as
+on-heap counters that cost the poll loop nothing; here the partials are
+extra aggregate columns of an aggregation that already runs (the
+pipeline's window-stats pass), so lineage rows (``lineage_rows``, appended
+with pyarrow by ``MetricsSink``) and meters (``TaskMetrics.fold``) cost no
+Spark job of their own. ``batch_metrics`` is the DataFrame form of the same
+lineage rows, kept as the reference tests compare against.
 """
 
 from __future__ import annotations
 
 import logging
+import os
+import time
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .order import _SIGN_BIT, ht_key, ht_to_epoch_ms_py
+from .order import ht_key, ht_key_py, ht_to_epoch_ms, ht_to_epoch_ms_py
 
 log = logging.getLogger("ybcdc.metrics")
 
 WAL_BACKLOG_WARN_THRESHOLD = 10_000  # reference: GROWING_WAL_WARNING_LOG_THRESHOLD
+
+#: Lineage table columns and their parquet types, in the order (and with the
+#: types) Spark wrote ``batch_metrics`` output, so sinks written by either
+#: path read as one table.
+LINEAGE_FIELDS = (
+    ("tablet_id", "string"),
+    ("op", "string"),
+    ("n", "int64"),
+    ("min_index", "int64"),
+    ("max_index", "int64"),
+    ("max_commit_time", "int64"),
+    ("ms_behind_source", "int64"),
+    ("batch_id", "string"),
+)
 
 
 def batch_metrics(
     events: DataFrame, batch_id: str, wallclock_ms: int | None = None
 ) -> DataFrame:
     """A1 — per (tablet, op) counts + offset span for one batch; the lineage
-    record of what was applied from where.
+    record of what was applied from where. The DataFrame reference for
+    ``lineage_rows``, which the pipeline writes.
 
-    ``ms_behind_source`` is the reference's lag gauge
+    ``max_commit_time`` is the newest commit HybridTime in the UNSIGNED
+    domain (``order.ht_key``), as the raw wire value. ``ms_behind_source``
+    is the reference's lag gauge
     (``YugabyteDBStreamingPartitionMetrics.java:46-48``): wall clock minus
-    the newest commit HybridTime's physical millis (``commit_time >> 12`` is
-    physical micros, ``SourceInfo.java:96``). Pass ``wallclock_ms`` for
-    deterministic tests; defaults to the batch's processing time."""
+    that HybridTime's physical millis (``order.ht_to_epoch_ms``). Pass
+    ``wallclock_ms`` for deterministic tests; defaults to the batch's
+    processing time."""
     wall = F.lit(wallclock_ms) if wallclock_ms is not None else F.unix_millis(
         F.current_timestamp()
     )
@@ -43,13 +71,94 @@ def batch_metrics(
         F.count(F.lit(1)).alias("n"),
         F.min("index").alias("min_index"),
         F.max("index").alias("max_index"),
-        F.max("commit_time").alias("max_commit_time"),
+        # ht_key is an involution: max over keys, mapped back to the raw HT
+        ht_key(F.max(ht_key("commit_time"))).alias("max_commit_time"),
     ).withColumn(
         "ms_behind_source",
-        (wall - (F.shiftright(F.col("max_commit_time"), 12) / 1000).cast("long")).cast(
-            "long"
-        ),
+        (wall - ht_to_epoch_ms("max_commit_time")).cast("long"),
     ).withColumn("batch_id", F.lit(batch_id))
+
+
+class MeterPartial(NamedTuple):
+    """One ``(tablet_id, op)`` group's contribution to a batch's lineage row
+    and to the ``TaskMetrics`` meters (see ``partial_aggs``)."""
+
+    tablet_id: str
+    op: str
+    n: int
+    min_index: int | None
+    max_index: int | None
+    #: newest row's ``(ht_key(commit_time), index, write_id)``: its first
+    #: field is the max commit time in the unsigned domain
+    last: tuple | None
+    last_event: str | None
+    #: txn_id of the newest row (the last txn on a ``COMMIT`` group)
+    last_txn: str | None
+    tables: tuple
+
+
+def partial_aggs(keep: Column) -> list[Column]:
+    """Aggregate columns of a ``MeterPartial`` over the rows where ``keep``
+    holds, for a ``groupBy(..., "tablet_id", "op")``. All built-in and
+    map-side combinable, so they ride along in any aggregation over the
+    same rows at no extra job."""
+    order = F.when(
+        keep, F.struct(ht_key("commit_time").alias("ct"), "index", "write_id")
+    )
+    return [
+        F.count(F.when(keep, F.lit(1))).alias("m_n"),
+        F.min(F.when(keep, F.col("index"))).alias("m_min_index"),
+        F.max(F.when(keep, F.col("index"))).alias("m_max_index"),
+        F.max(order).alias("m_last"),
+        F.max_by(
+            F.concat_ws(
+                "/", F.col("table"), F.col("op"), F.col("tablet_id"),
+                F.col("index").cast("string"),
+            ),
+            order,
+        ).alias("m_last_event"),
+        F.max_by(F.col("txn_id"), order).alias("m_last_txn"),
+        F.collect_set(F.when(keep, F.col("table"))).alias("m_tables"),
+    ]
+
+
+def to_partial(row) -> MeterPartial:
+    """A collected row carrying ``tablet_id``, ``op`` and ``partial_aggs``."""
+    last = row["m_last"]
+    return MeterPartial(
+        row["tablet_id"], row["op"], row["m_n"], row["m_min_index"],
+        row["m_max_index"], None if last is None else tuple(last),
+        row["m_last_event"], row["m_last_txn"], tuple(row["m_tables"]),
+    )
+
+
+def meter_partials(events: DataFrame) -> list[MeterPartial]:
+    """Every row of ``events`` as per-``(tablet_id, op)`` partials (one
+    aggregation)."""
+    rows = events.groupBy("tablet_id", "op").agg(*partial_aggs(F.lit(True))).collect()
+    return [to_partial(r) for r in rows]
+
+
+def _now_ms(wallclock_ms: int | None) -> int:
+    return int(time.time() * 1000) if wallclock_ms is None else wallclock_ms
+
+
+def lineage_rows(
+    partials: list[MeterPartial], batch_id: str, wallclock_ms: int | None = None
+) -> list[tuple]:
+    """Driver-side ``batch_metrics``: one ``LINEAGE_FIELDS`` row per
+    non-empty partial, no Spark job."""
+    wall = _now_ms(wallclock_ms)
+    rows = []
+    for p in partials:
+        if not p.n:
+            continue
+        ct = None if p.last[0] is None else ht_key_py(p.last[0])
+        rows.append((
+            p.tablet_id, p.op, p.n, p.min_index, p.max_index, ct,
+            None if ct is None else wall - ht_to_epoch_ms_py(ct), batch_id,
+        ))
+    return rows
 
 
 class MetricsSink:
@@ -58,8 +167,37 @@ class MetricsSink:
     def __init__(self, path: str):
         self.path = path
 
-    def append(self, m: DataFrame) -> None:
-        m.write.mode("append").parquet(self.path)
+    def append(self, m: DataFrame | list[tuple]) -> None:
+        """Append a DataFrame (one Spark write), or pre-collected lineage
+        rows (``lineage_rows``) written driver-side with pyarrow at no Spark
+        job — the ``CheckpointStore.commit`` technique. The pyarrow file is
+        written under an ``_``-prefixed name, which readers skip, and then
+        renamed into place, so a crash never leaves a torn file for
+        ``read``."""
+        if isinstance(m, DataFrame):
+            m.write.mode("append").parquet(self.path)
+            return
+        import uuid
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        # an empty first append still creates a readable (empty) table, as
+        # a Spark write of an empty batch does
+        if not m and os.path.isdir(self.path):
+            return
+        os.makedirs(self.path, exist_ok=True)
+        cols = list(zip(*m)) if m else [()] * len(LINEAGE_FIELDS)
+        table = pa.table(
+            {
+                name: pa.array(col, getattr(pa, typ)())
+                for (name, typ), col in zip(LINEAGE_FIELDS, cols)
+            }
+        )
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.path, "_" + name)
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(self.path, name))
 
     def read(self, spark) -> DataFrame:
         return spark.read.parquet(self.path)
@@ -186,6 +324,13 @@ class SnapshotMetrics:
         }
 
 
+def _last_order(p: MeterPartial) -> tuple:
+    """``MeterPartial.last`` as a sort key (a null commit time sorts first,
+    as in Spark's struct order)."""
+    ct, index, write_id = p.last
+    return (ct is not None, ct or 0, index, write_id)
+
+
 class TaskMetrics:
     """MXBean-parity task metrics — the Spark analogue of the reference's
     JMX surface: the per-partition event meter
@@ -195,11 +340,14 @@ class TaskMetrics:
     ``YugabyteDBStreamingTaskMetricsMXBean``).
 
     Spark-first shape: instead of on-heap meters ticked per record, each
-    batch contributes ONE aggregate (map-side combinable, all built-in
-    functions) whose single result row updates driver-side counters;
-    ``snapshot()`` returns a dict keyed by the MXBean attribute names so a
-    dashboard reads the same gauges a JMX console would. Driver state is
-    O(#tables) + O(#tablets) — the same bound the reference holds on-heap.
+    batch contributes its per-``(tablet_id, op)`` ``MeterPartial`` rows,
+    which ``fold`` adds into driver-side counters. ``CdcPipeline`` computes
+    the partials inside its window-stats pass, so a pipeline batch ticks
+    the meters at no Spark job; ``update`` takes a DataFrame, aggregates
+    its partials (one job) and runs the same fold. ``snapshot()`` returns a
+    dict keyed by the MXBean attribute names so a dashboard reads the same
+    gauges a JMX console would. Driver state is O(#tables) + O(#tablets) —
+    the same bound the reference holds on-heap.
 
     Op mapping per ``CommonEventMeter``: ``c``→create, ``u``→update,
     ``d``→delete; snapshot reads (``r``) count toward the total only;
@@ -235,67 +383,59 @@ class TaskMetrics:
         position: dict[str, str] | None = None,
         wallclock_ms: int | None = None,
     ) -> None:
-        """Fold one batch into the meters: a single ``agg`` over the batch
-        (one job, one result row collected)."""
-        import time
+        """Fold one batch DataFrame into the meters: ``meter_partials`` (one
+        aggregation, every row counted), then ``fold``."""
+        self.fold(meter_partials(batch), n_filtered, n_erroneous, position, wallclock_ms)
 
-        op = F.col("op")
-        is_commit = op == "COMMIT"
-        row = batch.agg(
-            F.count(F.lit(1)).alias("total"),
-            F.sum((op == "c").cast("long")).alias("creates"),
-            F.sum((op == "u").cast("long")).alias("updates"),
-            F.sum((op == "d").cast("long")).alias("deletes"),
-            F.sum(is_commit.cast("long")).alias("txns"),
-            # hybrid times compare in the UNSIGNED domain everywhere in the
-            # engine (order.ht_key) — a signed max would pick the wrong last
-            # event for HTs with the sign bit set and decode to a negative
-            # epoch below
-            F.max(ht_key("commit_time")).alias("max_ct_key"),
-            F.max_by(
-                F.concat_ws(
-                    "/", F.col("table"), op, F.col("tablet_id"),
-                    F.col("index").cast("string"),
-                ),
-                F.struct(ht_key("commit_time").alias("ct"), "index", "write_id"),
-            ).alias("last_event"),
-            F.max_by(
-                F.when(is_commit, F.col("txn_id")),
-                F.when(is_commit, ht_key("commit_time")),
-            ).alias("last_txn"),
-            F.collect_set(F.when(op.isin("c", "u", "d", "r"), F.col("table"))).alias(
-                "tables"
-            ),
-        ).first()
-        wall = int(time.time() * 1000) if wallclock_ms is None else wallclock_ms
-        self._c["TotalNumberOfEventsSeen"] += row["total"]
-        self._c["TotalNumberOfCreateEventsSeen"] += row["creates"] or 0
-        self._c["TotalNumberOfUpdateEventsSeen"] += row["updates"] or 0
-        self._c["TotalNumberOfDeleteEventsSeen"] += row["deletes"] or 0
-        self._c["NumberOfCommittedTransactions"] += row["txns"] or 0
+    def fold(
+        self,
+        partials: list[MeterPartial],
+        n_filtered: int = 0,
+        n_erroneous: int = 0,
+        position: dict[str, str] | None = None,
+        wallclock_ms: int | None = None,
+    ) -> None:
+        """Fold one batch's partials into the meters, driver-side."""
+        seen = [p for p in partials if p.n]
+
+        def count(*ops):
+            return sum(p.n for p in seen if p.op in ops)
+
+        self._c["TotalNumberOfEventsSeen"] += sum(p.n for p in seen)
+        self._c["TotalNumberOfCreateEventsSeen"] += count("c")
+        self._c["TotalNumberOfUpdateEventsSeen"] += count("u")
+        self._c["TotalNumberOfDeleteEventsSeen"] += count("d")
+        self._c["NumberOfCommittedTransactions"] += count("COMMIT")
         self._c["NumberOfEventsFiltered"] += n_filtered
         self._c["NumberOfErroneousEvents"] += n_erroneous
-        self._captured_tables.update(t for t in row["tables"] if t is not None)
-        if row["total"]:
-            self._last_event = row["last_event"]
-            self._last_event_wall_ms = wall
-        if row["last_txn"] is not None:
-            self._last_txn_id = row["last_txn"]
-        if row["max_ct_key"] is not None:
-            # undo the ht_key sign-bit flip, then the shared driver-side
-            # HT→epoch decode (ht_to_epoch_ms_py masks to the unsigned
-            # magnitude and applies the SourceInfo.java:96 >>12 shift)
-            ms = ht_to_epoch_ms_py(row["max_ct_key"] ^ _SIGN_BIT)
+        self._captured_tables.update(
+            t for p in seen if p.op in ("c", "u", "d", "r") for t in p.tables
+        )
+        # hybrid times compare in the UNSIGNED domain everywhere in the
+        # engine (order.ht_key): ``last`` leads with the flipped key, so a
+        # sign-bit HT is the newest and its epoch is not negative
+        if seen:
+            self._last_event = max(seen, key=_last_order).last_event
+            self._last_event_wall_ms = _now_ms(wallclock_ms)
+        cts = [p.last[0] for p in seen if p.last[0] is not None]
+        if cts:
+            # undo the ht_key sign-bit flip (an involution), then the shared
+            # driver-side HT→epoch decode (ht_to_epoch_ms_py masks to the
+            # unsigned magnitude and applies the SourceInfo.java:96 >>12)
+            ms = ht_to_epoch_ms_py(ht_key_py(max(cts)))
             self._max_commit_time_ms = max(self._max_commit_time_ms or 0, ms)
+        commits = [p for p in seen if p.op == "COMMIT"]
+        if commits:
+            txn = max(commits, key=_last_order).last_txn
+            if txn is not None:
+                self._last_txn_id = txn
         if position:
             self._position.update(position)
 
     def snapshot(self, wallclock_ms: int | None = None) -> dict:
         """The MXBean attribute view (names match the reference's JMX
         surface attribute-for-attribute)."""
-        import time
-
-        wall = int(time.time() * 1000) if wallclock_ms is None else wallclock_ms
+        wall = _now_ms(wallclock_ms)
         return {
             **self._c,
             "LastEvent": self._last_event,

@@ -8,15 +8,21 @@ refreshing schema → emit envelopes → sink → ack checkpoint. Backpressure i
 the events-per-batch bound (Q1, the ``ChangeEventQueue``/``cdc.poll.limit``
 analogue, ``YugabyteDBConnectorTask.java:169-175``).
 
-Spark-first execution per micro-batch (one pass, all JVM):
+Spark-first execution per poll window:
 
-    parquet scan (index-range + checkpoint pushdown)
-      → filters (pushed to scan)
-      → from_json decode (codegen)
-      → PK-update split (union)
-      → hash-agg fold per (repo, path)  [map-side partial agg]
-      → bucket-pruned copy-on-write MERGE
-      → metrics append + checkpoint commit
+    window stats, one aggregation per (tablet_id, op)  [1-slot lookahead
+      thread: runs while the previous window MERGEs]
+      → ack offsets, row count, touched buckets, DDL markers, table set
+      → lineage + meter partials of the rows the resume filter will keep
+    then per sub-batch (one pass, all JVM):
+      parquet scan (index-range + checkpoint pushdown)
+        → filters (pushed to scan)
+        → from_json decode (codegen)
+        → PK-update split (union)
+        → hash-agg fold per (repo, path)  [map-side partial agg]
+        → bucket-pruned copy-on-write MERGE
+      → lineage append (pyarrow) + meter fold, driver-side, no Spark job
+    → checkpoint commit (pyarrow, no Spark job)
 
 The DDL cut: a batch containing DDL markers is split at each DDL offset so
 schema evolution applies between sub-batches, exactly the reference's
@@ -40,13 +46,22 @@ from pyspark.sql import functions as F
 
 from ..lake import LakeTable, MergeStats
 from ..operators import filters
-from ..operators.checkpoint import CheckpointStore, resume_filter
+from ..offsets import offset_struct
+from ..operators.checkpoint import (
+    CheckpointStore,
+    merge_offset_rows,
+    resume_filter,
+    resume_predicate,
+)
 from ..operators.decode import decode_envelope
 from ..operators.emit import DML_OPS, split_pk_updates
 from ..operators.metrics import (
+    MeterPartial,
     MetricsSink,
     TaskMetrics,
-    batch_metrics,
+    lineage_rows,
+    partial_aggs,
+    to_partial,
     warn_wal_backlog,
 )
 
@@ -116,8 +131,8 @@ class CdcPipeline:
         self.table = table
         self.ckpt = ckpt
         self.metrics = metrics
-        #: opt-in MXBean-parity gauges (``TaskMetrics.snapshot()``); one
-        #: extra single-row agg per sub-batch when enabled
+        #: opt-in MXBean-parity gauges (``TaskMetrics.snapshot()``); folded
+        #: from partials the window-stats pass computes, so no extra job
         self.task_metrics = task_metrics
         self.events_per_batch = events_per_batch
         self.table_include = table_include
@@ -262,32 +277,9 @@ class CdcPipeline:
         """Process micro-batch windows from the stored cursor to the end of
         the available log (or ``max_batches`` windows — the kill/resume
         test's kill switch)."""
-        import os as _os
-        import time as _time
-
-        _prof = _os.environ.get("SPARK_GRAFT_PROFILE") == "1"
-        _t0 = _time.monotonic()
-        events = self._events()
-        if events is None:  # fully retention-pruned log — all consumed
-            return []
-        if _prof:
-            print(f"[profile] events_read: {_time.monotonic() - _t0:.3f}s", flush=True)
-        lo = int(self.ckpt.meta().get("next_lo", 0))
-        results: list[BatchResult] = []
-        n = 0
-        # pipelined stats: window k+1's stats job runs concurrently with
-        # window k's merges (stats depends only on the log, not the lake),
-        # hiding the stats pass behind the merge — the GetChanges prefetch
-        # the reference gets from its poll loop, expressed as a 1-slot
-        # lookahead thread (Spark schedulers are thread-safe)
-        from concurrent.futures import ThreadPoolExecutor
-
-        def submit(pool, wlo, whi):
-            w = self._window(events, wlo, whi)
-            return pool.submit(self._window_stats, w), w
-
         import os
         import time
+        from concurrent.futures import ThreadPoolExecutor
 
         prof = os.environ.get("SPARK_GRAFT_PROFILE") == "1"
 
@@ -295,25 +287,46 @@ class CdcPipeline:
             if prof:
                 print(f"[profile] {label}: {time.monotonic() - t0:.3f}s", flush=True)
 
+        t0 = time.monotonic()
+        events = self._events()
+        if events is None:  # fully retention-pruned log — all consumed
+            return []
+        _t("events_read", t0)
+        lo = int(self.ckpt.meta().get("next_lo", 0))
+        results: list[BatchResult] = []
+        n = 0
+
+        # pipelined stats: window k+1's stats job runs concurrently with
+        # window k's merges (stats depends only on the log, not the lake),
+        # hiding the stats pass behind the merge — the GetChanges prefetch
+        # the reference gets from its poll loop, expressed as a 1-slot
+        # lookahead thread (Spark schedulers are thread-safe). ``ckpt_rows``
+        # is the checkpoint the window's ``_apply`` will resume-filter
+        # against, known at submit time: the committed rows max-merged with
+        # the offsets of every window before it.
+        def submit(pool, wlo, whi, ckpt_rows):
+            w = self._window(events, wlo, whi)
+            return pool.submit(self._window_stats, w, ckpt_rows), w
+
         with ThreadPoolExecutor(max_workers=1) as pool:
             # the first window's stats job runs concurrently with the
             # log-extent scan below — neither depends on the other, and both
             # are otherwise serial time ahead of the first merge
-            _t0 = _time.monotonic()
-            fut, window = submit(pool, lo, lo + self.events_per_batch)
-            if _prof:
-                print(f"[profile] stats_submit: {_time.monotonic() - _t0:.3f}s", flush=True)
-            _t0 = _time.monotonic()
+            t0 = time.monotonic()
+            fut, window = submit(
+                pool, lo, lo + self.events_per_batch, self.ckpt.load_rows()
+            )
+            _t("stats_submit", t0)
+            t0 = time.monotonic()
             max_index = self._max_index(events)
-            if _prof:
-                print(f"[profile] max_index: {_time.monotonic() - _t0:.3f}s", flush=True)
+            _t("max_index", t0)
             if max_index is None:
                 fut.result()
                 return []
             while lo <= max_index and (max_batches is None or n < max_batches):
                 hi = lo + self.events_per_batch
                 if fut is None:
-                    fut, window = submit(pool, lo, hi)
+                    fut, window = submit(pool, lo, hi, self.ckpt.load_rows())
                 t0 = time.monotonic()
                 stats = fut.result()
                 _t("stats_wait", t0)
@@ -321,7 +334,10 @@ class CdcPipeline:
                     self._poll_tables(stats["tables"], lo)
                 nxt_lo, nxt_hi = hi, hi + self.events_per_batch
                 if nxt_lo <= max_index and (max_batches is None or n + 1 < max_batches):
-                    nxt_fut, nxt_window = submit(pool, nxt_lo, nxt_hi)
+                    nxt_fut, nxt_window = submit(
+                        pool, nxt_lo, nxt_hi,
+                        merge_offset_rows(self.ckpt.load_rows(), stats["offsets"]),
+                    )
                 else:
                     nxt_fut, nxt_window = None, None
                 t0 = time.monotonic()
@@ -380,18 +396,24 @@ class CdcPipeline:
         self.table_include = reconfigure_include(self.table_include, new)
         self.reconfigurations.append((window_lo, new))
 
-    def _window_stats(self, window: DataFrame) -> dict:
-        """ONE aggregation job per poll window yields everything the driver
-        needs: per-tablet ack offsets + row counts, the touched-bucket set
-        (incl. PK-update old keys, decoded inline for the rare pku rows),
-        and the DDL markers. Collapsing these scans into a single job is
-        what keeps the per-batch serial fraction small enough for the
-        N→4N scaling criterion (Amdahl: every extra driver-synchronous job
-        is pure serial time)."""
+    def _window_stats(self, window: DataFrame, ckpt_rows: list | None) -> dict:
+        """ONE aggregation job per poll window, grouped by ``(tablet_id,
+        op)``, yields everything the driver needs: per-tablet ack offsets +
+        row counts, the touched-bucket set (incl. PK-update old keys,
+        decoded inline for the rare pku rows), the DDL markers, the table
+        set, and — with lineage or meters on — the ``MeterPartial`` rows of
+        exactly the rows ``_apply`` meters: no DDL markers, and only rows
+        strictly newer than ``ckpt_rows``, the checkpoint its
+        ``resume_filter`` will load. A DDL window adds one
+        ``(sub_batch, tablet_id, op)`` aggregation that returns the DDL
+        payloads and the partials per sub-batch of the DDL cut. Collapsing
+        these scans keeps the per-batch serial fraction small enough for
+        the N→4N scaling criterion (Amdahl: every extra driver-synchronous
+        job is pure serial time), and running them in the lookahead thread
+        hides them behind the previous window's MERGE."""
         import json
 
         from ..lake import bucket_expr
-        from ..offsets import offset_struct
 
         nb = self.table.n_buckets
         bucket_main = F.when(
@@ -400,8 +422,9 @@ class CdcPipeline:
         # PK updates carry the old key top-level (record-key block), so this
         # pass never opens the payload blob at all: with column pruning the
         # scan reads only the narrow key/offset columns — the dominant-size
-        # payload column stays on disk (DDL payloads, if any, are fetched by
-        # a targeted point lookup below; DDLs are rare by construction)
+        # payload column stays on disk (DDL payloads, if any, come from the
+        # DDL window's second aggregation below; DDLs are rare by
+        # construction)
         if "old_path" in window.columns:
             # a cross-repo PK update carries old_repo in the key block; when
             # absent (same-repo rename, or legacy corpus) the repo is shared
@@ -421,13 +444,18 @@ class CdcPipeline:
         bucket_old = F.when(
             F.col("op") == "pku", F.pmod(old_key_hash, F.lit(nb))
         )
+        op = F.col("op")
+        meters = self.metrics is not None or self.task_metrics is not None
+        # the rows ``_apply`` meters: no DDL markers, resume-filtered
+        keep = (op != "ddl") & resume_predicate(ckpt_rows)
+        aggs = partial_aggs(keep) if meters else []
         # collect_set of a scalar bucket id is map-side combinable and its
         # buffer is bounded by n_buckets (~16) — NOT one entry per event.
         # (collect_list of per-event arrays buffered one element per event
         # per tablet before array_distinct: an executor-memory blowup on a
         # hot tablet at 10^8-event windows.)
         rows = (
-            window.groupBy("tablet_id")
+            window.groupBy("tablet_id", "op")
             .agg(
                 F.max(offset_struct()).alias("o"),
                 F.count(F.lit(1)).alias("n"),
@@ -435,33 +463,58 @@ class CdcPipeline:
                     F.collect_set(bucket_main), F.collect_set(bucket_old)
                 ).alias("buckets"),
                 F.array_compact(
-                    F.collect_list(F.when(F.col("op") == "ddl", F.col("index")))
+                    F.collect_list(F.when(op == "ddl", F.col("index")))
                 ).alias("ddl_idx"),
                 # table-poller input: bounded by #tables, map-side combinable
                 F.collect_set("table").alias("tables"),
+                *aggs,
             )
             .collect()
         )
+        # roll the (tablet_id, op) groups up per tablet
+        offsets: dict[str, tuple] = {}
+        for r in rows:
+            o = tuple(r["o"])
+            offsets[r["tablet_id"]] = max(offsets.get(r["tablet_id"], o), o)
         ddl_indexes = sorted(int(i) for r in rows for i in r["ddl_idx"])
+        partials: dict[int, list[MeterPartial]] = {}
+        if meters and not ddl_indexes:
+            partials[0] = [to_partial(r) for r in rows]
         ddls = []
         if ddl_indexes:
-            payloads = {
-                int(r["index"]): r["payload"]
-                for r in window.where(F.col("index").isin(*ddl_indexes))
-                .select("index", "payload")
+            # sub-batch i of the DDL cut holds the rows with i DDL markers
+            # at or below their index (``_process_window``'s cuts). Without
+            # meters only the marker rows are read: a point lookup that
+            # keeps the payload column of every other row on disk.
+            sub_batch = sum(
+                ((F.col("index") >= i).cast("int") for i in ddl_indexes), F.lit(0)
+            )
+            src = window if meters else window.where(F.col("index").isin(*ddl_indexes))
+            sub_rows = (
+                src.groupBy(sub_batch.alias("sub_batch"), "tablet_id", "op")
+                .agg(
+                    F.collect_list(
+                        F.when(op == "ddl", F.struct("index", "payload"))
+                    ).alias("ddl"),
+                    *aggs,
+                )
                 .collect()
-            }
+            )
+            payloads = {int(d["index"]): d["payload"] for r in sub_rows for d in r["ddl"]}
             ddls = [(i, json.loads(payloads[i])) for i in ddl_indexes]
+            if meters:
+                for r in sub_rows:
+                    partials.setdefault(r["sub_batch"], []).append(to_partial(r))
         return {
             "offsets": [
-                (r["tablet_id"], r["o"]["term"], r["o"]["index"], r["o"]["write_id"],
-                 "streaming")
-                for r in rows
+                (t, term, idx, wid, "streaming")
+                for t, (term, idx, wid) in offsets.items()
             ],
             "n_input": sum(r["n"] for r in rows),
             "buckets": sorted({int(b) for r in rows for b in r["buckets"]}),
             "ddls": ddls,
             "tables": {t for r in rows for t in r["tables"]},
+            "partials": partials,
         }
 
     # ------------------------------------------------------------------
@@ -485,7 +538,9 @@ class CdcPipeline:
             sub = window.where((F.col("index") >= sub_lo) & (F.col("index") < sub_hi))
             if i > 0:
                 sub = sub.where(F.col("op") != "ddl")
-            res = self._apply(sub, f"b{sub_lo}-{sub_hi}", stats)
+            res = self._apply(
+                sub, f"b{sub_lo}-{sub_hi}", stats, stats["partials"].get(i, [])
+            )
             res.ddl_applied = pending_ddl
             pending_ddl = []
             results.append(res)
@@ -507,16 +562,24 @@ class CdcPipeline:
         return applied
 
     # ------------------------------------------------------------------
-    def _apply(self, batch: DataFrame, batch_id: str, stats: dict) -> BatchResult:
+    def _apply(
+        self,
+        batch: DataFrame,
+        batch_id: str,
+        stats: dict,
+        partials: list[MeterPartial],
+    ) -> BatchResult:
         """One sub-batch through the full operator chain — a single Spark
         job (decode→fold→MERGE write); offsets/counts/buckets came from the
-        window-level stats pass. Metrics add one extra pass when enabled."""
+        window-level stats pass, and so did ``partials``, this sub-batch's
+        lineage and meter input: appending the lineage rows and folding the
+        meters run on the driver with no Spark job."""
         batch = resume_filter(batch, self.ckpt.load())
         if self.metrics is not None:
-            self.metrics.append(batch_metrics(batch, batch_id))
+            self.metrics.append(lineage_rows(partials, batch_id))
         if self.task_metrics is not None:
-            self.task_metrics.update(
-                batch,
+            self.task_metrics.fold(
+                partials,
                 position={
                     t: f"{term}:{idx}:{w}"
                     for (t, term, idx, w, _src) in stats["offsets"]

@@ -72,8 +72,10 @@ def apply_batch(
     import json
 
     if task_metrics is not None:
-        # MXBean-parity gauges (operators.metrics.TaskMetrics) — position is
-        # carried by the checkpoint commits below, so the meter skips it
+        # MXBean-parity gauges (operators.metrics.TaskMetrics): one
+        # aggregation of the trigger's meter partials, then the driver-side
+        # fold CdcPipeline runs on the partials of its stats pass. Position
+        # is carried by the checkpoint commits below, so the meter skips it
         # here rather than paying a second offsets collect per trigger
         task_metrics.update(batch)
     if gate is not None:

@@ -175,6 +175,44 @@ def test_minhash_index_rejects_readd(spark, tmp_path):
         idx.add(docs.where(F.col("doc_id") < 2))
 
 
+def test_minhash_index_failed_write_waits_out_writers(spark, tmp_path, monkeypatch):
+    """A failed store write fails the add with the manifest unchanged, and
+    only once the sibling write has finished: no writer pool thread outlives
+    the call (a caller may delete the store directory on error)."""
+    import os
+    import threading
+    import time
+
+    from pyspark.sql import DataFrameWriter
+
+    from debezium_connector_yugabytedb_1_spark.operators.dedup import MinHashIndex
+
+    docs = _seeded_docs(spark, n_base=6)
+    idx = MinHashIndex(spark, str(tmp_path / "idx"), k=3)
+    idx.add(docs.where(F.col("doc_id") < 3)).collect()
+    before = idx._manifest()
+    parquet = DataFrameWriter.parquet
+
+    def failing(self, path, *args, **kwargs):
+        if f"{os.sep}buckets{os.sep}" in path:
+            raise OSError("injected store write failure")
+        time.sleep(2)  # the sets write still runs when the buckets write fails
+        return parquet(self, path, *args, **kwargs)
+
+    def pool_threads():
+        return {
+            t for t in threading.enumerate()
+            if t.name.startswith("ThreadPoolExecutor") and t.is_alive()
+        }
+
+    running = pool_threads()
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    with pytest.raises(OSError, match="injected"):
+        idx.add(docs.where(F.col("doc_id") >= 3))
+    assert not pool_threads() - running
+    assert idx._manifest() == before
+
+
 def test_minhash_index_pruned_reads_bounded_and_compact(spark, tmp_path):
     """The 100 TB claim, tested: an increment's reads are bounded by the
     partitions its own buckets/candidates touch, NOT by corpus size —

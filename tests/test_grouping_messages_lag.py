@@ -83,6 +83,39 @@ def test_ms_behind_source(spark):
     assert m["batch_id"] == "b0" and m["n"] == 1
 
 
+def test_lineage_sink_reads_spark_and_pyarrow_appends(spark, tmp_path):
+    """Lineage sinks Spark wrote (``batch_metrics`` appends) and rows the
+    pipeline now writes with pyarrow read back as one table, same schema;
+    the pyarrow write leaves no ``_``-prefixed temp file behind."""
+    import os
+
+    from debezium_connector_yugabytedb_1_spark.operators.metrics import (
+        MetricsSink,
+        lineage_rows,
+        meter_partials,
+    )
+
+    df = spark.createDataFrame(
+        [("t0", "c", 1, 0, 5 << 12, "x", "tbl"), ("t1", "u", 2, 0, 6 << 12, "y", "tbl")],
+        "tablet_id string, op string, index long, write_id long, "
+        "commit_time long, txn_id string, table string",
+    )
+    sink = MetricsSink(str(tmp_path / "lineage"))
+    sink.append(batch_metrics(df, "old", wallclock_ms=9))
+    sink.append(lineage_rows(meter_partials(df), "new", wallclock_ms=9))
+    sink.append([])  # an empty batch writes nothing
+    got = sink.read(spark)
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in batch_metrics(df, "old").schema
+    ]
+    rows = sorted(tuple(r) for r in got.collect())
+    assert [r[:-1] for r in rows if r[-1] == "new"] == [
+        r[:-1] for r in rows if r[-1] == "old"
+    ]
+    assert len(rows) == 4
+    assert not [n for n in os.listdir(sink.path) if n.startswith("_part")]
+
+
 # ------------------------------------------------------------- messages
 def _msg_df(spark):
     rows = [

@@ -14,6 +14,7 @@ from debezium_connector_yugabytedb_1_spark.operators import filters
 from debezium_connector_yugabytedb_1_spark.operators.checkpoint import (
     max_merge,
     resume_filter,
+    resume_predicate,
 )
 from debezium_connector_yugabytedb_1_spark.operators.decode import (
     decode_envelope,
@@ -160,6 +161,11 @@ def test_resume_filter(spark):
     )
     got = sorted((r["tablet_id"], r["index"]) for r in resume_filter(ev, ck).collect())
     assert got == [("t1", 3), ("t2", 1)]
+    # the job-free predicate form over the driver-side rows keeps the same
+    rows = [tuple(r) for r in ck.collect()]
+    got = sorted((r["tablet_id"], r["index"]) for r in ev.where(resume_predicate(rows)).collect())
+    assert got == [("t1", 3), ("t2", 1)]
+    assert ev.where(resume_predicate(None)).count() == 4
 
 
 # ---------------------------------------------------------------- lake unit

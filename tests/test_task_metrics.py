@@ -151,3 +151,109 @@ def test_streaming_front_end_ticks_task_metrics(spark, corpus_path, tmp_path):
         F.col("op") == "c"
     ).count()
     assert snap["LastEvent"] is not None
+
+
+def _pipeline(spark, corpus_path, root, ckpt, metrics=None, task_metrics=None):
+    from debezium_connector_yugabytedb_1_spark.lake import LakeTable
+    from debezium_connector_yugabytedb_1_spark.streaming.pipeline import CdcPipeline
+
+    t = LakeTable(spark, str(root / "lake"), n_buckets=4)
+    t.init([("commit", "string"), ("lang", "string"), ("content", "string")])
+    return CdcPipeline(
+        spark, corpus_path, t, ckpt, events_per_batch=1500,
+        metrics=metrics, task_metrics=task_metrics,
+    )
+
+
+def test_stats_pass_meters_equal_dataframe_reference(spark, corpus_path, tmp_path):
+    """Lineage rows and meters folded from the window-stats partials equal
+    the DataFrame reference (``batch_metrics`` / ``update``) on the rows
+    each sub-batch applies — across the DDL cut at 2000 (the 1500-event
+    window [1500, 3000) straddles it) and under a checkpoint that runs
+    ahead of ``next_lo`` on one tablet, so the resume filter drops rows."""
+    from debezium_connector_yugabytedb_1_spark.operators.checkpoint import (
+        CheckpointStore,
+        resume_filter,
+    )
+    from debezium_connector_yugabytedb_1_spark.operators.metrics import (
+        MetricsSink,
+        batch_metrics,
+    )
+    from debezium_connector_yugabytedb_1_spark.operators.order import ht_to_epoch_ms_py
+
+    ev = spark.read.parquet(corpus_path)
+    ahead = (
+        ev.where((F.col("tablet_id") == ev.first()["tablet_id"]) & (F.col("index") < 2300))
+        .orderBy(F.desc("index")).first()
+    )
+    ck = CheckpointStore(spark, str(tmp_path / "ckpt"))
+    ck.commit([(ahead["tablet_id"], ahead["term"], ahead["index"], ahead["write_id"], "streaming")])
+    assert ck.meta().get("next_lo") is None  # the run starts at 0, behind it
+
+    sink, tm = MetricsSink(str(tmp_path / "lineage")), TaskMetrics()
+    pipe = _pipeline(spark, corpus_path, tmp_path, ck, metrics=sink, task_metrics=tm)
+    applied = []  # (batch_id, the rows the sub-batch applies)
+    apply = pipe._apply
+
+    def spy(batch, batch_id, *args):
+        applied.append((batch_id, resume_filter(batch, ck.load())))
+        return apply(batch, batch_id, *args)
+
+    pipe._apply = spy
+    pipe.run()
+    assert [b for b, _ in applied] == ["b0-1500", "b1500-2000", "b2000-3000", "b3000-4500"]
+
+    lineage = [r.asDict() for r in sink.read(spark).collect()]
+    n_metered = 0
+    for batch_id, rows in applied:
+        got = sorted(
+            (r for r in lineage if r["batch_id"] == batch_id),
+            key=lambda r: (r["tablet_id"], r["op"]),
+        )
+        # one wall clock per batch: recover it from the lag gauge
+        walls = {r["ms_behind_source"] + ht_to_epoch_ms_py(r["max_commit_time"]) for r in got}
+        assert len(walls) == 1
+        want = sorted(
+            (r.asDict() for r in batch_metrics(rows, batch_id, wallclock_ms=walls.pop()).collect()),
+            key=lambda r: (r["tablet_id"], r["op"]),
+        )
+        assert got == want
+        n_metered += sum(r["n"] for r in got)
+    assert n_metered == sum(r["n"] for r in lineage)  # no rows from elsewhere
+    # the checkpoint ahead of next_lo really dropped rows
+    assert 0 < n_metered < ev.where(F.col("op") != "ddl").count()
+
+    ref = TaskMetrics()
+    for _, rows in applied:
+        ref.update(rows)
+    snap, want = tm.snapshot(wallclock_ms=1 << 50), ref.snapshot(wallclock_ms=1 << 50)
+    for k in MXBEAN_ATTRS - {"MilliSecondsSinceLastEvent", "SourceEventPosition"}:
+        assert snap[k] == want[k], k
+    assert snap["TotalNumberOfEventsSeen"] == n_metered
+
+
+def test_meters_cost_no_spark_jobs(spark, corpus_path, tmp_path):
+    """Lineage and meters on add no Spark job to a run (counted from every
+    thread, the lookahead stats thread included)."""
+    from debezium_connector_yugabytedb_1_spark.operators.checkpoint import (
+        CheckpointStore,
+    )
+    from debezium_connector_yugabytedb_1_spark.operators.metrics import MetricsSink
+
+    def jobs():
+        return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+    def count(root, meters):
+        root.mkdir()
+        pipe = _pipeline(
+            spark, corpus_path, root, CheckpointStore(spark, str(root / "ckpt")),
+            metrics=MetricsSink(str(root / "lineage")) if meters else None,
+            task_metrics=TaskMetrics() if meters else None,
+        )
+        j0 = jobs()
+        pipe.run()
+        return jobs() - j0
+
+    off = count(tmp_path / "off", False)
+    on = count(tmp_path / "on", True)
+    assert on == off

@@ -64,3 +64,49 @@ def test_consistent_gate_unsigned_threshold(spark, tmp_path):
     batch2 = spark.createDataFrame([_row(99, op="SAFEPOINT")], SCHEMA)
     assert g.process(batch2, 1).count() == 0
     assert g.state()["safetimes"]["t1"] == -5
+
+
+def test_lineage_and_meters_take_the_unsigned_max_commit_time(spark):
+    """A sign-bit HT (>= 2^63, a negative long on the wire) is the NEWEST
+    commit time: ``batch_metrics``, the driver-side ``lineage_rows`` and
+    ``TaskMetrics`` must all report it, with a positive epoch lag."""
+    from debezium_connector_yugabytedb_1_spark.operators.metrics import (
+        TaskMetrics,
+        batch_metrics,
+        lineage_rows,
+        meter_partials,
+    )
+    from debezium_connector_yugabytedb_1_spark.operators.order import ht_to_epoch_ms_py
+
+    small = 1_600_000_000_000_000 << 12
+    big = ht_key_py(5 << 12)  # unsigned 2^63 + (5 << 12): sign bit set
+    assert big < 0 < small
+    wall = ht_to_epoch_ms_py(big) + 100
+    df = spark.createDataFrame(
+        [
+            ("t1", "c", small, 1, 0, "A", "tbl"),
+            ("t1", "COMMIT", small, 2, 0, "A", None),
+            ("t1", "COMMIT", big, 3, 0, "B", None),
+        ],
+        "tablet_id string, op string, commit_time long, index long, "
+        "write_id long, txn_id string, table string",
+    )
+    ref = {
+        r["op"]: r.asDict()
+        for r in batch_metrics(df, "b0", wallclock_ms=wall).collect()
+    }
+    assert ref["COMMIT"]["max_commit_time"] == big
+    assert ref["COMMIT"]["ms_behind_source"] == 100
+    assert ref["c"]["ms_behind_source"] == wall - ht_to_epoch_ms_py(small) > 0
+    fields = list(ref["c"])
+    got = {
+        r[1]: dict(zip(fields, r))
+        for r in lineage_rows(meter_partials(df), "b0", wallclock_ms=wall)
+    }
+    assert got == ref
+    tm = TaskMetrics()
+    tm.update(df, wallclock_ms=wall)
+    snap = tm.snapshot(wallclock_ms=wall)
+    assert snap["LastTransactionId"] == "B"
+    assert snap["LastEvent"] == "COMMIT/t1/3"
+    assert snap["MilliSecondsBehindSource"] == 100
