@@ -121,8 +121,8 @@ def run_replay(spark, events_path: str, n_events: int, workdir: str) -> dict:
     table = LakeTable(spark, os.path.join(workdir, "lake"), n_buckets=16)
     table.init([("commit", "string"), ("lang", "string"), ("content", "string")])
     ckpt = CheckpointStore(spark, os.path.join(workdir, "ckpt"))
-    # production batch size: one poll window over the corpus (the mid-corpus
-    # DDL still cuts it into two sub-batch merges); per-batch fixed cost is
+    # production batch size: one poll window over the corpus (one MERGE,
+    # the mid-corpus DDL included); per-batch fixed cost is
     # amortized the way a real deployment with large poll windows would
     batch_sz = int(os.environ.get("SPARK_GRAFT_BATCH", max(250_000, n_events)))
     pipe = CdcPipeline(spark, events_path, table, ckpt, events_per_batch=batch_sz)

@@ -84,6 +84,17 @@ def _packed_offset(term, index, write_id):
     return F.when(bad, F.raise_error(err).cast("long")).otherwise(packed)
 
 
+def _write_version(df: DataFrame, out: str) -> None:
+    """Write a new version's bucket partitions into its data directory.
+    Static overwrite: an attempt that crashed before its pointer swap left
+    the same directory behind (the version number is reused), and the
+    session's dynamic mode would keep that attempt's buckets next to this
+    one's — to be listed by ``_written_buckets`` and published."""
+    df.write.partitionBy("bucket").mode("overwrite").option(
+        "partitionOverwriteMode", "static"
+    ).parquet(out)
+
+
 def bucket_expr(n_buckets: int, key_cols=KEY_COLS):
     return F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets))
 
@@ -154,14 +165,14 @@ class LakeTable:
         )
 
     @staticmethod
-    def _cols3(m: dict) -> list[tuple[str, str, str]]:
+    def cols3(m: dict) -> list[tuple[str, str, str]]:
         """(logical, type, physical) triples; legacy 2-element manifests use
         physical = logical."""
         return [(c[0], c[1], c[2] if len(c) > 2 else c[0]) for c in m["columns"]]
 
     @property
     def columns(self) -> list[tuple[str, str]]:
-        return [(n, t) for n, t, _ in self._cols3(self.manifest())]
+        return [(n, t) for n, t, _ in self.cols3(self.manifest())]
 
     def applied(self, batch_id: str) -> bool:
         return batch_id in self.manifest()["applied_batches"]
@@ -172,17 +183,21 @@ class LakeTable:
         buckets: list[int] | None = None,
         with_meta: bool = False,
         with_deleted: bool = False,
+        manifest: dict | None = None,
     ) -> DataFrame:
         """Current snapshot, optionally pruned to a bucket subset (manifest
         lookup — no file-system scan of untouched partitions). Tombstone
         rows are excluded unless ``with_deleted`` (the merge paths read them
-        to keep the offset guard order-free)."""
-        m = self.manifest()
+        to keep the offset guard order-free). ``manifest`` reads that
+        manifest's buckets under its columns instead of the current one's
+        (``merge_events`` reads its target under a not-yet-committed
+        evolved schema)."""
+        m = self.manifest() if manifest is None else manifest
         sel = m["buckets"]
         if buckets is not None:
             want = {str(b) for b in buckets}
             sel = {b: p for b, p in sel.items() if b in want}
-        cols = self._cols3(m)
+        cols = self.cols3(m)
         meta_ddl = (
             "_last_term long, _last_index long, _last_write_id long, "
             "content_sha256 string, _deleted boolean"
@@ -217,71 +232,101 @@ class LakeTable:
         return df if with_meta else df.drop(*_META_COLS)
 
     # ---------------- DDL (D1) ----------------
-    def add_column(self, name: str, ddl_type: str) -> bool:
-        """Metadata-only ADD COLUMN (Iceberg-style). Returns False if the
-        column already exists — the refresh-only-if-changed check
-        (``YugabyteDBSchema.shouldRefreshSchema:213-243``)."""
-        m = self.manifest()
-        cols = self._cols3(m)
-        if any(n == name for n, _, _ in cols):
+    def evolve(self, m: dict, ddl: dict) -> tuple[dict, str | None]:
+        """Apply one DDL record (``{"action": "add_column" | "rename_column"
+        | "drop_column", ...}``) to manifest ``m`` **in memory**. Returns
+        the evolved copy (``m`` itself is untouched; the version is not
+        bumped — the caller's commit does that) and a description of the
+        change, or ``(m, None)`` when nothing changed: the
+        refresh-only-if-changed check (``YugabyteDBSchema
+        .shouldRefreshSchema:213-243``). Every schema change goes through
+        here, whether committed alone (``add_column`` & co.) or together
+        with a window's data (``merge_events(manifest=...)``).
+
+        All three are **metadata only**, zero data movement — Iceberg's
+        field-ID indirection emulated with per-column physical names
+        (``read()`` maps physical to logical at projection):
+
+        - ADD picks a physical name no file has ever used (a prior column
+          may have been renamed away from the name — or DROPPED — leaving
+          old files with a physical column of that name holding THAT
+          column's data), so old files read the new column as NULL;
+        - RENAME rewrites only the logical name (at 100 TB a rename that
+          rewrote data would be a full-table write inside the batch loop);
+        - DROP removes the column from the manifest while existing files
+          keep the physical data until their bucket's next copy-on-write
+          rewrite — PostgreSQL's ``attisdropped`` storage model (the
+          reference's schema refresh reads only non-dropped columns,
+          ``YugabyteDBSchema:531-543``). The physical name is retired
+          permanently, so a later ADD of the same name maps to a FRESH
+          physical column and can never resurrect dropped data. Key
+          columns cannot be dropped."""
+        cols = self.cols3(m)
+        names = {n for n, _, _ in cols}
+        action = ddl.get("action")
+        dropped = list(m.get("dropped_physicals", []))
+        if action == "add_column" and ddl["name"] not in names:
+            name = ddl["name"]
+            used = (
+                {p for _, _, p in cols}
+                | set(_META_COLS)
+                | set(self.key_cols)
+                | set(dropped)
+            )
+            physical, fid = name, m["version"] + 1
+            while physical in used:
+                physical = f"{name}_f{fid}"
+                fid += 1
+            cols = cols + [(name, ddl.get("type", "string"), physical)]
+            change = f"add_column {name}"
+        elif (
+            action == "rename_column"
+            and ddl["old"] in names
+            and ddl["new"] not in names
+        ):
+            old, new = ddl["old"], ddl["new"]
+            cols = [(new if n == old else n, t, p) for n, t, p in cols]
+            change = f"rename_column {old}->{new}"
+        elif (
+            action == "drop_column"
+            and ddl["name"] in names
+            and ddl["name"] not in self.key_cols
+        ):
+            name = ddl["name"]
+            dropped += [p for n, _, p in cols if n == name]
+            cols = [c for c in cols if c[0] != name]
+            change = f"drop_column {name}"
+        else:
+            return m, None
+        out = {**m, "columns": [list(c) for c in cols]}
+        if dropped:
+            out["dropped_physicals"] = dropped
+        return out, change
+
+    def _commit_ddl(self, ddl: dict) -> bool:
+        """``evolve`` the current manifest and commit it as the next
+        version; False (and no commit) when the DDL changes nothing."""
+        m, change = self.evolve(self.manifest(), ddl)
+        if change is None:
             return False
-        # pick a physical name no file has ever used (a prior column may
-        # have been renamed away from `name` — or DROPPED — leaving old
-        # files with a physical `name` column holding THAT column's data)
-        used = (
-            {p for _, _, p in cols}
-            | set(_META_COLS)
-            | set(self.key_cols)
-            | set(m.get("dropped_physicals", []))
-        )
-        physical, fid = name, m["version"] + 1
-        while physical in used:
-            physical = f"{name}_f{fid}"
-            fid += 1
         m["version"] += 1
-        m["columns"].append([name, ddl_type, physical])
         self._commit_manifest(m)
         return True
+
+    def add_column(self, name: str, ddl_type: str) -> bool:
+        """Metadata-only ADD COLUMN (Iceberg-style; rules in ``evolve``).
+        Returns False if the column already exists."""
+        return self._commit_ddl({"action": "add_column", "name": name, "type": ddl_type})
 
     def rename_column(self, old: str, new: str) -> bool:
-        """RENAME COLUMN — **metadata only**, zero data movement: files keep
-        the physical column name; the manifest maps it to the new logical
-        name and ``read()`` applies the rename at projection. This is
-        Iceberg's field-ID indirection emulated with per-column physical
-        names (at 100 TB a rename that rewrote data would be a full-table
-        write inside the batch loop)."""
-        m = self.manifest()
-        cols = self._cols3(m)
-        if not any(n == old for n, _, _ in cols) or any(n == new for n, _, _ in cols):
-            return False
-        m["version"] += 1
-        m["columns"] = [
-            [new if n == old else n, t, p] for n, t, p in cols
-        ]
-        self._commit_manifest(m)
-        return True
+        """Metadata-only RENAME COLUMN (rules in ``evolve``). Returns False
+        if ``old`` is missing or ``new`` already exists."""
+        return self._commit_ddl({"action": "rename_column", "old": old, "new": new})
 
     def drop_column(self, name: str) -> bool:
-        """Metadata-only DROP COLUMN: the column leaves the manifest (reads
-        and future merges no longer see it) while existing files keep the
-        physical data until their bucket's next copy-on-write rewrite —
-        PostgreSQL's ``attisdropped`` storage model (the reference's schema
-        refresh reads only non-dropped columns, ``YugabyteDBSchema
-        :531-543``). The physical name is retired permanently so a later
-        ADD COLUMN of the same name maps to a FRESH physical column and can
-        never resurrect dropped data. Key columns cannot be dropped."""
-        if name in self.key_cols:
-            return False
-        m = self.manifest()
-        cols = self._cols3(m)
-        hit = [(n, t, p) for n, t, p in cols if n == name]
-        if not hit:
-            return False
-        m["version"] += 1
-        m["columns"] = [[n, t, p] for n, t, p in cols if n != name]
-        m.setdefault("dropped_physicals", []).append(hit[0][2])
-        self._commit_manifest(m)
-        return True
+        """Metadata-only DROP COLUMN (rules in ``evolve``). Returns False
+        if the column is missing or is a key column."""
+        return self._commit_ddl({"action": "drop_column", "name": name})
 
     def _written_buckets(self, out_dir: str, rel: str) -> dict:
         found = {}
@@ -345,7 +390,7 @@ class LakeTable:
             .where(~dead)
             .withColumn("bucket", bucket_expr(self.n_buckets, self.key_cols))
         )
-        phys = {n: p for n, _, p in self._cols3(m) if n != p}
+        phys = {n: p for n, _, p in self.cols3(m) if n != p}
         if phys:
             kept = kept.select(
                 *[F.col(c).alias(phys.get(c, c)) for c in kept.columns]
@@ -353,9 +398,7 @@ class LakeTable:
         version = m["version"] + 1
         rel = f"data/v{version:08d}"
         out = os.path.join(self.path, rel)
-        kept.repartition(self.n_buckets, "bucket").write.partitionBy("bucket").mode(
-            "overwrite"
-        ).parquet(out)
+        _write_version(kept.repartition(self.n_buckets, "bucket"), out)
         try:
             dropped = int(dict(obs.get)["dropped"] or 0)
         except Exception:
@@ -367,7 +410,11 @@ class LakeTable:
 
     # ---------------- MERGE (K1) ----------------
     def merge_events(
-        self, dml: DataFrame, batch_id: str, touched_buckets: list[int] | None = None
+        self,
+        dml: DataFrame,
+        batch_id: str,
+        touched_buckets: list[int] | None = None,
+        manifest: dict | None = None,
     ) -> MergeStats:
         """Fused fold + MERGE — the pipeline hot path.
 
@@ -399,8 +446,15 @@ class LakeTable:
         Reference parity: same semantics as ``merge()`` (guard
         ``YugabyteDBStreamingChangeEventSource.java:976-986``, redelivery
         absorption ``YugabyteDBSnapshotResumeTest.java:120-133``), verified
-        equal by ``test_merge_events_equals_fold_then_merge``."""
-        m = self.manifest()
+        equal by ``test_merge_events_equals_fold_then_merge``.
+
+        ``manifest``: merge under this manifest instead of the current one
+        — the current one ``evolve``-d through a window's DDLs. ``dml``
+        then carries that schema's logical columns, the target is read
+        under it, and its schema lands in the SAME version as the data:
+        one pointer swap commits the window's DDLs and rows together, so a
+        crash leaves either none or all of them live."""
+        m = self.manifest() if manifest is None else manifest
         if batch_id in m["applied_batches"]:
             return MergeStats(version=m["version"], skipped=True)
         cols = [c[0] for c in m["columns"]]
@@ -469,7 +523,7 @@ class LakeTable:
             touched = [r["bucket"] for r in ev.select("bucket").distinct().collect()]
         else:
             touched = [int(b) for b in touched_buckets]
-        t = self.read(buckets=touched, with_meta=True, with_deleted=True)
+        t = self.read(buckets=touched, with_meta=True, with_deleted=True, manifest=m)
         # tombstone target rows re-enter the fold as DELETE events at their
         # stored offset — a late lower-offset upsert then loses the max()
         t_dead = F.coalesce(F.col("_deleted"), F.lit(False))
@@ -583,7 +637,7 @@ class LakeTable:
         # data files store PHYSICAL column names (rename indirection); one
         # atomic select — sequential renames could collide when a logical
         # name equals another column's physical name (rename + re-add case)
-        phys = {n: p for n, _, p in self._cols3(m) if n != p}
+        phys = {n: p for n, _, p in self.cols3(m) if n != p}
         if phys:
             merged = merged.select(
                 *[F.col(c).alias(phys.get(c, c)) for c in merged.columns]
@@ -592,7 +646,7 @@ class LakeTable:
 
         prof = os.environ.get("SPARK_GRAFT_PROFILE") == "1"
         t0 = time.monotonic()
-        merged.write.partitionBy("bucket").mode("overwrite").parquet(out)
+        _write_version(merged, out)
         if prof:
             print(f"[profile] merge_write_job: {time.monotonic() - t0:.3f}s", flush=True)
 

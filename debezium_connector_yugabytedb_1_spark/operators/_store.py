@@ -42,6 +42,23 @@ def commit_manifest(path: str, batches: list[int]) -> None:
     os.replace(tmp, p)
 
 
+def write_batch(df: DataFrame, root: str, key: str, n: int) -> None:
+    """Write ``df`` as slot ``<root>/batch=<n>``, one ``<key>=<v>``
+    partition dir per key value. The overwrite is pinned STATIC: the whole
+    slot is cleared first, so a retry into a slot whose earlier attempt was
+    never committed (a failed or rejected add) keeps none of that attempt's
+    partitions. The session's dynamic mode would replace only the
+    partitions the retry writes, and the manifest commit would then
+    publish the rest."""
+    (
+        df.repartition(key)
+        .write.partitionBy(key)
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "static")
+        .parquet(os.path.join(root, f"batch={n}"))
+    )
+
+
 def pruned_partition_read(
     spark, root: str, key: str, wanted: set[int], batches: list[int]
 ) -> tuple[DataFrame | None, int, int]:

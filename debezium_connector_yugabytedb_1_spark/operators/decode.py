@@ -158,6 +158,39 @@ def _decode_shredded(df: DataFrame, schema: T.StructType) -> DataFrame:
     )
 
 
+def realign(decoded: DataFrame, cols: list, final: list) -> DataFrame:
+    """Re-key one schema epoch's decoded ``after``/``changed`` to a later
+    schema. ``cols`` (the epoch's) and ``final`` are the lake's
+    ``(logical, type, physical)`` triples; columns match by PHYSICAL name,
+    the lake's field-ID analogue, so a rename maps the old logical name to
+    the new one, a final column the epoch lacks (added later) is unset,
+    and an epoch column ``final`` lacks (dropped) is not projected — nor
+    is a dropped-then-re-added one, whose re-add has a fresh physical
+    name. The epoch's events thus merge under ``final`` exactly as if
+    the schema had changed between them."""
+    if cols == final:
+        return decoded
+    logical = {p: n for n, _, p in cols}
+    pairs = [(n, t, logical.get(p)) for n, t, p in final]
+    after = F.struct(
+        *[
+            (
+                F.col(f"after.{src}") if src is not None
+                else F.lit(None).cast(_parse_ddl_type(t))
+            ).alias(n)
+            for n, t, src in pairs
+        ]
+    )
+    changed = F.array(
+        *[F.when(F.array_contains("changed", src), F.lit(n)) for n, _, src in pairs if src]
+    ).cast("array<string>")
+    return decoded.withColumn(
+        "after", F.when(F.col("after").isNotNull(), after)
+    ).withColumn(
+        "changed", F.when(F.col("changed").isNotNull(), F.array_compact(changed))
+    )
+
+
 @F.pandas_udf(PAYLOAD_SCHEMA)
 def _decode_payload_pandas(payload: pd.Series) -> pd.DataFrame:
     """Arrow-vectorized JSON decode (stand-in for a protobuf decoder; one

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import norm_tokens, word_shingles
+from ._store import write_batch
 
 
 
@@ -645,8 +646,6 @@ class ExactDedupIndex:
         fold the new hashes in. Returns (doc_id, text_md5, is_duplicate,
         dup_of) — ``dup_of`` = the retained first occurrence's id (NULL
         for winners). Winner within a batch = smallest id per hash."""
-        import os
-
         from ._store import commit_manifest, pruned_partition_read
 
         # NULL text gets a sentinel key (md5 outputs are 32 hex chars, so
@@ -711,12 +710,7 @@ class ExactDedupIndex:
         from concurrent.futures import ThreadPoolExecutor
 
         def _write_new():
-            (
-                new.repartition("hkey")
-                .write.partitionBy("hkey")
-                .mode("overwrite")
-                .parquet(os.path.join(self._hashes, f"batch={n}"))
-            )
+            write_batch(new, self._hashes, "hkey", n)
 
         with ThreadPoolExecutor(2) as ex:
             fut_out = ex.submit(out_plan.localCheckpoint)
@@ -749,15 +743,11 @@ class ExactDedupIndex:
                 )
             return len(batches)
         n = max(batches) + 1
-        (
-            # hashes are add-once (only unseen ones are written), so the
-            # fold is a plain rewrite; project away read-side partition cols
-            stored.select("text_md5", "first_id")
-            .withColumn("hkey", self._hkey())
-            .repartition("hkey")
-            .write.partitionBy("hkey")
-            .mode("overwrite")
-            .parquet(os.path.join(self._hashes, f"batch={n}"))
+        # hashes are add-once (only unseen ones are written), so the fold
+        # is a plain rewrite; project away read-side partition cols
+        write_batch(
+            stored.select("text_md5", "first_id").withColumn("hkey", self._hkey()),
+            self._hashes, "hkey", n,
         )
         commit_manifest(self.path, [n])
         for b in batches:
@@ -926,21 +916,12 @@ class MinHashIndex:
         n = max(committed, default=-1) + 1
 
         def _write_buckets():
-            (
-                banded.repartition("pkey")
-                .write.partitionBy("pkey")
-                .mode("overwrite")
-                .parquet(os.path.join(self._buckets, f"batch={n}"))
-            )
+            write_batch(banded, self._buckets, "pkey", n)
 
         def _write_sets():
-            (
-                per_doc.select("doc_id", "sh")
-                .withColumn("skey", self._skey())
-                .repartition("skey")
-                .write.partitionBy("skey")
-                .mode("overwrite")
-                .parquet(os.path.join(self._sets, f"batch={n}"))
+            write_batch(
+                per_doc.select("doc_id", "sh").withColumn("skey", self._skey()),
+                self._sets, "skey", n,
             )
 
         # leaving the ``with`` block waits both writers out on every exit
@@ -1125,13 +1106,7 @@ class MinHashIndex:
             df = self.spark.read.option("basePath", root).parquet(*dirs)
             key = "pkey" if root == self._buckets else "skey"
             cols = ["doc_id", "band", "bucket"] if key == "pkey" else ["doc_id", "sh"]
-            (
-                df.select(*cols, key)
-                .repartition(key)
-                .write.partitionBy(key)
-                .mode("overwrite")
-                .parquet(os.path.join(root, f"batch={n}"))
-            )
+            write_batch(df.select(*cols, key), root, key, n)
         self._commit_manifest([n])
         for root in (self._buckets, self._sets):
             for b in batches:

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import cosine_similarity
+from ._store import write_batch
 from .dedup import _spread
 
 
@@ -423,18 +424,14 @@ class IvfIndex:
         latest-batch-wins among the copies actually probed). Run
         ``compact()`` after replacing vectors to make the upsert total —
         it folds the store to one row per id, keeping the latest batch."""
-        import os
-
         if not self.trained:
             raise ValueError("train() the quantizer before add()")
         n = max(self._manifest(), default=-1) + 1
-        (
-            self._assigned(batch)
-            .withColumn("lkey", F.pmod(F.col("list_id"), F.lit(self.n_parts)).cast("int"))
-            .repartition("lkey")
-            .write.partitionBy("lkey")
-            .mode("overwrite")
-            .parquet(os.path.join(self._vectors, f"batch={n}"))
+        write_batch(
+            self._assigned(batch).withColumn(
+                "lkey", F.pmod(F.col("list_id"), F.lit(self.n_parts)).cast("int")
+            ),
+            self._vectors, "lkey", n,
         )
         self._commit_manifest(self._manifest() + [n])
         return n
@@ -524,7 +521,7 @@ class IvfIndex:
             return -1
         stored, _, _ = self._pruned_read(set(range(self.n_parts)))
         n = max(old) + 1
-        (
+        write_batch(
             # project away the read-side partition columns (batch, lkey) —
             # carrying them bakes a stale `batch` data column into the new
             # files and every later read logs a shadowed-column conflict.
@@ -545,11 +542,8 @@ class IvfIndex:
             )
             .withColumn(
                 "lkey", F.pmod(F.col("list_id"), F.lit(self.n_parts)).cast("int")
-            )
-            .repartition("lkey")
-            .write.partitionBy("lkey")
-            .mode("overwrite")
-            .parquet(os.path.join(self._vectors, f"batch={n}"))
+            ),
+            self._vectors, "lkey", n,
         )
         self._commit_manifest([n])
         for o in old:

@@ -66,8 +66,10 @@ def get_spark(
             "spark.driver.extraJavaOptions",
             f"-XX:ParallelGCThreads={max(2, cores)} -XX:ConcGCThreads={max(1, cores // 2)}",
         )
-        # Dynamic partition overwrite: the lake MERGE rewrites only touched
-        # bucket partitions (partition-pruned copy-on-write, Iceberg-style).
+        # Dynamic partition overwrite: an overwrite replaces only the
+        # partitions it writes. The lake versions and the index-store slots
+        # pin static on their own writes: each goes to a directory that only
+        # an uncommitted earlier attempt can have populated.
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.executorEnv.PYTHONPATH", worker_pp)
         # The lake's bucket files and WAL segments are small (MBs); the

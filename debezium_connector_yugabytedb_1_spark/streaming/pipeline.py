@@ -14,32 +14,38 @@ Spark-first execution per poll window:
       thread: runs while the previous window MERGEs]
       → ack offsets, row count, touched buckets, DDL markers, table set
       → lineage + meter partials of the rows the resume filter will keep
-    then per sub-batch (one pass, all JVM):
+    then the whole window (one pass, all JVM):
       parquet scan (index-range + checkpoint pushdown)
         → filters (pushed to scan)
-        → from_json decode (codegen)
+        → from_json decode (codegen), per schema epoch
         → PK-update split (union)
         → hash-agg fold per (repo, path)  [map-side partial agg]
-        → bucket-pruned copy-on-write MERGE
+        → bucket-pruned copy-on-write MERGE, ONE per window
       → lineage append (pyarrow) + meter fold, driver-side, no Spark job
     → checkpoint commit (pyarrow, no Spark job)
 
-The DDL cut: a batch containing DDL markers is split at each DDL offset so
-schema evolution applies between sub-batches, exactly the reference's
-per-tablet lazy refresh collapsed to batch boundaries
+Schema epochs: a window's DDL markers split it into epochs; epoch k's rows
+decode against the window-start schema evolved in memory through DDLs
+1..k and are realigned to the window-final schema by physical column name
+(``merge_window``), so the reference's per-tablet lazy refresh
 (``YugabyteDBStreamingChangeEventSource.java:688-720``;
-``YugabyteDBSchemaEvolutionTest.java:54-92``).
+``YugabyteDBSchemaEvolutionTest.java:54-92``) costs no extra rewrite: k
+DDLs still mean one copy-on-write MERGE, and the evolved schema is
+committed in the same manifest version as the window's data.
 
 Exactly-once: MERGE is idempotent (batch-id skip + per-row monotonic offset
 guard) and the checkpoint commits only after the MERGE version pointer
-swap — a crash between the two replays a batch that the guards absorb. Same
-stance as the reference's explicit-checkpoint protocol
+swap — a crash between the two replays a window that the guards absorb. A
+crash before the swap leaves the pre-window schema and rows live, so no
+replay decodes pre-DDL events under a post-DDL schema. Same stance as the
+reference's explicit-checkpoint protocol
 (``YugabyteDBStreamingChangeEventSource.java:941-995``).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,10 +59,9 @@ from ..operators.checkpoint import (
     resume_filter,
     resume_predicate,
 )
-from ..operators.decode import decode_envelope
+from ..operators.decode import decode_envelope, realign
 from ..operators.emit import DML_OPS, split_pk_updates
 from ..operators.metrics import (
-    MeterPartial,
     MetricsSink,
     TaskMetrics,
     lineage_rows,
@@ -64,6 +69,53 @@ from ..operators.metrics import (
     to_partial,
     warn_wal_backlog,
 )
+
+
+def merge_window(
+    table: LakeTable,
+    rows: DataFrame,
+    ddls: list[tuple[int, dict]],
+    batch_id: str,
+    touched_buckets: list[int] | None = None,
+    use_pandas: bool = False,
+) -> tuple[MergeStats, list[str]]:
+    """Apply one window's dispatchable ``rows`` (their DML) and its DDLs
+    (``(index, payload)`` in index order) as ONE ``merge_events`` call and
+    one manifest version.
+
+    Schema epoch k holds the rows at or above the k-th schema-changing
+    DDL's index and below the next one's; it decodes against the
+    window-start manifest ``evolve``-d through DDLs 1..k, then is
+    ``realign``-ed to the window-final schema by physical name. The
+    union of the epochs merges under the final manifest, whose columns
+    commit with the data. Returns the merge stats and the DDLs that
+    changed the schema (none when the window was already applied)."""
+    m = table.manifest()
+    epochs = [(None, table.cols3(m))]
+    applied = []
+    for index, d in ddls:
+        m, change = table.evolve(m, d)
+        if change is not None:
+            applied.append(change)
+            epochs.append((index, table.cols3(m)))
+    final = epochs[-1][1]
+    dml = rows.where(F.col("op").isin(*DML_OPS, "pku"))
+    parts = []
+    for (start, cols), (end, _) in zip(epochs, epochs[1:] + [(None, None)]):
+        part = dml if start is None else dml.where(F.col("index") >= start)
+        if end is not None:
+            part = part.where(F.col("index") < end)
+        decoded = decode_envelope(
+            part, use_pandas=use_pandas, columns=[(n, t) for n, t, _ in cols]
+        )
+        parts.append(realign(decoded, cols, final))
+    mstats = table.merge_events(
+        split_pk_updates(reduce(DataFrame.unionByName, parts)),
+        batch_id,
+        touched_buckets=touched_buckets,
+        manifest=m,
+    )
+    return mstats, [] if mstats.skipped else applied
 
 
 @dataclass
@@ -341,7 +393,10 @@ class CdcPipeline:
                 else:
                     nxt_fut, nxt_window = None, None
                 t0 = time.monotonic()
-                results.extend(self._process_window(window, lo, hi, stats))
+                # DDL markers reach the merge through ``stats["ddls"]``
+                results.append(
+                    self._apply(window.where(F.col("op") != "ddl"), f"b{lo}-{hi}", stats)
+                )
                 _t("process_window", t0)
                 # offsets were part of the single stats pass; commit + advance
                 t0 = time.monotonic()
@@ -404,13 +459,12 @@ class CdcPipeline:
         set, and — with lineage or meters on — the ``MeterPartial`` rows of
         exactly the rows ``_apply`` meters: no DDL markers, and only rows
         strictly newer than ``ckpt_rows``, the checkpoint its
-        ``resume_filter`` will load. A DDL window adds one
-        ``(sub_batch, tablet_id, op)`` aggregation that returns the DDL
-        payloads and the partials per sub-batch of the DDL cut. Collapsing
-        these scans keeps the per-batch serial fraction small enough for
-        the N→4N scaling criterion (Amdahl: every extra driver-synchronous
-        job is pure serial time), and running them in the lookahead thread
-        hides them behind the previous window's MERGE."""
+        ``resume_filter`` will load. A DDL window adds a point lookup of
+        its marker rows' payloads. Collapsing these scans keeps the
+        per-batch serial fraction small enough for the N→4N scaling
+        criterion (Amdahl: every extra driver-synchronous job is pure
+        serial time), and running them in the lookahead thread hides them
+        behind the previous window's MERGE."""
         import json
 
         from ..lake import bucket_expr
@@ -423,24 +477,12 @@ class CdcPipeline:
         # pass never opens the payload blob at all: with column pruning the
         # scan reads only the narrow key/offset columns — the dominant-size
         # payload column stays on disk (DDL payloads, if any, come from the
-        # DDL window's second aggregation below; DDLs are rare by
-        # construction)
-        if "old_path" in window.columns:
-            # a cross-repo PK update carries old_repo in the key block; when
-            # absent (same-repo rename, or legacy corpus) the repo is shared
-            old_repo = (
-                F.coalesce(F.col("old_repo"), F.col("repo"))
-                if "old_repo" in window.columns
-                else F.col("repo")
-            )
-            old_key_hash = F.xxhash64(old_repo, F.col("old_path"))
-        else:  # legacy corpus without the key block: regexp the payload
-            old_key_hash = F.xxhash64(
-                F.regexp_extract("payload", r'"before_key":\{"repo":"([^"]*)"', 1),
-                F.regexp_extract(
-                    "payload", r'"before_key":\{"repo":"[^"]*","path":"([^"]*)"', 1
-                ),
-            )
+        # DDL window's point lookup below; DDLs are rare by construction).
+        # A cross-repo PK update carries old_repo in the key block; when
+        # absent (same-repo rename) the repo is shared.
+        old_key_hash = F.xxhash64(
+            F.coalesce(F.col("old_repo"), F.col("repo")), F.col("old_path")
+        )
         bucket_old = F.when(
             F.col("op") == "pku", F.pmod(old_key_hash, F.lit(nb))
         )
@@ -477,34 +519,17 @@ class CdcPipeline:
             o = tuple(r["o"])
             offsets[r["tablet_id"]] = max(offsets.get(r["tablet_id"], o), o)
         ddl_indexes = sorted(int(i) for r in rows for i in r["ddl_idx"])
-        partials: dict[int, list[MeterPartial]] = {}
-        if meters and not ddl_indexes:
-            partials[0] = [to_partial(r) for r in rows]
         ddls = []
         if ddl_indexes:
-            # sub-batch i of the DDL cut holds the rows with i DDL markers
-            # at or below their index (``_process_window``'s cuts). Without
-            # meters only the marker rows are read: a point lookup that
-            # keeps the payload column of every other row on disk.
-            sub_batch = sum(
-                ((F.col("index") >= i).cast("int") for i in ddl_indexes), F.lit(0)
-            )
-            src = window if meters else window.where(F.col("index").isin(*ddl_indexes))
-            sub_rows = (
-                src.groupBy(sub_batch.alias("sub_batch"), "tablet_id", "op")
-                .agg(
-                    F.collect_list(
-                        F.when(op == "ddl", F.struct("index", "payload"))
-                    ).alias("ddl"),
-                    *aggs,
-                )
+            # only the marker rows are read: a point lookup that keeps the
+            # payload column of every other row on disk
+            payloads = {
+                int(r["index"]): r["payload"]
+                for r in window.where(F.col("index").isin(*ddl_indexes) & (op == "ddl"))
+                .select("index", "payload")
                 .collect()
-            )
-            payloads = {int(d["index"]): d["payload"] for r in sub_rows for d in r["ddl"]}
+            }
             ddls = [(i, json.loads(payloads[i])) for i in ddl_indexes]
-            if meters:
-                for r in sub_rows:
-                    partials.setdefault(r["sub_batch"], []).append(to_partial(r))
         return {
             "offsets": [
                 (t, term, idx, wid, "streaming")
@@ -514,67 +539,19 @@ class CdcPipeline:
             "buckets": sorted({int(b) for r in rows for b in r["buckets"]}),
             "ddls": ddls,
             "tables": {t for r in rows for t in r["tables"]},
-            "partials": partials,
+            "partials": [to_partial(r) for r in rows] if meters else [],
         }
 
     # ------------------------------------------------------------------
-    def _process_window(
-        self, window: DataFrame, lo: int, hi: int, stats: dict
-    ) -> list[BatchResult]:
-        """Split the window at DDL offsets; apply sub-batches in order with
-        schema evolution between them (the DDL cut)."""
-        cuts = [lo] + [i for i, _ in stats["ddls"]] + [hi]
-        results = []
-        pending_ddl: list[str] = []
-        for i in range(len(cuts) - 1):
-            sub_lo, sub_hi = cuts[i], cuts[i + 1]
-            if i > 0:
-                # apply the DDL that opens this sub-batch (D1)
-                pending_ddl += self._apply_ddl(stats["ddls"][i - 1][1])
-            if sub_lo >= sub_hi or (i > 0 and sub_hi - sub_lo <= 1):
-                # empty slice (DDL at a window edge / adjacent DDLs that
-                # leave only the marker row itself) — nothing to replay
-                continue
-            sub = window.where((F.col("index") >= sub_lo) & (F.col("index") < sub_hi))
-            if i > 0:
-                sub = sub.where(F.col("op") != "ddl")
-            res = self._apply(
-                sub, f"b{sub_lo}-{sub_hi}", stats, stats["partials"].get(i, [])
-            )
-            res.ddl_applied = pending_ddl
-            pending_ddl = []
-            results.append(res)
-        return results
-
-    def _apply_ddl(self, d: dict) -> list[str]:
-        """D1 — schema evolution between batches; refresh-only-if-changed
-        (``YugabyteDBSchema.shouldRefreshSchema:213-243``)."""
-        applied = []
-        if d.get("action") == "add_column":
-            if self.table.add_column(d["name"], d.get("type", "string")):
-                applied.append(f"add_column {d['name']}")
-        elif d.get("action") == "rename_column":
-            if self.table.rename_column(d["old"], d["new"]):
-                applied.append(f"rename_column {d['old']}->{d['new']}")
-        elif d.get("action") == "drop_column":
-            if self.table.drop_column(d["name"]):
-                applied.append(f"drop_column {d['name']}")
-        return applied
-
-    # ------------------------------------------------------------------
-    def _apply(
-        self,
-        batch: DataFrame,
-        batch_id: str,
-        stats: dict,
-        partials: list[MeterPartial],
-    ) -> BatchResult:
-        """One sub-batch through the full operator chain — a single Spark
-        job (decode→fold→MERGE write); offsets/counts/buckets came from the
-        window-level stats pass, and so did ``partials``, this sub-batch's
-        lineage and meter input: appending the lineage rows and folding the
-        meters run on the driver with no Spark job."""
+    def _apply(self, batch: DataFrame, batch_id: str, stats: dict) -> BatchResult:
+        """One window's data rows (no DDL markers) through the full operator
+        chain — a single Spark job (epoch decode→fold→MERGE write) whose
+        manifest commit also carries the window's DDLs (``merge_window``).
+        Offsets, counts, buckets, DDLs and the lineage/meter partials came
+        from the window-stats pass: appending the lineage rows and folding
+        the meters run on the driver with no Spark job."""
         batch = resume_filter(batch, self.ckpt.load())
+        partials = stats["partials"]
         if self.metrics is not None:
             self.metrics.append(lineage_rows(partials, batch_id))
         if self.task_metrics is not None:
@@ -601,14 +578,15 @@ class CdcPipeline:
             filters.table_filter(batch, self.table_include, self.table_exclude)
         )
         disp = filters.skipped_operations_filter(disp, self.skipped_ops)
-        decoded = decode_envelope(
-            disp.where(F.col("op").isin(*DML_OPS, "pku")),
-            use_pandas=self.use_pandas_decode,
-            columns=self.table.columns,
-        )
-        dml = split_pk_updates(decoded)
         # fused fold+MERGE: one aggregation job does the whole apply
-        mstats = self.table.merge_events(dml, batch_id, touched_buckets=stats["buckets"])
+        mstats, ddl_applied = merge_window(
+            self.table,
+            disp,
+            stats["ddls"],
+            batch_id,
+            touched_buckets=stats["buckets"],
+            use_pandas=self.use_pandas_decode,
+        )
         n_dispatched = mstats.upserted + mstats.deleted
         warn_wal_backlog(stats["n_input"] - n_dispatched, n_dispatched)
-        return BatchResult(batch_id, stats["n_input"], n_dispatched, mstats)
+        return BatchResult(batch_id, stats["n_input"], n_dispatched, mstats, ddl_applied)

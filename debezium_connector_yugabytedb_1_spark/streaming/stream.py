@@ -42,9 +42,8 @@ from pyspark.sql import functions as F
 from ..lake import LakeTable
 from ..operators import filters
 from ..operators.checkpoint import CheckpointStore, batch_offsets
-from ..operators.decode import decode_envelope
-from ..operators.emit import DML_OPS, split_pk_updates
 from ..sources import read_event_stream
+from .pipeline import merge_window
 
 
 def apply_batch(
@@ -88,33 +87,17 @@ def apply_batch(
         offs = batch_offsets(batch)
         batch = gate.process(batch, batch_id)
         ckpt.commit(offs)
-    # DDL cut within the trigger: apply each DDL exactly at its offset, with
-    # the events before/after it folded under the schema of their time —
-    # same semantics as CdcPipeline._process_window
+    # each DDL applies exactly at its offset: the events before/after it
+    # decode under the schema of their time, and the whole trigger is one
+    # fused fold+MERGE committing the DDLs with the data — the same
+    # ``merge_window`` CdcPipeline applies a window with
     ddls = sorted(
         (int(r["index"]), json.loads(r["payload"]))
         for r in batch.where(F.col("op") == "ddl").select("index", "payload").collect()
     )
-    disp = filters.dispatchable(filters.table_filter(batch))
-    dml_all = disp.where(F.col("op").isin(*DML_OPS, "pku"))
-    cuts = [None] + [i for i, _ in ddls] + [None]
-    for i in range(len(cuts) - 1):
-        if i > 0:
-            d = ddls[i - 1][1]
-            if d.get("action") == "add_column":
-                table.add_column(d["name"], d.get("type", "string"))
-            elif d.get("action") == "rename_column":
-                table.rename_column(d["old"], d["new"])
-            elif d.get("action") == "drop_column":
-                table.drop_column(d["name"])
-        sub = dml_all
-        if cuts[i] is not None:
-            sub = sub.where(F.col("index") >= cuts[i])
-        if cuts[i + 1] is not None:
-            sub = sub.where(F.col("index") < cuts[i + 1])
-        decoded = decode_envelope(sub, columns=table.columns)
-        # fused fold+MERGE — same hot path as CdcPipeline
-        table.merge_events(split_pk_updates(decoded), f"stream-{batch_id}-{i}")
+    merge_window(
+        table, filters.dispatchable(filters.table_filter(batch)), ddls, f"stream-{batch_id}"
+    )
     if gate is None:
         ckpt.commit(batch_offsets(batch))
     if expire_keep is not None:

@@ -175,6 +175,28 @@ def test_minhash_index_rejects_readd(spark, tmp_path):
         idx.add(docs.where(F.col("doc_id") < 2))
 
 
+def test_minhash_index_retry_publishes_nothing_of_a_rejected_add(spark, tmp_path):
+    """A rejected add has already written its uncommitted ``batch=<n>``
+    slot; the successful retry reuses the slot, and its commit must publish
+    only the retry's own rows — no posting or set partition of the
+    rejected batch that the retry happens not to overwrite."""
+    import os
+
+    from debezium_connector_yugabytedb_1_spark.operators.dedup import MinHashIndex
+
+    docs = _seeded_docs(spark, n_base=20)
+    idx = MinHashIndex(spark, str(tmp_path / "idx"), k=3)
+    idx.add(docs.where(F.col("doc_id") < 2)).collect()
+    # doc 0 is indexed already; the other 38 docs spread over many partitions
+    with pytest.raises(ValueError, match="already indexed"):
+        idx.add(docs.where(F.col("doc_id") != 1))
+    idx.add(docs.where(F.col("doc_id") == 2)).collect()
+    n = max(idx._manifest())
+    for store in ("buckets", "sets"):
+        slot = spark.read.parquet(os.path.join(idx.path, store, f"batch={n}"))
+        assert {r["doc_id"] for r in slot.select("doc_id").distinct().collect()} == {2}
+
+
 def test_minhash_index_failed_write_waits_out_writers(spark, tmp_path, monkeypatch):
     """A failed store write fails the add with the manifest unchanged, and
     only once the sibling write has finished: no writer pool thread outlives

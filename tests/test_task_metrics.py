@@ -144,7 +144,7 @@ def test_streaming_front_end_ticks_task_metrics(spark, corpus_path, tmp_path):
     )
     snap = tm.snapshot()
     ev = spark.read.parquet(corpus_path)
-    # streaming triggers see the raw wire rows (DDL cut happens inside the
+    # streaming triggers see the raw wire rows (DDLs apply inside the
     # trigger AFTER the meter), so the streaming meter counts every row
     assert snap["TotalNumberOfEventsSeen"] == ev.count()
     assert snap["TotalNumberOfCreateEventsSeen"] == ev.where(
@@ -168,8 +168,8 @@ def _pipeline(spark, corpus_path, root, ckpt, metrics=None, task_metrics=None):
 def test_stats_pass_meters_equal_dataframe_reference(spark, corpus_path, tmp_path):
     """Lineage rows and meters folded from the window-stats partials equal
     the DataFrame reference (``batch_metrics`` / ``update``) on the rows
-    each sub-batch applies — across the DDL cut at 2000 (the 1500-event
-    window [1500, 3000) straddles it) and under a checkpoint that runs
+    each window applies — one batch id per window, the window [1500, 3000)
+    that holds the DDL at 2000 included — and under a checkpoint that runs
     ahead of ``next_lo`` on one tablet, so the resume filter drops rows."""
     from debezium_connector_yugabytedb_1_spark.operators.checkpoint import (
         CheckpointStore,
@@ -192,16 +192,16 @@ def test_stats_pass_meters_equal_dataframe_reference(spark, corpus_path, tmp_pat
 
     sink, tm = MetricsSink(str(tmp_path / "lineage")), TaskMetrics()
     pipe = _pipeline(spark, corpus_path, tmp_path, ck, metrics=sink, task_metrics=tm)
-    applied = []  # (batch_id, the rows the sub-batch applies)
+    applied = []  # (batch_id, the rows the window applies)
     apply = pipe._apply
 
-    def spy(batch, batch_id, *args):
+    def spy(batch, batch_id, stats):
         applied.append((batch_id, resume_filter(batch, ck.load())))
-        return apply(batch, batch_id, *args)
+        return apply(batch, batch_id, stats)
 
     pipe._apply = spy
     pipe.run()
-    assert [b for b, _ in applied] == ["b0-1500", "b1500-2000", "b2000-3000", "b3000-4500"]
+    assert [b for b, _ in applied] == ["b0-1500", "b1500-3000", "b3000-4500"]
 
     lineage = [r.asDict() for r in sink.read(spark).collect()]
     n_metered = 0

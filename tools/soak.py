@@ -2,7 +2,7 @@
 the 10^10-event target (BASELINE.json workload).
 
 Streams ``--batches`` windows of ``--events`` total synthetic change events
-through the REAL trigger path (``apply_batch``: gate → DDL cut → decode →
+through the REAL trigger path (``apply_batch``: gate → epoch decode →
 fused fold+MERGE → checkpoint → expire) against one fixed-key-space lake,
 then replays the SAME log in one shot on a fresh table and compares final
 state by sha256. Per-batch wall clock and every driver/disk state dimension
