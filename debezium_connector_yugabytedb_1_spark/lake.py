@@ -50,6 +50,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .operators._store import atomic_write
+
 KEY_COLS = ("repo", "path")
 _OFF_FIELDS = ("term", "index", "write_id")
 #: hidden bookkeeping columns stored per row. ``_deleted`` rows are
@@ -143,10 +145,7 @@ class LakeTable:
         v = m["version"]
         with open(os.path.join(self._vdir(), f"v{v:08d}.json"), "w") as f:
             json.dump(m, f)
-        tmp = os.path.join(self.path, "_CURRENT.tmp")
-        with open(tmp, "w") as f:
-            f.write(str(v))
-        os.replace(tmp, os.path.join(self.path, "_CURRENT"))
+        atomic_write(os.path.join(self.path, "_CURRENT"), str(v))
 
     def init(self, columns: list[tuple[str, str]]) -> None:
         """Create version 0 with the given (name, spark-ddl-type) payload
@@ -166,8 +165,10 @@ class LakeTable:
 
     @staticmethod
     def cols3(m: dict) -> list[tuple[str, str, str]]:
-        """(logical, type, physical) triples; legacy 2-element manifests use
-        physical = logical."""
+        """(logical, type, physical) triples. ``init`` writes 2-element
+        (name, type) columns, whose physical name is the logical one; a
+        column added by ``evolve`` carries its physical name as a third
+        element."""
         return [(c[0], c[1], c[2] if len(c) > 2 else c[0]) for c in m["columns"]]
 
     @property
@@ -187,8 +188,8 @@ class LakeTable:
     ) -> DataFrame:
         """Current snapshot, optionally pruned to a bucket subset (manifest
         lookup — no file-system scan of untouched partitions). Tombstone
-        rows are excluded unless ``with_deleted`` (the merge paths read them
-        to keep the offset guard order-free). ``manifest`` reads that
+        rows are excluded unless ``with_deleted`` (the merge reads them to
+        keep the offset guard order-free). ``manifest`` reads that
         manifest's buckets under its columns instead of the current one's
         (``merge_events`` reads its target under a not-yet-committed
         evolved schema)."""
@@ -434,19 +435,27 @@ class LakeTable:
                 stale/redelivered events simply lose the max())
               → tiny exchange on bucket → one file per touched bucket.
 
-        vs. the fold→merge pipeline this removes one aggregation, one
-        exchange, and one sort — per-batch fixed cost is what caps N→4N
-        scaling efficiency (Amdahl).
+        vs. a separate fold followed by a MERGE join this saves one
+        aggregation, one exchange, and one sort — per-batch fixed cost is
+        what caps N→4N scaling efficiency (Amdahl).
 
         ``content_sha256`` (the per-row invariant) rides along as a column
         only target rows set; it is reused verbatim whenever the winning
         content offset is the target's, so only genuinely changed rows are
         re-hashed.
 
-        Reference parity: same semantics as ``merge()`` (guard
+        Idempotent per ``batch_id`` (a re-delivered batch is skipped) and
+        per-row offset-guarded: an event no newer than the row's stored
+        offset loses the max() and leaves the row untouched (guard
         ``YugabyteDBStreamingChangeEventSource.java:976-986``, redelivery
-        absorption ``YugabyteDBSnapshotResumeTest.java:120-133``), verified
-        equal by ``test_merge_events_equals_fold_then_merge``.
+        absorption ``YugabyteDBSnapshotResumeTest.java:120-133``). Final
+        state and the upserted/deleted/carried stats are checked against
+        the pure-Python replay oracle (``tests/oracle.py``) in
+        ``test_merge_events.py``.
+
+        ``touched_buckets``: the bucket set the batch touches, when the
+        caller already knows it (the pipeline derives it from the window
+        stats); omitted, one distinct pass over the batch derives it.
 
         ``manifest``: merge under this manifest instead of the current one
         — the current one ``evolve``-d through a window's DDLs. ``dml``
@@ -484,8 +493,8 @@ class LakeTable:
         # write_id < 2^11-2 = 2046 — the intra-WAL-record index is single
         # digits, but split_pk_updates DOUBLES it (2w / 2w+1 for the
         # delete/create pair), so the field must hold 2*max+1 (boundary-
-        # value equivalence test: test_merge_events_packed_offset_boundary
-        # _values). This narrows both the shuffle row and every
+        # value test: test_merge_events_packed_offsets_match_oracle_at_field
+        # _limits). This narrows both the shuffle row and every
         # max(struct) sort buffer from 3 longs to 1.
         pack = _packed_offset(F.col("term"), F.col("index"), F.col("write_id"))
         # 8-byte key hash leading the grouping columns: the complete-mode
@@ -623,14 +632,6 @@ class LakeTable:
         # EVERY key is kept — deleted keys as tombstone rows (null values,
         # real offset) so the guard works under any event-arrival order
         merged = g.observe(obs, *stats_exprs).select(*out_cols)
-        return self._commit_data(merged, obs, lambda: g.agg(*stats_exprs), m, touched, batch_id)
-
-    def _commit_data(
-        self, merged: DataFrame, obs: Observation, fallback_stats, m: dict,
-        touched: list[int], batch_id: str,
-    ) -> MergeStats:
-        """Write the merged images as version v+1, resolve the observed
-        stats, and commit the manifest (pointer swap = the commit point)."""
         version = m["version"] + 1
         rel = f"data/v{version:08d}"
         out = os.path.join(self.path, rel)
@@ -642,14 +643,7 @@ class LakeTable:
             merged = merged.select(
                 *[F.col(c).alias(phys.get(c, c)) for c in merged.columns]
             )
-        import time
-
-        prof = os.environ.get("SPARK_GRAFT_PROFILE") == "1"
-        t0 = time.monotonic()
         _write_version(merged, out)
-        if prof:
-            print(f"[profile] merge_write_job: {time.monotonic() - t0:.3f}s", flush=True)
-
         try:
             row = dict(obs.get)
         except Exception:
@@ -657,7 +651,7 @@ class LakeTable:
             # when the input is empty; recompute the SAME guarded stats with
             # an explicit (tiny) aggregation job so redelivered / stale
             # batches are not over-counted.
-            row = fallback_stats().collect()[0].asDict()
+            row = g.agg(*stats_exprs).collect()[0].asDict()
 
         written = self._written_buckets(out, rel)
         stray = set(written) - {str(b) for b in touched}
@@ -682,141 +676,3 @@ class LakeTable:
             deleted=int(row["deleted"] or 0),
             carried=int(row["carried"] or 0),
         )
-
-    def merge(
-        self, folded: DataFrame, batch_id: str, touched_buckets: list[int] | None = None
-    ) -> MergeStats:
-        """Apply a folded batch (output of ``order.fold_changes``) with
-        last-writer-wins + per-column coalesce + delete semantics. Idempotent
-        per ``batch_id`` and per-row offset-guarded.
-
-        ``touched_buckets``: the bucket set the batch touches, derivable
-        from the batch's raw keys *without* running the fold (the pipeline
-        computes it on the undecoded batch). When omitted, a fallback
-        distinct pass over ``folded`` derives it — costing one extra fold
-        computation, deliberately NOT a cache/localCheckpoint: materializing
-        wide string rows measures ~3x the fold compute itself and does not
-        scale, while recomputation is pure parallel CPU."""
-        m = self.manifest()
-        if batch_id in m["applied_batches"]:
-            return MergeStats(version=m["version"], skipped=True)
-        cols = [c[0] for c in m["columns"]]
-        key = list(self.key_cols)
-
-        s = folded.withColumn("bucket", bucket_expr(self.n_buckets, self.key_cols))
-        if touched_buckets is None:
-            touched = [r["bucket"] for r in s.select("bucket").distinct().collect()]
-        else:
-            touched = [int(b) for b in touched_buckets]
-        t = self.read(
-            buckets=touched, with_meta=True, with_deleted=True
-        ).withColumn("bucket", bucket_expr(self.n_buckets, self.key_cols))
-
-        # MERGE as a union + ONE bucket-aligned aggregation instead of a
-        # full-outer join. Both sides are tagged into nullable structs and
-        # shuffled ONCE on `bucket`; the per-key combine is then a hash
-        # aggregate that needs NO further exchange, because
-        # HashPartitioning(bucket) already clusters every (bucket, repo,
-        # path) group (bucket is a subset of the grouping keys, and a pure
-        # function of the key). Compared to the join formulation this drops
-        # the target-side exchange, both sort-merge sorts, and the output
-        # repartition — per-batch fixed cost is what the N→4N scaling
-        # efficiency criterion punishes (Amdahl). The aggregated output is
-        # still hash-partitioned on bucket, so partitionBy write emits ~one
-        # file per touched bucket with no extra shuffle.
-        s_side = s.select(
-            *key,
-            "bucket",
-            F.struct(
-                F.col("exists"),
-                F.col("had_delete"),
-                F.col("last_offset"),
-                *[F.col(f"{c}_val") for c in cols],
-                *[F.col(f"{c}_set") for c in cols],
-            ).alias("_s"),
-        )
-        t_side = t.select(
-            *key,
-            "bucket",
-            F.struct(
-                *[F.col(c) for c in cols],
-                F.col("_last_term"),
-                F.col("_last_index"),
-                F.col("_last_write_id"),
-                F.col("content_sha256"),
-                F.coalesce(F.col("_deleted"), F.lit(False)).alias("_deleted"),
-            ).alias("_t"),
-        )
-        j = (
-            s_side.unionByName(t_side, allowMissingColumns=True)
-            .repartition(len(touched) or 1, "bucket")
-            .groupBy("bucket", *key)
-            # at most one row per tag per key (target keys are unique, the
-            # fold emits one row per key) — max() just picks the non-null
-            .agg(F.max("_s").alias("s"), F.max("_t").alias("t"))
-        )
-
-        s_here = F.col("s").isNotNull()
-        t_here = F.col("t").isNotNull()
-        t_off = F.struct(
-            F.col("t._last_term").alias("term"),
-            F.col("t._last_index").alias("index"),
-            F.col("t._last_write_id").alias("write_id"),
-        )
-        # monotonic guard: stale/duplicate events never move a row backwards
-        # (tombstone target rows carry the delete's offset, so a late
-        # lower-offset upsert loses here instead of resurrecting the row)
-        guard = ~t_here | (F.col("s.last_offset") > t_off)
-        t_vis = t_here & ~F.col("t._deleted")  # target row was visible
-        visible = (
-            F.when(~s_here, t_vis)
-            .when(~guard, t_vis)
-            .otherwise(F.col("s.exists"))
-        )
-        from_target = ~s_here | ~guard  # row image untouched by this batch
-        out_cols = [F.col("bucket")] + [F.col(k) for k in key]
-        for c in cols:
-            out_cols.append(
-                F.when(from_target, F.col(f"t.{c}"))
-                .when(F.col(f"s.{c}_set"), F.col(f"s.{c}_val"))
-                .when(F.col("s.had_delete"), F.lit(None))
-                .otherwise(F.col(f"t.{c}"))
-                .alias(c)
-            )
-        new_off = F.when(from_target, t_off).otherwise(F.col("s.last_offset"))
-        out_cols += [
-            new_off["term"].alias("_last_term"),
-            new_off["index"].alias("_last_index"),
-            new_off["write_id"].alias("_last_write_id"),
-        ]
-        # per-row invariant column (BASELINE input_hint): sha256 of content.
-        # Re-hash ONLY rows whose content this batch changed; carried rows
-        # reuse the stored digest (at scale carried >> changed, and sha256
-        # over every carried content would re-pay the whole bucket each
-        # batch).
-        if "content" in cols:
-            content_from_t = from_target | (
-                ~F.col("s.content_set") & ~F.col("s.had_delete")
-            )
-            out_cols.append(
-                F.when(content_from_t, F.col("t.content_sha256"))
-                .otherwise(
-                    F.sha2(F.when(F.col("s.content_set"), F.col("s.content_val")), 256)
-                )
-                .alias("content_sha256")
-            )
-        else:
-            out_cols.append(F.lit(None).cast("string").alias("content_sha256"))
-
-        out_cols.append((~visible).alias("_deleted"))
-        stats_exprs = [
-            F.sum((s_here & guard & F.col("s.exists")).cast("long")).alias("upserted"),
-            F.sum((s_here & guard & t_vis & ~F.col("s.exists")).cast("long")).alias(
-                "deleted"
-            ),
-            F.sum((t_here & ~(s_here & guard)).cast("long")).alias("carried"),
-        ]
-        obs = Observation(f"merge-{batch_id}")
-        # every key kept; deleted keys become tombstone rows
-        merged = j.observe(obs, *stats_exprs).select(*out_cols)
-        return self._commit_data(merged, obs, lambda: j.agg(*stats_exprs), m, touched, batch_id)

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..offsets import offset_lit, offset_struct
+from ._store import atomic_write
 
 CKPT_SCHEMA = "tablet_id string, term long, index long, write_id long, phase string"
 
@@ -156,10 +157,7 @@ class CheckpointStore:
     def _commit(self, version: int, meta: dict) -> None:
         with open(os.path.join(self.path, f"meta-v{version:08d}.json"), "w") as f:
             json.dump(meta, f)
-        tmp = os.path.join(self.path, "_CURRENT.tmp")
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, os.path.join(self.path, "_CURRENT"))
+        atomic_write(os.path.join(self.path, "_CURRENT"), str(version))
         self._trim(version)
 
     def _trim(self, cur: int) -> None:

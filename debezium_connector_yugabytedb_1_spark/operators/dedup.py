@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import norm_tokens, word_shingles
-from ._store import write_batch
+from ._store import BatchStore, write_batch
 
 
 
@@ -592,14 +592,14 @@ def elect_survivors(
 
 
 # ------------------------------------------------- incremental exact
-class ExactDedupIndex:
+class ExactDedupIndex(BatchStore):
     """Persisted exact-dedup membership index — the streaming complement of
     ``dedup_exact``: each batch of documents is checked against every hash
     ingested so far WITHOUT rereading the corpus, then only the NEW hashes
     are folded in. The ingest-time "have I seen this exact text before"
     primitive every CDC-fed corpus needs.
 
-    Store layout (the shared ``operators/_store`` crash-safe protocol, as
+    Store layout (the shared ``_store.BatchStore`` crash-safe protocol, as
     ``MinHashIndex``/``IvfIndex``): ``(text_md5, first_id)`` rows hash-
     partitioned by ``pmod(xxhash64(text_md5), n_parts)`` under
     ``hashes/batch=<n>/hkey=<k>``. ``add()`` reads ONLY the hkey
@@ -617,26 +617,15 @@ class ExactDedupIndex:
         id_col: str = "doc_id",
         text_col: str = "text",
     ):
-        import json
         import os
 
         if n_parts < 1:
             raise ValueError(f"n_parts must be >= 1, got {n_parts}")
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path, {"n_parts": n_parts})
         self.n_parts = n_parts
         self.id_col, self.text_col = id_col, text_col
         self.last_add_stats: dict = {}
-        os.makedirs(path, exist_ok=True)
         self._hashes = os.path.join(path, "hashes")
-        from ._store import check_or_write_geometry
-
-        check_or_write_geometry(path, {"n_parts": n_parts})
-
-    def _manifest(self) -> list[int]:
-        from ._store import read_manifest
-
-        return read_manifest(self.path)
 
     def _hkey(self, col: str = "text_md5"):
         return F.pmod(F.xxhash64(col), F.lit(self.n_parts)).cast("int")
@@ -646,8 +635,6 @@ class ExactDedupIndex:
         fold the new hashes in. Returns (doc_id, text_md5, is_duplicate,
         dup_of) — ``dup_of`` = the retained first occurrence's id (NULL
         for winners). Winner within a batch = smallest id per hash."""
-        from ._store import commit_manifest, pruned_partition_read
-
         # NULL text gets a sentinel key (md5 outputs are 32 hex chars, so
         # "NULL" cannot collide): md5(NULL) is NULL and every downstream
         # join would silently DROP those rows — all NULL-text docs dedup
@@ -665,9 +652,7 @@ class ExactDedupIndex:
             keys = {
                 r[0] for r in batch.select(self._hkey().alias("k")).distinct().collect()
             }
-            stored, h_read, h_total = pruned_partition_read(
-                self.spark, self._hashes, "hkey", keys, committed
-            )
+            stored, h_read, h_total = self._pruned_read(self._hashes, "hkey", keys)
         self.last_add_stats = {
             "hash_partitions_read": h_read,
             "hash_partitions_total": h_total,
@@ -699,7 +684,7 @@ class ExactDedupIndex:
             .select("text_md5", F.col("_batch_first").alias("first_id"))
             .withColumn("hkey", self._hkey())
         )
-        n = max(committed, default=-1) + 1
+        n = self._next_slot()
         # the result materialization and the store write are independent
         # jobs over the checkpointed batch (the write's ``batch=<n>`` dir
         # is invisible until the manifest commit, and ``out``'s plan reads
@@ -717,7 +702,7 @@ class ExactDedupIndex:
             fut_write = ex.submit(_write_new)
             out = fut_out.result()
             fut_write.result()  # re-raise any write failure before the commit
-        commit_manifest(self.path, self._manifest() + [n])
+        self._commit_manifest(self._manifest() + [n])
         return out
 
     def compact(self) -> int:
@@ -727,29 +712,27 @@ class ExactDedupIndex:
         import os
         import shutil
 
-        from ._store import commit_manifest, pruned_partition_read
-
         batches = self._manifest()
         if len(batches) <= 1:
             return 0
-        stored, _, _ = pruned_partition_read(
-            self.spark, self._hashes, "hkey", set(range(self.n_parts)), batches
+        stored, _, _ = self._pruned_read(
+            self._hashes, "hkey", set(range(self.n_parts))
         )
         if stored is None:  # committed batches with zero data rows
-            commit_manifest(self.path, [max(batches)])
+            self._commit_manifest([max(batches)])
             for b in batches[:-1]:
                 shutil.rmtree(
                     os.path.join(self._hashes, f"batch={b}"), ignore_errors=True
                 )
             return len(batches)
-        n = max(batches) + 1
+        n = self._next_slot()
         # hashes are add-once (only unseen ones are written), so the fold
         # is a plain rewrite; project away read-side partition cols
         write_batch(
             stored.select("text_md5", "first_id").withColumn("hkey", self._hkey()),
             self._hashes, "hkey", n,
         )
-        commit_manifest(self.path, [n])
+        self._commit_manifest([n])
         for b in batches:
             shutil.rmtree(
                 os.path.join(self._hashes, f"batch={b}"), ignore_errors=True
@@ -758,7 +741,7 @@ class ExactDedupIndex:
 
 
 # ------------------------------------------------- incremental minhash
-class MinHashIndex:
+class MinHashIndex(BatchStore):
     """Persisted MinHash-LSH index for INCREMENTAL dedup — the streaming
     complement of ``minhash_lsh_pairs``: each new batch of documents is
     checked against everything ingested so far WITHOUT re-shingling the
@@ -810,33 +793,19 @@ class MinHashIndex:
         n_posting_parts: int = 64,
         n_set_parts: int = 64,
     ):
-        import json
         import os
 
         if n_hashes % bands != 0:
             raise ValueError(
                 f"n_hashes ({n_hashes}) must be divisible by bands ({bands})"
             )
-        self.spark = spark
-        self.path = path
-        self.text_col = text_col
-        self.k, self.n_hashes, self.bands = k, n_hashes, bands
-        self.threshold = threshold
-        self.n_posting_parts = n_posting_parts
-        self.n_set_parts = n_set_parts
-        self.last_add_stats: dict = {}
-        os.makedirs(path, exist_ok=True)
-        self._buckets = os.path.join(path, "buckets")
-        self._sets = os.path.join(path, "sets")
         # the index geometry is baked into the stored postings/sets:
         # reopening with different (k, n_hashes, bands) would join
         # incomparable hash families, and different partition counts would
-        # prune the wrong directories, with no error — persist on first
-        # open, verify on every later one (threshold only filters output
-        # rows and may vary freely)
-        from ._store import check_or_write_geometry
-
-        check_or_write_geometry(
+        # prune the wrong directories (threshold only filters output rows
+        # and may vary freely)
+        super().__init__(
+            spark,
             path,
             {
                 "k": k,
@@ -846,17 +815,14 @@ class MinHashIndex:
                 "n_set_parts": n_set_parts,
             },
         )
-
-    # -- batch commit protocol (shared with IvfIndex): see operators/_store
-    def _manifest(self) -> list[int]:
-        from ._store import read_manifest
-
-        return read_manifest(self.path)
-
-    def _commit_manifest(self, batches: list[int]) -> None:
-        from ._store import commit_manifest
-
-        commit_manifest(self.path, batches)
+        self.text_col = text_col
+        self.k, self.n_hashes, self.bands = k, n_hashes, bands
+        self.threshold = threshold
+        self.n_posting_parts = n_posting_parts
+        self.n_set_parts = n_set_parts
+        self.last_add_stats: dict = {}
+        self._buckets = os.path.join(path, "buckets")
+        self._sets = os.path.join(path, "sets")
 
     def _pkey(self):
         return F.pmod(F.xxhash64("band", "bucket"), F.lit(self.n_posting_parts)).cast(
@@ -866,29 +832,7 @@ class MinHashIndex:
     def _skey(self, col: str = "doc_id"):
         return F.pmod(F.xxhash64(col), F.lit(self.n_set_parts)).cast("int")
 
-    def _pruned_read(
-        self, root: str, key: str, wanted: set[int]
-    ) -> tuple[DataFrame | None, int, int]:
-        """Read ONLY the ``key=<v>`` partition dirs of committed batches
-        whose v is in ``wanted`` (``_store.pruned_partition_read``)."""
-        from ._store import pruned_partition_read
-
-        return pruned_partition_read(self.spark, root, key, wanted, self._manifest())
-
     def add(self, docs: DataFrame) -> DataFrame:
-        import os
-        import time
-
-        prof = os.environ.get("SPARK_GRAFT_PROFILE") == "1"
-        t_last = time.monotonic()
-
-        def _t(label):
-            nonlocal t_last
-            if prof:
-                now = time.monotonic()
-                print(f"[profile] mhidx.{label}: {now - t_last:.3f}s", flush=True)
-                t_last = now
-
         # ONE materialization of the expensive shingle+signature pass:
         # everything downstream (bands, guard ids, verify sets, BOTH store
         # writes) is a cheap projection over this checkpoint (which
@@ -898,12 +842,10 @@ class MinHashIndex:
         # and the guard re-ran the full shingle aggregation — 3 passes per
         # add.
         per_doc = _doc_sets_sigs(docs, self.text_col, self.k, self.n_hashes)
-        _t("per_doc")
         banded = _buckets_from_sigs(per_doc, self.n_hashes, self.bands).withColumn(
             "pkey", self._pkey()
         )
         committed = self._manifest()
-        _t("banded")
         # ---- the two store writes depend ONLY on per_doc (checkpointed)
         # and banded (a projection over it), never on the candidate/verify
         # phase, and the new ``batch=<n>`` dirs stay invisible until the
@@ -913,7 +855,7 @@ class MinHashIndex:
         # (max+1 is stable until the commit) and overwrites the orphan.
         from concurrent.futures import ThreadPoolExecutor
 
-        n = max(committed, default=-1) + 1
+        n = self._next_slot()
 
         def _write_buckets():
             write_batch(banded, self._buckets, "pkey", n)
@@ -930,14 +872,13 @@ class MinHashIndex:
         # nothing uncommitted, but must not outlive the call)
         with ThreadPoolExecutor(2) as pool:
             write_futs = [pool.submit(_write_buckets), pool.submit(_write_sets)]
-            pairs = self._candidate_verify_phase(per_doc, banded, committed, docs, _t)
+            pairs = self._candidate_verify_phase(per_doc, banded, committed, docs)
             for f in write_futs:
                 f.result()  # re-raise any write failure before the commit
-        _t("pairs_and_writes")
         self._commit_manifest(self._manifest() + [n])  # atomically visible
         return pairs
 
-    def _candidate_verify_phase(self, per_doc, banded, committed, docs, _t):
+    def _candidate_verify_phase(self, per_doc, banded, committed, docs):
         """Candidates + pruned verify + the pairs materialization — every
         read in here prunes against the COMMITTED manifest, so it never
         sees the concurrent ``batch=<n>`` writes ``add`` overlaps with it.
@@ -958,7 +899,6 @@ class MinHashIndex:
             )
             guard_keys = {r["k"] for r in keys if r["side"] == 0}
             new_pkeys = {r["k"] for r in keys if r["side"] == 1}
-            _t("keys_collect")
             # ---- re-add guard: scan only the doc_id column of the skey
             # partitions that could hold the incoming ids (ADVICE r4: a
             # silent re-add would duplicate postings/sets and inflate later
@@ -976,7 +916,6 @@ class MinHashIndex:
                         f"doc_ids already indexed (each doc_id must be added "
                         f"exactly once): {some}"
                     )
-            _t("guard_isempty")
             # ---- candidates: new × new (a < b) plus stored × new — stored
             # postings pruned to the pkey partitions present in the NEW
             # batch (a candidate must share (band, bucket) with a new doc,
@@ -1013,7 +952,6 @@ class MinHashIndex:
             )
             cand = cand.unionByName(vs_stored)
         cand = cand.distinct().localCheckpoint()
-        _t("cand_ckpt")
         sets = per_doc.select("doc_id", "sh")
         s_read = s_total = 0
         if committed:
@@ -1034,7 +972,6 @@ class MinHashIndex:
                 r[0]
                 for r in cand_ids.select(self._skey().alias("k")).distinct().collect()
             }
-            _t("verify_keys_collect")
             stored_s, s_read, s_total = self._pruned_read(
                 self._sets, "skey", verify_keys
             )
@@ -1096,7 +1033,7 @@ class MinHashIndex:
         batches = self._manifest()
         if len(batches) <= 1:
             return 0
-        n = max(batches) + 1
+        n = self._next_slot()
         for root in (self._buckets, self._sets):
             dirs = [
                 os.path.join(root, f"batch={b}")

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import cosine_similarity
-from ._store import write_batch
+from ._store import BatchStore, write_batch
 from .dedup import _spread
 
 
@@ -282,7 +282,7 @@ def embedding_near_dup_pairs(
     )
 
 
-class IvfIndex:
+class IvfIndex(BatchStore):
     """Persisted IVF-Flat index — the ANN complement of ``MinHashIndex``:
     a training-data pipeline embeds documents continuously, and re-running
     ``ivf_topk`` (train + assign the whole corpus per query batch) is
@@ -321,35 +321,18 @@ class IvfIndex:
         vec_col: str = "embedding",
         seed: int = 7,
     ):
-        import json
         import os
 
         if n_lists < 1 or n_parts < 1:
             raise ValueError(f"n_lists/n_parts must be >= 1, got {n_lists}/{n_parts}")
-        self.spark = spark
-        self.path = path
+        super().__init__(
+            spark, path, {"n_lists": n_lists, "n_parts": n_parts, "seed": seed}
+        )
         self.n_lists, self.n_parts = n_lists, n_parts
         self.id_col, self.vec_col = id_col, vec_col
         self.seed = seed
         self.last_query_stats: dict = {}
-        os.makedirs(path, exist_ok=True)
         self._vectors = os.path.join(path, "vectors")
-        from ._store import check_or_write_geometry
-
-        check_or_write_geometry(
-            path, {"n_lists": n_lists, "n_parts": n_parts, "seed": seed}
-        )
-
-    # -- batch commit protocol (shared with MinHashIndex): operators/_store
-    def _manifest(self) -> list[int]:
-        from ._store import read_manifest
-
-        return read_manifest(self.path)
-
-    def _commit_manifest(self, batches: list[int]) -> None:
-        from ._store import commit_manifest
-
-        commit_manifest(self.path, batches)
 
     @property
     def trained(self) -> bool:
@@ -426,7 +409,7 @@ class IvfIndex:
         it folds the store to one row per id, keeping the latest batch."""
         if not self.trained:
             raise ValueError("train() the quantizer before add()")
-        n = max(self._manifest(), default=-1) + 1
+        n = self._next_slot()
         write_batch(
             self._assigned(batch).withColumn(
                 "lkey", F.pmod(F.col("list_id"), F.lit(self.n_parts)).cast("int")
@@ -435,13 +418,6 @@ class IvfIndex:
         )
         self._commit_manifest(self._manifest() + [n])
         return n
-
-    def _pruned_read(self, wanted: set[int]):
-        from ._store import pruned_partition_read
-
-        return pruned_partition_read(
-            self.spark, self._vectors, "lkey", wanted, self._manifest()
-        )
 
     def query(self, queries: DataFrame, k: int = 5, nprobe: int = 4) -> DataFrame:
         """IVF-Flat search against the store: probe each query's ``nprobe``
@@ -459,7 +435,7 @@ class IvfIndex:
         # point lookups; bulk all-pairs work is embedding_near_dup_pairs)
         probed = {r["list_id"] for r in q_probe.select("list_id").distinct().collect()}
         stored, nread, ntotal = self._pruned_read(
-            {l % self.n_parts for l in probed}
+            self._vectors, "lkey", {l % self.n_parts for l in probed}
         )
         self.last_query_stats = {
             "lists_probed": len(probed),
@@ -519,8 +495,10 @@ class IvfIndex:
         old = self._manifest()
         if not old:
             return -1
-        stored, _, _ = self._pruned_read(set(range(self.n_parts)))
-        n = max(old) + 1
+        stored, _, _ = self._pruned_read(
+            self._vectors, "lkey", set(range(self.n_parts))
+        )
+        n = self._next_slot()
         write_batch(
             # project away the read-side partition columns (batch, lkey) —
             # carrying them bakes a stale `batch` data column into the new

@@ -8,13 +8,14 @@ complete marker ``:902-905``; SNAPSHOT_DONE sentinel
 ``bootstrapTabletWithRetry:181-269`` /
 ``YugabyteDBOffsetContext.java:147-149``).
 
-Spark-first: the snapshot is one bounded batch job — read the base table,
-emit ``op='r'`` envelopes at a snapshot offset strictly below every
+Spark-first: the snapshot is a bounded batch pass — read the base table in
+chunks, emit ``op='r'`` envelopes at a snapshot offset strictly below every
 streaming offset (term = -1, the snapshot-format analogue of the reference's
 distinct snapshot OpId format, which ``getHigherOffsets`` keeps separate
-from streaming offsets), fold, MERGE. Resumability comes from the same
-idempotent MERGE + checkpoint protocol as streaming — a re-run snapshot is
-absorbed, the stance the reference takes for snapshot re-delivery
+from streaming offsets), and apply each chunk with the streaming sink's own
+``LakeTable.merge_events``. Resumability comes from the same idempotent
+MERGE + checkpoint protocol as streaming — a re-run snapshot is absorbed,
+the stance the reference takes for snapshot re-delivery
 (``YugabyteDBSnapshotResumeTest.java:120-133``).
 """
 
@@ -24,8 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..lake import LakeTable
-from .checkpoint import CheckpointStore, batch_offsets
-from .order import fold_changes
+from .checkpoint import CheckpointStore
 
 SNAPSHOT_TERM = -1  # sorts below every streaming offset (term >= 0)
 
@@ -250,23 +250,3 @@ def execute_snapshot_policy(
     processed = run_snapshot(base, table, ckpt, **snapshot_kwargs)
     return processed, mode != "initial_only"
 
-
-def run_snapshot_bulk(
-    base: DataFrame,
-    table: LakeTable,
-    ckpt: CheckpointStore,
-    n_tablets: int = 8,
-) -> None:
-    """All-or-nothing snapshot (one job, no mid-snapshot resume) — the
-    simple form; re-runs are absorbed by the idempotent MERGE
-    (``YugabyteDBSnapshotResumeTest.java:120-133``)."""
-    if ckpt.meta().get("snapshot_done"):
-        return
-    for name, typ in table.columns:
-        if name not in base.columns:
-            base = base.withColumn(name, F.lit(None).cast(typ))
-    env = snapshot_envelopes(base, n_tablets=n_tablets)
-    cols = [n for n, _ in table.columns]
-    folded = fold_changes(env, columns=cols)
-    table.merge(folded, batch_id="snapshot")
-    ckpt.commit(batch_offsets(env, phase="snapshot"), meta={"snapshot_done": True})

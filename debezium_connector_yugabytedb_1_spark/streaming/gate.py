@@ -54,6 +54,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators._store import atomic_write
 from ..operators.filters import NON_DISPATCHED_OPS
 from ..operators.order import ht_key, ht_key_py
 
@@ -116,10 +117,7 @@ class ConsistentGate:
         return st
 
     def _save_state(self, st: dict) -> None:
-        tmp = self._state_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(st, f)
-        os.replace(tmp, self._state_path())
+        atomic_write(self._state_path(), json.dumps(st))
 
     # ---------------------------------------------------------- gate
     def stream_safetime(self, st: dict | None = None) -> int | None:

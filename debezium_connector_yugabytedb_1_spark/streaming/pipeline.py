@@ -329,21 +329,11 @@ class CdcPipeline:
         """Process micro-batch windows from the stored cursor to the end of
         the available log (or ``max_batches`` windows — the kill/resume
         test's kill switch)."""
-        import os
-        import time
         from concurrent.futures import ThreadPoolExecutor
 
-        prof = os.environ.get("SPARK_GRAFT_PROFILE") == "1"
-
-        def _t(label, t0):
-            if prof:
-                print(f"[profile] {label}: {time.monotonic() - t0:.3f}s", flush=True)
-
-        t0 = time.monotonic()
         events = self._events()
         if events is None:  # fully retention-pruned log — all consumed
             return []
-        _t("events_read", t0)
         lo = int(self.ckpt.meta().get("next_lo", 0))
         results: list[BatchResult] = []
         n = 0
@@ -364,14 +354,10 @@ class CdcPipeline:
             # the first window's stats job runs concurrently with the
             # log-extent scan below — neither depends on the other, and both
             # are otherwise serial time ahead of the first merge
-            t0 = time.monotonic()
             fut, window = submit(
                 pool, lo, lo + self.events_per_batch, self.ckpt.load_rows()
             )
-            _t("stats_submit", t0)
-            t0 = time.monotonic()
             max_index = self._max_index(events)
-            _t("max_index", t0)
             if max_index is None:
                 fut.result()
                 return []
@@ -379,9 +365,7 @@ class CdcPipeline:
                 hi = lo + self.events_per_batch
                 if fut is None:
                     fut, window = submit(pool, lo, hi, self.ckpt.load_rows())
-                t0 = time.monotonic()
                 stats = fut.result()
-                _t("stats_wait", t0)
                 if self.auto_add_tables:
                     self._poll_tables(stats["tables"], lo)
                 nxt_lo, nxt_hi = hi, hi + self.events_per_batch
@@ -392,14 +376,11 @@ class CdcPipeline:
                     )
                 else:
                     nxt_fut, nxt_window = None, None
-                t0 = time.monotonic()
                 # DDL markers reach the merge through ``stats["ddls"]``
                 results.append(
                     self._apply(window.where(F.col("op") != "ddl"), f"b{lo}-{hi}", stats)
                 )
-                _t("process_window", t0)
                 # offsets were part of the single stats pass; commit + advance
-                t0 = time.monotonic()
                 self.ckpt.commit(stats["offsets"], meta={"next_lo": hi})
                 if self.expire_keep is not None:
                     self.table.expire_versions(self.expire_keep)
@@ -419,7 +400,6 @@ class CdcPipeline:
                     self.pruned_segments += prune_wal_segments(
                         self.events_path, hi
                     )
-                _t("ckpt_commit", t0)
                 fut, window = nxt_fut, nxt_window
                 lo = hi
                 n += 1

@@ -69,6 +69,55 @@ def replay(event_rows, initial_columns=("commit", "lang", "content")):
     return final, cols
 
 
+def key_offsets(event_rows) -> dict:
+    """{key: max offset} over the DML rows, as the sink stores offsets:
+    ``split_pk_updates`` doubles every ``write_id`` and turns a PK update
+    into a delete of the old key at ``2w`` plus a create of the new key at
+    ``2w + 1``. Deletes count too — the sink keeps a deleted key's offset
+    on its tombstone row."""
+    out: dict[tuple[str, str], tuple[int, int, int]] = {}
+
+    def bump(key, off):
+        if key not in out or off > out[key]:
+            out[key] = off
+
+    for r in event_rows:
+        op = r["op"]
+        if op not in UPSERT | DELETE | {"pku"}:
+            continue
+        term, index, w = r["term"], r["index"], 2 * r["write_id"]
+        if op == "pku":
+            bk = json.loads(r["payload"]).get("before_key") or {}
+            bump((bk.get("repo"), bk.get("path")), (term, index, w))
+            w += 1
+        bump((r["repo"], r["path"]), (term, index, w))
+    return out
+
+
+def window_counts(before_rows, window_rows, initial_columns=("commit", "lang", "content")):
+    """Expected stats of merging ``window_rows`` into a table that has
+    merged ``before_rows``. A key counts when the window holds an event
+    newer than the key's stored offset (``key_offsets`` of everything
+    merged before). It is ``upserted`` if it ends the window live, and
+    ``deleted`` if it was live before and ends dead. ``overwritten`` is the
+    number of counted keys the table already stored: the stored rows of
+    the touched buckets that are not overwritten are the ``carried``
+    ones."""
+    stored = key_offsets(before_rows)
+    newer = {
+        k
+        for k, off in key_offsets(window_rows).items()
+        if k not in stored or off > stored[k]
+    }
+    live_before, _ = replay(before_rows, initial_columns)
+    live_after, _ = replay(list(before_rows) + list(window_rows), initial_columns)
+    return {
+        "upserted": sum(k in live_after for k in newer),
+        "deleted": sum(k in live_before and k not in live_after for k in newer),
+        "overwritten": sum(k in stored for k in newer),
+    }
+
+
 def engine_state(table) -> dict:
     """Collect a LakeTable's current state into the oracle's shape."""
     cols = [n for n, _ in table.columns]

@@ -162,7 +162,7 @@ def test_readded_id_resolves_to_latest_batch(spark, tmp_path):
     assert before == _res(idx.query(queries, k=10, nprobe=4))
     # compaction applies the same rule physically: one row per vec_id
     idx.compact()
-    stored, _, _ = idx._pruned_read(set(range(2)))
+    stored, _, _ = idx._pruned_read(idx._vectors, "lkey", set(range(2)))
     assert stored.groupBy("vec_id").count().where("count > 1").count() == 0
     assert _res(idx.query(queries, k=10, nprobe=4)) == before
 

@@ -1,6 +1,7 @@
-"""merge_events (fused fold+MERGE) must be observationally equal to the
-two-step fold_changes → merge path: same final table state, same stats, same
-sha256 invariant, same redelivery/stale absorption."""
+"""merge_events (fused fold+MERGE), the lake's one MERGE path, checked
+against the pure-Python replay oracle (``tests/oracle.py``): final table
+state, per-window stats, the sha256 invariant, packed-offset round trips,
+and redelivery/stale absorption."""
 
 import hashlib
 
@@ -8,10 +9,11 @@ import pyspark.sql.functions as F
 import pytest
 
 from debezium_connector_yugabytedb_1_spark.generator import generate_events
-from debezium_connector_yugabytedb_1_spark.lake import LakeTable
+from debezium_connector_yugabytedb_1_spark.lake import LakeTable, bucket_expr
 from debezium_connector_yugabytedb_1_spark.operators.decode import decode_envelope
 from debezium_connector_yugabytedb_1_spark.operators.emit import DML_OPS, split_pk_updates
-from debezium_connector_yugabytedb_1_spark.operators.order import fold_changes
+
+from .oracle import engine_state, key_offsets, replay, window_counts
 
 COLS = [("commit", "string"), ("lang", "string"), ("content", "string")]
 
@@ -34,27 +36,35 @@ def _snap(table):
     )
 
 
-def test_merge_events_equals_fold_then_merge(spark, tmp_path):
+def test_merge_events_matches_oracle_per_window(spark, tmp_path):
+    """Three windows, then a full redelivery of the second under a new batch
+    id (stale offsets: the guard must absorb every row). Each window's
+    upserted/deleted/carried stats and the final state, sha256 included,
+    equal the pure-Python replay oracle."""
     ev = generate_events(spark, 6000)
-    t_classic = LakeTable(spark, str(tmp_path / "classic"), n_buckets=8)
-    t_fused = LakeTable(spark, str(tmp_path / "fused"), n_buckets=8)
-    for t in (t_classic, t_fused):
-        t.init(COLS)
-    cols = [n for n, _ in COLS]
-    # three batches, then a full redelivery of batch 2 under a new batch id
-    # (stale offsets — the guard must absorb every row)
+    rows = [r.asDict() for r in ev.collect()]
+    t = LakeTable(spark, str(tmp_path / "lake"), n_buckets=8)
+    t.init(COLS)
     windows = [(0, 2000), (2000, 4000), (4000, 6000), (2000, 4000)]
+    merged: list[dict] = []
     for i, (lo, hi) in enumerate(windows):
-        w = ev.where((F.col("index") >= lo) & (F.col("index") < hi))
-        s_classic = t_classic.merge(
-            fold_changes(_dml(w), columns=cols), f"b{i}"
-        )
-        s_fused = t_fused.merge_events(_dml(w), f"b{i}")
-        assert (s_classic.upserted, s_classic.deleted) == (
-            s_fused.upserted, s_fused.deleted,
-        ), f"stats diverge in batch {i}"
-        assert s_classic.carried == s_fused.carried, f"carried diverges in batch {i}"
-    assert _snap(t_classic) == _snap(t_fused)
+        w_rows = [r for r in rows if lo <= r["index"] < hi]
+        dml = _dml(ev.where((F.col("index") >= lo) & (F.col("index") < hi)))
+        touched = [
+            r["b"] for r in dml.select(bucket_expr(8).alias("b")).distinct().collect()
+        ]
+        stored = t.read(buckets=touched, with_deleted=True).count()
+        want = window_counts(merged, w_rows)
+        st = t.merge_events(dml, f"b{i}")
+        assert (st.upserted, st.deleted) == (
+            want["upserted"], want["deleted"],
+        ), f"stats diverge in window {i}"
+        assert st.carried == stored - want["overwritten"], f"carried diverges in window {i}"
+        merged += w_rows
+    assert st.upserted == st.deleted == 0  # the stale redelivery is absorbed
+    assert st.carried == stored
+    final, _ = replay(rows)
+    assert engine_state(t) == final
 
 
 def test_merge_events_key_prefix_modes_equivalent(spark, tmp_path, monkeypatch):
@@ -218,14 +228,14 @@ def test_streaming_multi_trigger_converges_with_batch(spark, tmp_path):
     assert tb.read().columns == ta.read().columns  # DDL applied in both
 
 
-def test_merge_events_packed_offset_boundary_values(spark, tmp_path):
+def test_merge_events_packed_offsets_match_oracle_at_field_limits(spark, tmp_path):
     """The fused path packs (term, index, write_id) into one long
     (14/38/11-bit fields, +2 bias). Push every field to its extremes —
-    snapshot term -1, term near 2^14, index near the 38-bit ceiling,
-    write_id (incl. the pku-split doubling) near the 11-bit ceiling — and
-    demand observational equality with the
-    unpacked fold_changes → merge path (any bit-budget error silently
-    reorders offsets and diverges the final state)."""
+    term near 2^14, index near the 38-bit ceiling, write_id (incl. the
+    pku-split doubling) near the 11-bit ceiling — and demand the oracle's
+    final state, plus every stored offset (tombstones included) equal to
+    the key's max event offset computed unpacked in Python (any bit-budget
+    error silently reorders offsets or corrupts the round trip)."""
     ev = generate_events(spark, 4000)
     hi_index = (1 << 38) - 5000  # index + 2 must stay < 2^38
     remapped = (
@@ -234,25 +244,26 @@ def test_merge_events_packed_offset_boundary_values(spark, tmp_path):
         .withColumn("index", F.col("index") + F.lit(hi_index))
         .withColumn("write_id", F.col("write_id") + 960)  # split doubles: up to ~2040
     )
-    t_classic = LakeTable(spark, str(tmp_path / "classic"), n_buckets=4)
-    t_fused = LakeTable(spark, str(tmp_path / "fused"), n_buckets=4)
-    for t in (t_classic, t_fused):
-        t.init(COLS)
-    cols = [n for n, _ in COLS]
+    t = LakeTable(spark, str(tmp_path / "lake"), n_buckets=4)
+    t.init(COLS)
     windows = [(0, 2000), (2000, 4000), (0, 2000)]  # incl. stale redelivery
     for i, (lo, hi) in enumerate(windows):
         w = remapped.where(
             (F.col("index") >= lo + hi_index) & (F.col("index") < hi + hi_index)
         )
-        t_classic.merge(fold_changes(_dml(w), columns=cols), f"b{i}")
-        t_fused.merge_events(_dml(w), f"b{i}")
-    snap_c, snap_f = _snap(t_classic), _snap(t_fused)
-    assert snap_c == snap_f
+        t.merge_events(_dml(w), f"b{i}")
+    rows = [r.asDict() for r in remapped.collect()]
+    final, _ = replay(rows)
+    assert engine_state(t) == final
+    stored = {
+        (r["repo"], r["path"]): (r["_last_term"], r["_last_index"], r["_last_write_id"])
+        for r in t.read(with_meta=True, with_deleted=True).collect()
+    }
+    assert stored == key_offsets(rows)
     # the boundary offsets round-trip exactly through pack/unpack
-    terms = {r[5] for r in snap_f}
-    assert terms <= {16370 + k for k in range(3)} | {-1}
-    assert all(r[6] >= hi_index for r in snap_f)
-    assert all(960 <= r[7] <= 2044 for r in snap_f)
+    assert {o[0] for o in stored.values()} <= {16370 + k for k in range(3)} | {-1}
+    assert all(o[1] >= hi_index for o in stored.values())
+    assert all(960 <= o[2] <= 2044 for o in stored.values())
 
 
 def test_merge_events_rejects_out_of_budget_offsets(spark, tmp_path):

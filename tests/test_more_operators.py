@@ -84,9 +84,10 @@ def test_snapshot_phase_then_streaming(spark, tmp_path):
         [(0, 1, 0, "u", "r1", "a.py", '{"after":{"commit":"c9"},"changed":["commit"]}')],
         "term long, index long, write_id long, op string, repo string, path string, payload string",
     )
-    folded = fold_changes(decode_envelope(ev), columns=[n for n, _ in INIT_COLS])
-    table.merge(folded, "s1")
+    st = table.merge_events(decode_envelope(ev, columns=table.columns), "s1")
+    assert (st.upserted, st.deleted) == (1, 0)
     assert engine_state(table)[("r1", "a.py")]["commit"] == "c9"
+    assert engine_state(table)[("r1", "a.py")]["content"] == "body0"  # partial update
 
 
 # ---------------------------------------------------------------- filters
@@ -323,23 +324,26 @@ def test_lake_expire_versions(spark, tmp_path):
     t.init(INIT_COLS)
 
     def one(i):
-        return spark.createDataFrame(
-            [("r", f"p{i}", True, False, (0, i, 0), 1, f"c{i}", "x", "y", True, True, True)],
-            "repo string, path string, exists boolean, had_delete boolean, "
-            "last_offset struct<term:long,index:long,write_id:long>, n_events long, "
-            "commit_val string, lang_val string, content_val string, "
-            "commit_set boolean, lang_set boolean, content_set boolean",
+        return decode_envelope(
+            spark.createDataFrame(
+                [(0, i, 0, "c", "r", f"p{i}",
+                  f'{{"after":{{"commit":"c{i}","lang":"x","content":"y"}},'
+                  '"changed":["commit","lang","content"]}')],
+                "term long, index long, write_id long, op string, repo string, "
+                "path string, payload string",
+            ),
+            columns=t.columns,
         )
 
     for i in range(1, 7):
-        t.merge(one(i), f"b{i}")
+        assert t.merge_events(one(i), f"b{i}").upserted == 1
     before = engine_state(t)
     n_dirs_before = len(os.listdir(str(tmp_path / "gc" / "data")))
     removed = t.expire_versions(keep_last=2)
     assert removed > 0 and len(os.listdir(str(tmp_path / "gc" / "data"))) < n_dirs_before
     assert engine_state(t) == before  # current snapshot untouched
     # table still writable after GC
-    t.merge(one(99), "b99")
+    assert t.merge_events(one(99), "b99").upserted == 1
     assert ("r", "p99") in engine_state(t)
 
 

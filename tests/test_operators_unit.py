@@ -169,45 +169,61 @@ def test_resume_filter(spark):
 
 
 # ---------------------------------------------------------------- lake unit
+_EVENT_DDL = (
+    "term long, index long, write_id long, op string, repo string, path string, "
+    "payload string"
+)
+
+
+def _merge(t, rows, batch_id):
+    """Raw (term, index, write_id, op, repo, path, after-dict) event rows
+    through decode → ``merge_events`` under the table's live columns."""
+    import json as _json
+
+    df = t.spark.createDataFrame(
+        [
+            (term, index, wid, op, repo, path,
+             _json.dumps({"after": after, "changed": list(after)}) if after else None)
+            for term, index, wid, op, repo, path, after in rows
+        ],
+        _EVENT_DDL,
+    )
+    return t.merge_events(decode_envelope(df, columns=t.columns), batch_id)
+
+
 def test_lake_merge_guard_and_pruning(spark, tmp_path):
     t = LakeTable(spark, str(tmp_path / "lk"), n_buckets=4)
     t.init([("commit", "string"), ("content", "string")])
 
-    def folded(rows):
-        return spark.createDataFrame(
-            rows,
-            "repo string, path string, exists boolean, had_delete boolean, "
-            "last_offset struct<term:long,index:long,write_id:long>, n_events long, "
-            "commit_val string, content_val string, commit_set boolean, content_set boolean",
-        )
-
-    t.merge(folded([("r", "p", True, False, (0, 5, 0), 1, "a", "c1", True, True)]), "b1")
+    st = _merge(t, [(0, 5, 0, "c", "r", "p", {"commit": "a", "content": "c1"})], "b1")
+    assert (st.upserted, st.deleted, st.carried) == (1, 0, 0)
     assert [r["commit"] for r in t.read().collect()] == ["a"]
     v1 = t.manifest()["version"]
 
     # stale offset → no change
-    t.merge(folded([("r", "p", True, False, (0, 3, 0), 1, "STALE", None, True, False)]), "b2")
+    st = _merge(t, [(0, 3, 0, "u", "r", "p", {"commit": "STALE"})], "b2")
+    assert st.upserted == 0 and st.carried == 1
     row = t.read(with_meta=True).collect()[0]
     assert row["commit"] == "a" and row["_last_index"] == 5
 
     # partial update: content untouched
-    t.merge(folded([("r", "p", True, False, (0, 7, 0), 1, "b", None, True, False)]), "b3")
+    st = _merge(t, [(0, 7, 0, "u", "r", "p", {"commit": "b"})], "b3")
+    assert st.upserted == 1
     row = t.read().collect()[0]
     assert (row["commit"], row["content"]) == ("b", "c1")
 
     # same batch id skipped
-    st = t.merge(folded([("r", "p", True, False, (0, 9, 0), 1, "zzz", None, True, False)]), "b3")
+    st = _merge(t, [(0, 9, 0, "u", "r", "p", {"commit": "zzz"})], "b3")
     assert st.skipped and t.read().collect()[0]["commit"] == "b"
 
     # delete
-    t.merge(folded([("r", "p", False, True, (0, 11, 0), 1, None, None, False, False)]), "b4")
+    st = _merge(t, [(0, 11, 0, "d", "r", "p", None)], "b4")
+    assert st.deleted == 1 and st.upserted == 0
     assert t.read().isEmpty()
 
     # bucket pointers: untouched buckets must be carried, not rewritten.
     # (the deleted key's bucket still holds its tombstone row) — pick a
     # second key that provably hashes to a DIFFERENT bucket
-    from debezium_connector_yugabytedb_1_spark.lake import bucket_expr
-
     def bucket_of(repo, path):
         return spark.range(1).select(
             F.pmod(F.xxhash64(F.lit(repo), F.lit(path)), F.lit(4)).alias("b")
@@ -218,7 +234,8 @@ def test_lake_merge_guard_and_pruning(spark, tmp_path):
         f"other{i}" for i in range(50) if bucket_of(f"other{i}", "q") != b_rp
     )
     m_before = t.manifest()["buckets"]
-    t.merge(folded([(other, "q", True, False, (0, 12, 0), 1, "x", "y", True, True)]), "b5")
+    st = _merge(t, [(0, 12, 0, "c", other, "q", {"commit": "x", "content": "y"})], "b5")
+    assert (st.upserted, st.carried) == (1, 0)
     m_after = t.manifest()["buckets"]
     assert m_after[str(b_rp)] == m_before[str(b_rp)], "untouched bucket rewritten"
     assert v1 < t.manifest()["version"]
@@ -227,13 +244,8 @@ def test_lake_merge_guard_and_pruning(spark, tmp_path):
 def test_lake_schema_evolution(spark, tmp_path):
     t = LakeTable(spark, str(tmp_path / "lk2"), n_buckets=2)
     t.init([("commit", "string"), ("content", "string")])
-    f = spark.createDataFrame(
-        [("r", "p", True, False, (0, 1, 0), 1, "a", "c", True, True)],
-        "repo string, path string, exists boolean, had_delete boolean, "
-        "last_offset struct<term:long,index:long,write_id:long>, n_events long, "
-        "commit_val string, content_val string, commit_set boolean, content_set boolean",
-    )
-    t.merge(f, "b1")
+    st = _merge(t, [(0, 1, 0, "c", "r", "p", {"commit": "a", "content": "c"})], "b1")
+    assert st.upserted == 1
     assert t.add_column("stars", "long")
     assert not t.add_column("stars", "long")  # refresh-only-if-changed
     assert t.read().collect()[0]["stars"] is None  # old files read as NULL
@@ -250,17 +262,10 @@ def test_lake_schema_evolution(spark, tmp_path):
     row = t.read().collect()[0]
     assert row["commit"] is None and row["commit_sha"] == "a"
     # writes after the rename still round-trip through physical names
-    f2 = spark.createDataFrame(
-        [("r2", "p2", True, False, (0, 2, 0), 1, "zz", "c2", True, True)],
-        "repo string, path string, exists boolean, had_delete boolean, "
-        "last_offset struct<term:long,index:long,write_id:long>, n_events long, "
-        "commit_sha_val string, content_val string, commit_sha_set boolean, "
-        "content_set boolean",
-    ).withColumn("stars_val", F.lit(None).cast("long")) \
-     .withColumn("stars_set", F.lit(False)) \
-     .withColumn("commit_val", F.lit(None).cast("string")) \
-     .withColumn("commit_set", F.lit(False))
-    t.merge(f2, "b2")
+    st = _merge(
+        t, [(0, 2, 0, "c", "r2", "p2", {"commit_sha": "zz", "content": "c2"})], "b2"
+    )
+    assert (st.upserted, st.deleted) == (1, 0)
     got = {(r["repo"], r["path"]): r for r in t.read().collect()}
     assert got[("r2", "p2")]["commit_sha"] == "zz"
     assert got[("r", "p")]["commit_sha"] == "a"
@@ -272,14 +277,10 @@ def test_lake_drop_column_metadata_only(spark, tmp_path):
     resurrect dropped data."""
     t = LakeTable(spark, str(tmp_path / "lk3"), n_buckets=2)
     t.init([("commit", "string"), ("lang", "string"), ("content", "string")])
-    f = spark.createDataFrame(
-        [("r", "p", True, False, (0, 1, 0), 1, "a", "py", "c", True, True, True)],
-        "repo string, path string, exists boolean, had_delete boolean, "
-        "last_offset struct<term:long,index:long,write_id:long>, n_events long, "
-        "commit_val string, lang_val string, content_val string, "
-        "commit_set boolean, lang_set boolean, content_set boolean",
+    st = _merge(
+        t, [(0, 1, 0, "c", "r", "p", {"commit": "a", "lang": "py", "content": "c"})], "b1"
     )
-    t.merge(f, "b1")
+    assert st.upserted == 1
     buckets_before = dict(t.manifest()["buckets"])
     assert t.drop_column("lang")
     assert not t.drop_column("lang")  # already gone
@@ -293,14 +294,10 @@ def test_lake_drop_column_metadata_only(spark, tmp_path):
     assert t.add_column("lang", "string")
     assert t.read().collect()[0]["lang"] is None
     # the next merge (copy-on-write) physically sheds the dropped column
-    f2 = f.withColumnRenamed("lang_val", "drop_me").drop("lang_set") \
-        .withColumn("lang_val", F.lit("go")).withColumn("lang_set", F.lit(True)) \
-        .drop("drop_me") \
-        .withColumn("path", F.lit("p2")) \
-        .withColumn("last_offset", F.struct(F.lit(0).cast("long").alias("term"),
-                                            F.lit(2).cast("long").alias("index"),
-                                            F.lit(0).cast("long").alias("write_id")))
-    t.merge(f2, "b2")
+    st = _merge(
+        t, [(0, 2, 0, "c", "r", "p2", {"commit": "a", "lang": "go", "content": "c"})], "b2"
+    )
+    assert (st.upserted, st.deleted) == (1, 0)
     got = {(r["repo"], r["path"]): r for r in t.read().collect()}
     assert got[("r", "p2")]["lang"] == "go"
     assert got[("r", "p")]["lang"] is None
