@@ -9,7 +9,8 @@ as an idiomatic PySpark engine:
   tuples modeled as a checkpoint DataFrame),
 - ordered replay of INSERT/UPDATE/DELETE/TOMBSTONE envelopes applied as
   key-partitioned MERGE upserts into a versioned lake table,
-- DDL schema-evolution events (column add/rename) applied between batches,
+- DDL schema-evolution events (column add/rename/drop) committed in the
+  same lake version as their window's rows,
 - explicit skew salting for hot keys, vectorized (Arrow) row transforms,
 - per-partition lineage + applied-op metrics,
 - resume-from-checkpoint with exactly-once end state (idempotent MERGE).

@@ -1,35 +1,13 @@
 """Scalar/vector function layer (P2 analogue + training-pipeline functions).
 
-Everything here is either a JVM built-in composition (preferred: whole-stage
-codegen) or an Arrow-batched pandas UDF (allowed by the north rule; never
-per-row Python).
+Everything here is a JVM built-in composition (whole-stage codegen, no
+UDF).
 """
 
 from __future__ import annotations
 
-import hashlib
-
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-
-# ---------------------------------------------------------------- hashing
-def content_sha256(col: Column | str, impl: str = "builtin") -> Column:
-    """sha256 hex of a string column — the BASELINE per-row invariant.
-
-    ``builtin`` uses JVM ``sha2`` (codegen, fastest); ``pandas`` is the
-    Arrow-vectorized equivalent (demonstrates the mandated UDF path)."""
-    c = F.col(col) if isinstance(col, str) else col
-    if impl == "builtin":
-        return F.sha2(c, 256)
-    return _sha256_pandas(c)
-
-
-@F.pandas_udf(T.StringType())
-def _sha256_pandas(s: pd.Series) -> pd.Series:
-    return s.map(lambda x: hashlib.sha256(x.encode()).hexdigest() if x is not None else None)
 
 
 def norm_tokens(col: Column | str) -> Column:
@@ -111,7 +89,3 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     nb = F.sqrt(F.aggregate(db, F.lit(0.0), lambda acc, x: acc + x * x))
     return dot / (na * nb)
 
-
-def l2_norm(a: Column) -> Column:
-    da = F.transform(a, lambda x: x.cast("double"))
-    return F.sqrt(F.aggregate(da, F.lit(0.0), lambda acc, x: acc + x * x))

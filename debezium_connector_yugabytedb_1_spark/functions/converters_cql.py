@@ -58,9 +58,6 @@ __all__ = [
     "cql_typed_decode",
 ]
 
-_MICROS_PER_DAY = 86_400_000_000
-_NANOS_PER_DAY = _MICROS_PER_DAY * 1_000
-
 
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col

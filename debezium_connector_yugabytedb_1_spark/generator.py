@@ -37,8 +37,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 SOURCE_TABLE = "public.repo_files"
-#: payload columns of the source table (BASELINE input_hint)
-PAYLOAD_COLS = ("commit", "lang", "content")
 
 _LANGS = ["py", "java", "rs", "go", "md"]
 _LANG_NAMES = ["python", "java", "rust", "go", "markdown"]

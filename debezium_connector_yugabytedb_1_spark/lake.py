@@ -23,12 +23,12 @@ pipeline.
 
 Scale design: the table is hash-bucketed on the merge key (xxhash64(repo,
 path) % n_buckets). A MERGE reads **only the buckets the batch touches**
-(partition pruning by manifest lookup, not file scan), joins target x batch
-(AQE picks broadcast when the batch is small), and rewrites only those
-buckets. Untouched buckets are carried forward by manifest pointer — zero
-data movement, exactly Iceberg copy-on-write. At 100 TB with n_buckets
-sized so a bucket ~ a few GB, per-batch work is proportional to touched
-data, not table size.
+(partition pruning by manifest lookup, not file scan), unions them with
+the batch's events, folds the union in ONE aggregation (no join), and
+rewrites only those buckets. Untouched buckets are carried forward by
+manifest pointer — zero data movement, exactly Iceberg copy-on-write. At
+100 TB with n_buckets sized so a bucket ~ a few GB, per-batch work is
+proportional to touched data, not table size.
 
 Reference parity: the merge's monotonic offset guard re-creates the
 connector's "never move the checkpoint backwards" rule
@@ -53,7 +53,6 @@ from pyspark.sql import functions as F
 from .operators._store import atomic_write
 
 KEY_COLS = ("repo", "path")
-_OFF_FIELDS = ("term", "index", "write_id")
 #: hidden bookkeeping columns stored per row. ``_deleted`` rows are
 #: tombstones: a deleted key keeps (key, last offset, _deleted=true) so a
 #: LATE-ARRIVING lower-offset upsert (out-of-order transport, e.g. the
@@ -426,18 +425,21 @@ class LakeTable:
         single aggregation job:
 
             scan events + scan touched target buckets (union, map side)
-              → repartition by key (ONE raw shuffle; no map-side partial
-                agg — the WAL arrives in shuffled key order, so partial
-                aggregation was measured to reduce rows <20% while paying
-                a full extra sort)
-              → complete-mode fold per key (delete barriers, per-column
-                LWW, monotonic guard all fall out of offset comparison —
+              → ONE exchange, hashpartitioning(bucket, _salt) — no
+                aggregate below it (the WAL arrives in shuffled key order,
+                so map-side partial aggregation was measured to reduce
+                rows <20% while paying a full extra sort)
+              → the fold per key, a partial + final aggregate pair that
+                both run above the exchange, whose partitioning already
+                clusters every key (delete barriers, per-column LWW,
+                monotonic guard all fall out of offset comparison —
                 stale/redelivered events simply lose the max())
-              → tiny exchange on bucket → one file per touched bucket.
+              → partitionBy("bucket") write: no second exchange, no join.
 
-        vs. a separate fold followed by a MERGE join this saves one
-        aggregation, one exchange, and one sort — per-batch fixed cost is
-        what caps N→4N scaling efficiency (Amdahl).
+        ``test_merge_events_single_aggregation_plan`` pins that plan. A
+        separate fold followed by a MERGE join would cost one more
+        aggregation, exchange and sort — per-batch fixed cost is what caps
+        N→4N scaling efficiency (Amdahl).
 
         ``content_sha256`` (the per-row invariant) rides along as a column
         only target rows set; it is reused verbatim whenever the winning
@@ -497,32 +499,19 @@ class LakeTable:
         # _limits). This narrows both the shuffle row and every
         # max(struct) sort buffer from 3 longs to 1.
         pack = _packed_offset(F.col("term"), F.col("index"), F.col("write_id"))
-        # 8-byte key hash leading the grouping columns: the complete-mode
-        # fold is a SortAggregate over (bucket, salt, key...), and putting
-        # _kh before the (repo, path) strings lets every sort comparison
-        # short-circuit on a long instead of comparing two strings
-        # (equal-hash ties fall through to the real key, so grouping is
-        # unchanged — _kh is a pure function of the key). Regime-adaptive
-        # (override with $SPARK_GRAFT_KEY_PREFIX=on|off): the prefix trades
-        # +8 bytes of shuffle row for cheaper sort compares — a win when
-        # the fold is sort-CPU-bound (lz4 / low parallelism, measured
-        # +7-12% at 1-8 cores), a loss when the shuffle codec is zstd and
-        # compression CPU dominates the row cost (measured ~4% at 32
-        # threads). Mirrors the adaptive shuffle-codec choice in session.py.
-        kp = os.environ.get("SPARK_GRAFT_KEY_PREFIX", "auto")
-        if kp == "auto":
-            use_kh = (
-                self.spark.conf.get("spark.io.compression.codec", "lz4") != "zstd"
-            )
-        else:
-            use_kh = kp == "on"
-        kh_cols = [F.xxhash64(*self.key_cols).alias("_kh")] if use_kh else []
-        kh_group = ["_kh"] if use_kh else []
+        # 8-byte key hash leading the grouping columns: the fold is a
+        # SortAggregate over (bucket, salt, key...), and putting _kh before
+        # the (repo, path) strings lets every sort comparison short-circuit
+        # on a long instead of comparing two strings (equal-hash ties fall
+        # through to the real key, so grouping is unchanged — _kh is a pure
+        # function of the key). +8 bytes of shuffle row for cheaper sort
+        # compares: measured +7-12% at 1-8 cores with the lz4 codec.
+        kh = F.xxhash64(*self.key_cols).alias("_kh")
         ev = dml.select(
             *key,
             bkt.alias("bucket"),
             salt.alias("_salt"),
-            *kh_cols,
+            kh,
             "op",
             pack.alias("_off"),
             *[F.col(f"after.{c}").alias(f"_v_{c}") for c in cols],
@@ -543,7 +532,7 @@ class LakeTable:
             *key,
             bkt.alias("bucket"),
             salt.alias("_salt"),
-            *kh_cols,
+            kh,
             F.when(t_dead, F.lit("d")).otherwise(F.lit("r")).alias("op"),
             t_pack.alias("_off"),
             *[F.col(c).alias(f"_v_{c}") for c in cols],
@@ -579,7 +568,7 @@ class LakeTable:
             )
         g = (
             u.repartition(self.n_buckets * salt_width, "bucket", "_salt")
-            .groupBy("bucket", "_salt", *kh_group, *key)
+            .groupBy("bucket", "_salt", "_kh", *key)
             .agg(*aggs)
         )
 

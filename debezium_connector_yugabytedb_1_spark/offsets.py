@@ -32,9 +32,6 @@ from pyspark.sql import functions as F
 #: Ordered offset component columns (comparison priority order).
 OFFSET_COLS = ("term", "index", "write_id")
 
-#: Offset column names carried on every event row.
-EVENT_OFFSET_COLS = OFFSET_COLS + ("commit_time", "record_time")
-
 
 def offset_struct(prefix: str = "") -> Column:
     """Offset as one orderable struct column.
@@ -54,14 +51,3 @@ def offset_lit(term: int, index: int, write_id: int = 0) -> Column:
         F.lit(write_id).cast("long").alias("write_id"),
     )
 
-
-def offset_serialize(prefix: str = "") -> Column:
-    """Serialized string form ``term:index:write_id`` (lineage-friendly;
-    analogue of ``OpId.toSerString``, ``OpId.java:95-97``)."""
-    return F.concat_ws(":", *[F.col(prefix + c).cast("string") for c in OFFSET_COLS])
-
-
-def offset_gt(prefix: str, other: Column) -> Column:
-    """``offset(prefix) > other`` — the resume filter predicate
-    (analogue of ``OpId.isLesserThanOrEqualTo``, ``OpId.java:180-195``)."""
-    return offset_struct(prefix) > other

@@ -14,13 +14,15 @@ listing per committed batch — O(#batches) metadata calls — selecting only
 the ``<key>=<v>`` dirs whose ``v`` is wanted, so bytes read are
 proportional to matching partitions, with no planner cooperation
 required. ``compact()`` implementations keep #batches small on
-long-running ingest.
+long-running ingest: each rewrites the committed batches into one new slot
+and hands it to ``_commit_compacted``.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 
@@ -99,6 +101,17 @@ class BatchStore:
         until the manifest commit lands, so a retried add overwrites its
         own orphan."""
         return max(self._manifest(), default=-1) + 1
+
+    def _commit_compacted(self, n: int, *roots: str) -> None:
+        """Publish slot ``n`` as the store's only batch, then delete every
+        superseded ``batch=<b>`` dir under each of ``roots``. The manifest
+        swap is the commit point: a crash before it leaves the old batches
+        live, a crash after it leaves only dirs no reader consults."""
+        superseded = [b for b in self._manifest() if b != n]
+        self._commit_manifest([n])
+        for root in roots:
+            for b in superseded:
+                shutil.rmtree(os.path.join(root, f"batch={b}"), ignore_errors=True)
 
     def _pruned_read(
         self, root: str, key: str, wanted: set[int]

@@ -227,14 +227,6 @@ def cell_set(column_name: str) -> Column:
     return F.coalesce(F.array_contains(F.col("changed"), column_name), F.lit(False))
 
 
-def cell_struct(column_name: str) -> Column:
-    """P7 — explicit ``{value, set}`` struct form (wire-compatible shape with
-    the reference's cell schema, ``YBTableSchemaBuilder.java:436-449``)."""
-    return F.struct(
-        F.col(f"after.{column_name}").alias("value"), cell_set(column_name).alias("set")
-    )
-
-
 def extract_new_record_state(
     decoded: DataFrame,
     columns=TABLE_COLUMNS,

@@ -241,20 +241,6 @@ def _buckets_from_sigs(per_doc: DataFrame, n_hashes: int, bands: int) -> DataFra
     return per_doc.select("doc_id", F.posexplode(band_buckets).alias("band", "bucket"))
 
 
-
-
-def minhash_signatures(docs: DataFrame, text_col: str = "text", k: int = 3,
-                       n_hashes: int = 32) -> DataFrame:
-    """MinHash signature per doc: sig[i] = min over shingles of
-    xxhash64(shingle, seed=i). Deterministic, pure JVM (explode + groupBy
-    with n_hashes min-aggregates, all map-side combinable)."""
-    sh = shingle_index(docs, text_col, k)
-    aggs = [
-        F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"h{i}") for i in range(n_hashes)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -459,9 +445,9 @@ def resolve_groups(
 ) -> DataFrame:
     """Resolve near-duplicate PAIRS into duplicate GROUPS and elect
     survivors — the last step of the dedup story that the pair operators
-    (``ngram_jaccard_pairs`` / ``minhash_lsh_pairs`` / ``simhash_pairs`` /
-    ``embedding_near_dup_pairs``) leave open: transitive chains (A~B, B~C
-    but A≁C) must land in ONE group with ONE survivor.
+    (``ngram_jaccard_pairs`` / ``minhash_lsh_pairs`` / ``simhash_pairs``)
+    leave open: transitive chains (A~B, B~C but A≁C) must land in ONE
+    group with ONE survivor.
 
     Distributed connected components by iterative min-label propagation
     with pointer jumping:
@@ -709,9 +695,6 @@ class ExactDedupIndex(BatchStore):
         """Fold every committed batch into one (listing stays O(n_parts) on
         long-running ingest); crash-safe like ``add``. Returns #batches
         merged."""
-        import os
-        import shutil
-
         batches = self._manifest()
         if len(batches) <= 1:
             return 0
@@ -719,11 +702,7 @@ class ExactDedupIndex(BatchStore):
             self._hashes, "hkey", set(range(self.n_parts))
         )
         if stored is None:  # committed batches with zero data rows
-            self._commit_manifest([max(batches)])
-            for b in batches[:-1]:
-                shutil.rmtree(
-                    os.path.join(self._hashes, f"batch={b}"), ignore_errors=True
-                )
+            self._commit_compacted(max(batches), self._hashes)
             return len(batches)
         n = self._next_slot()
         # hashes are add-once (only unseen ones are written), so the fold
@@ -732,11 +711,7 @@ class ExactDedupIndex(BatchStore):
             stored.select("text_md5", "first_id").withColumn("hkey", self._hkey()),
             self._hashes, "hkey", n,
         )
-        self._commit_manifest([n])
-        for b in batches:
-            shutil.rmtree(
-                os.path.join(self._hashes, f"batch={b}"), ignore_errors=True
-            )
+        self._commit_compacted(n, self._hashes)
         return len(batches)
 
 
@@ -1028,7 +1003,6 @@ class MinHashIndex(BatchStore):
         dirs are deleted after, and a crash before the swap leaves an
         orphan slot the next writer overwrites. Returns #batches merged."""
         import os
-        import shutil
 
         batches = self._manifest()
         if len(batches) <= 1:
@@ -1044,8 +1018,5 @@ class MinHashIndex(BatchStore):
             key = "pkey" if root == self._buckets else "skey"
             cols = ["doc_id", "band", "bucket"] if key == "pkey" else ["doc_id", "sh"]
             write_batch(df.select(*cols, key), root, key, n)
-        self._commit_manifest([n])
-        for root in (self._buckets, self._sets):
-            for b in batches:
-                shutil.rmtree(os.path.join(root, f"batch={b}"), ignore_errors=True)
+        self._commit_compacted(n, self._buckets, self._sets)
         return len(batches)

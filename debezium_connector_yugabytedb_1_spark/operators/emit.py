@@ -57,23 +57,6 @@ def split_pk_updates(decoded: DataFrame) -> DataFrame:
     return scaled.unionByName(deletes).unionByName(creates)
 
 
-def add_tombstones(decoded: DataFrame, *, tombstones_on_delete: bool = True) -> DataFrame:
-    """P5 — for every delete, optionally emit a trailing tombstone record
-    (null after-image) at ``write_id + 1``
-    (``YugabyteDBEventDispatcher.java:216-228``)."""
-    if not tombstones_on_delete:
-        return decoded
-    base = decoded.withColumn("write_id", F.col("write_id") * 2)
-    tomb = (
-        decoded.where(F.col("op") == "d")
-        .withColumn("op", F.lit("t"))
-        .withColumn("write_id", F.col("write_id") * 2 + 1)
-        .withColumn("after", F.lit(None).cast(decoded.schema["after"].dataType))
-        .withColumn("changed", F.lit(None).cast("array<string>"))
-    )
-    return base.unionByName(tomb)
-
-
 def source_block(server: str = "ybcdc") -> "F.Column":
     """Source-metadata struct column (``SourceInfo.java:29-105``): lineage
     block attached to every emitted record. ``ht_micros`` mirrors the
@@ -86,21 +69,6 @@ def source_block(server: str = "ybcdc") -> "F.Column":
         F.col("commit_time").alias("commit_time"),
         F.col("record_time").alias("record_time"),
         F.shiftright(F.col("commit_time"), 12).alias("ht_micros"),
-    )
-
-
-def emit_envelopes(decoded: DataFrame) -> DataFrame:
-    """P3/P5 — final Debezium-shaped envelope projection: key struct, op,
-    after, source. (``before`` carried only in before-image modes, X1.)"""
-    return decoded.select(
-        F.struct("repo", "path").alias("key"),
-        F.col("op"),
-        F.col("after"),
-        F.col("changed"),
-        source_block().alias("source"),
-        F.col("term"),
-        F.col("index"),
-        F.col("write_id"),
     )
 
 

@@ -37,11 +37,6 @@ def drop_safepoints(df: DataFrame) -> DataFrame:
     return df.where(F.col("op") != "SAFEPOINT")
 
 
-def drop_noops(df: DataFrame) -> DataFrame:
-    """F4 — NOOP records are never dispatched."""
-    return df.where(F.col("op") != "NOOP")
-
-
 def table_filter(
     df: DataFrame,
     include: str | None = None,

@@ -247,41 +247,6 @@ def ivf_topk(
     )
 
 
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 12,
-    n_tables: int = 6,
-    *,
-    dim: int,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (a < b) via LSH candidates +
-    exact verify. ``dim`` is required — see ``lsh_signatures``."""
-    sig = lsh_signatures(df, vec_col, id_col, n_planes, n_tables, dim=dim)
-    a, b = sig.alias("a"), sig.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.table") == F.col("b.table"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"))
-        .distinct()
-    )
-    va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("cosine", cosine_similarity(F.col("va"), F.col("vb")))
-        .where(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
-
-
 class IvfIndex(BatchStore):
     """Persisted IVF-Flat index — the ANN complement of ``MinHashIndex``:
     a training-data pipeline embeds documents continuously, and re-running
@@ -432,7 +397,7 @@ class IvfIndex(BatchStore):
             out_id="query_id",
         ).localCheckpoint()
         # O(Q * nprobe) driver rows: queries are small by regime (ANN serves
-        # point lookups; bulk all-pairs work is embedding_near_dup_pairs)
+        # point lookups; bulk all-pairs work is a cosine self-join)
         probed = {r["list_id"] for r in q_probe.select("list_id").distinct().collect()}
         stored, nread, ntotal = self._pruned_read(
             self._vectors, "lkey", {l % self.n_parts for l in probed}
@@ -489,9 +454,6 @@ class IvfIndex(BatchStore):
     def compact(self) -> int:
         """Fold every committed batch into one (listing stays O(n_parts) on
         long-running ingest). Returns the new batch id."""
-        import os
-        import shutil
-
         old = self._manifest()
         if not old:
             return -1
@@ -523,7 +485,5 @@ class IvfIndex(BatchStore):
             ),
             self._vectors, "lkey", n,
         )
-        self._commit_manifest([n])
-        for o in old:
-            shutil.rmtree(os.path.join(self._vectors, f"batch={o}"), ignore_errors=True)
+        self._commit_compacted(n, self._vectors)
         return n

@@ -1,16 +1,16 @@
-"""Sources: readers for the CDC event log (batch + streaming).
+"""Sources: the CDC event log's wire schema and its streaming reader.
 
 The event log is parquet (the sandbox stand-in for the gRPC GetChanges
-stream). Readers push offset-range predicates into the scan — the analogue
-of passing ``fromOpId`` to GetChangesCDCSDK
-(``YugabyteDBStreamingChangeEventSource.java:530-535``): Spark never reads
-a row the cursor already passed (parquet row-group stats prune files).
+stream). The batch pipeline (``streaming.pipeline``) pushes index-range
+predicates into its scan — the analogue of passing ``fromOpId`` to
+GetChangesCDCSDK (``YugabyteDBStreamingChangeEventSource.java:530-535``):
+Spark never reads a row the cursor already passed (parquet row-group
+stats prune files).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 EVENT_SCHEMA = T.StructType(
@@ -34,18 +34,6 @@ EVENT_SCHEMA = T.StructType(
         T.StructField("payload", T.StringType()),
     ]
 )
-
-
-def read_events(
-    spark: SparkSession, path: str, lo: int | None = None, hi: int | None = None
-) -> DataFrame:
-    """Batch read of the event log with index-range pushdown."""
-    df = spark.read.parquet(path)
-    if lo is not None:
-        df = df.where(F.col("index") >= lo)
-    if hi is not None:
-        df = df.where(F.col("index") < hi)
-    return df
 
 
 def read_event_stream(

@@ -19,8 +19,10 @@ Spark-first execution per poll window:
         → filters (pushed to scan)
         → from_json decode (codegen), per schema epoch
         → PK-update split (union)
-        → hash-agg fold per (repo, path)  [map-side partial agg]
-        → bucket-pruned copy-on-write MERGE, ONE per window
+        → ∪ the touched buckets' target rows (bucket-pruned read)
+        → ONE exchange on (bucket, _salt); the LWW fold per key runs
+          above it (no map-side partial aggregate, no join)
+        → copy-on-write rewrite of the touched buckets, ONE per window
       → lineage append (pyarrow) + meter fold, driver-side, no Spark job
     → checkpoint commit (pyarrow, no Spark job)
 

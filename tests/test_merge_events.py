@@ -4,10 +4,12 @@ state, per-window stats, the sha256 invariant, packed-offset round trips,
 and redelivery/stale absorption."""
 
 import hashlib
+import re
 
 import pyspark.sql.functions as F
 import pytest
 
+from debezium_connector_yugabytedb_1_spark import lake
 from debezium_connector_yugabytedb_1_spark.generator import generate_events
 from debezium_connector_yugabytedb_1_spark.lake import LakeTable, bucket_expr
 from debezium_connector_yugabytedb_1_spark.operators.decode import decode_envelope
@@ -67,21 +69,6 @@ def test_merge_events_matches_oracle_per_window(spark, tmp_path):
     assert engine_state(t) == final
 
 
-def test_merge_events_key_prefix_modes_equivalent(spark, tmp_path, monkeypatch):
-    """The _kh sort-prefix is a pure perf knob (regime-adaptive by shuffle
-    codec): forced on and forced off must produce identical table state."""
-    ev = generate_events(spark, 4000)
-    snaps = []
-    for mode in ("on", "off"):
-        monkeypatch.setenv("SPARK_GRAFT_KEY_PREFIX", mode)
-        t = LakeTable(spark, str(tmp_path / f"kp_{mode}"), n_buckets=4)
-        t.init(COLS)
-        t.merge_events(_dml(ev.where(F.col("index") < 2000)), "b0")
-        t.merge_events(_dml(ev.where(F.col("index") >= 2000)), "b1")
-        snaps.append(_snap(t))
-    assert snaps[0] == snaps[1]
-
-
 def test_merge_events_sha_reuse_and_invariant(spark, tmp_path):
     """The sha256 column must equal sha256(content) even when the fused path
     reuses the stored digest for carried/unchanged rows."""
@@ -113,42 +100,34 @@ def test_merge_events_batch_id_idempotent(spark, tmp_path):
     assert _snap(t) == before
 
 
-def test_merge_events_single_aggregation_plan(spark, tmp_path):
-    """The fused path must plan exactly ONE aggregation (the fold IS the
-    merge) and no sort-merge join."""
-    ev = generate_events(spark, 500)
+def test_merge_events_single_aggregation_plan(spark, tmp_path, monkeypatch):
+    """The DataFrame merge_events writes, on a lake that already holds data
+    (so the target read is in the plan), has ONE exchange — the
+    (bucket, _salt) repartition — and ONE aggregation above it: the fold
+    is the merge, with no aggregate below the exchange and no join."""
+    ev = generate_events(spark, 600)
     t = LakeTable(spark, str(tmp_path / "lake"), n_buckets=4)
     t.init(COLS)
-    t.merge_events(_dml(ev), "b0")
-    # rebuild the merged plan the way merge_events does, via a probe batch
-    from debezium_connector_yugabytedb_1_spark.lake import bucket_expr
-
-    dml = _dml(ev)
-    cols = [n for n, _ in COLS]
-    from debezium_connector_yugabytedb_1_spark.operators.decode import cell_set
-
-    evf = dml.select(
-        "repo", "path", "op", "term", "index", "write_id",
-        *[F.col(f"after.{c}").alias(f"_v_{c}") for c in cols],
-        *[cell_set(c).alias(f"_set_{c}") for c in cols],
+    t.merge_events(_dml(ev.where(F.col("index") < 300)), "b0")
+    written = []
+    write = lake._write_version
+    monkeypatch.setattr(
+        lake, "_write_version", lambda df, out: (written.append(df), write(df, out))
     )
-    tev = t.read(with_meta=True).select(
-        "repo", "path", F.lit("r").alias("op"),
-        F.col("_last_term").alias("term"),
-        F.col("_last_index").alias("index"),
-        F.col("_last_write_id").alias("write_id"),
-        *[F.col(c).alias(f"_v_{c}") for c in cols],
-        *[F.lit(True).alias(f"_set_{c}") for c in cols],
-        F.col("content_sha256").alias("_sha"),
-        F.lit(True).alias("_is_target"),
-    )
-    u = evf.unionByName(tev, allowMissingColumns=True)
-    g = u.repartition("repo", "path").groupBy("repo", "path").agg(
-        F.max(F.struct("term", "index", "write_id")).alias("_last_off")
-    )
-    plan = g._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Aggregate") <= 2  # one agg node (name appears per line)
-    assert "SortMergeJoin" not in plan
+    t.merge_events(_dml(ev.where(F.col("index") >= 300)), "b1")
+    assert len(written) == 1
+    plan = written[0]._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    exchanges = [i for i, ln in enumerate(lines) if "Exchange" in ln]
+    assert len(exchanges) == 1, plan
+    assert re.search(
+        r"Exchange hashpartitioning\(bucket#\d+L?, _salt#\d+L?, \d+\)", lines[exchanges[0]]
+    ), plan
+    aggs = [i for i, ln in enumerate(lines) if "Aggregate(" in ln]
+    assert len(aggs) == 2 and all(i < exchanges[0] for i in aggs), plan
+    assert "partial_max(" in lines[aggs[1]] and "partial_" not in lines[aggs[0]], plan
+    assert "FileScan parquet" in plan  # the target buckets are read
+    assert "SortMergeJoin" not in plan and "BroadcastExchange" not in plan
 
 
 def test_out_of_order_delete_no_resurrection(spark, tmp_path):
