@@ -39,15 +39,3 @@ def offset_struct(prefix: str = "") -> Column:
     ``prefix`` lets callers point at qualified columns (e.g. ``"s."``).
     """
     return F.struct(*[F.col(prefix + c).alias(c) for c in OFFSET_COLS])
-
-
-def offset_lit(term: int, index: int, write_id: int = 0) -> Column:
-    """A literal offset struct (e.g. the streaming start LSN ``(0,0,0)``,
-    mirroring ``YugabyteDBOffsetContext.streamingStartLsn`` at
-    ``YugabyteDBOffsetContext.java:147-149``)."""
-    return F.struct(
-        F.lit(term).cast("long").alias("term"),
-        F.lit(index).cast("long").alias("index"),
-        F.lit(write_id).cast("long").alias("write_id"),
-    )
-

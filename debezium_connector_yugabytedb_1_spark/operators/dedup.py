@@ -92,23 +92,12 @@ def dedup_exact(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 # ---------------------------------------------------------------- jaccard
-def shingle_index(docs: DataFrame, text_col: str = "text", k: int = 3,
-                  max_df: int | None = None) -> DataFrame:
-    """Inverted index doc → distinct k-shingles, optionally dropping
-    shingles with document frequency > max_df (join-explosion guard)."""
-    sh = _spread(docs).select("doc_id", F.explode(word_shingles(text_col, k)).alias("shingle"))
-    if max_df is not None:
-        keep = sh.groupBy("shingle").count().where(F.col("count") <= max_df)
-        sh = sh.join(F.broadcast(keep.select("shingle")), "shingle")
-    return sh
-
-
 def ngram_jaccard_pairs(
     docs: DataFrame,
     text_col: str = "text",
     k: int = 3,
     threshold: float = 0.5,
-    max_df: int | None = 256,
+    max_df: int = 256,
 ) -> DataFrame:
     """All pairs (a < b) with shingle-set Jaccard >= threshold.
 
@@ -116,67 +105,50 @@ def ngram_jaccard_pairs(
     counts over the kept shingles; J = inter / (|A| + |B| - inter). Integer
     arithmetic until the final comparison (exact, oracle-replicable).
 
-    Plan shape (with max_df, the default): shingles computed ONCE, one
-    groupBy(shingle) builds posting lists, candidate pairs are generated
-    expression-side from each list (bounded by max_df^2/2 per shingle) — no
-    self-join, no second pass over the text. ``max_df=None`` disables the
-    cap and falls back to the classic inverted-index self-join, whose hot
-    posting lists are O(#docs) — an explicit opt-in for small corpora, never
-    the default (the self-join explodes at scale)."""
+    Plan shape: shingles computed ONCE, one groupBy(shingle) builds posting
+    lists, shingles in more than ``max_df`` documents are dropped, and
+    candidate pairs are generated expression-side from each list (bounded
+    by max_df^2/2 per shingle) — no self-join, no second pass over the
+    text."""
     sh = _spread(docs).select("doc_id", F.explode(word_shingles(text_col, k)).alias("shingle"))
-    if max_df is not None:
-        # one expensive shingle pass, materialized: postings = shingle →
-        # sorted doc list (df-capped); both pair-gen and sizes derive from
-        # it. (Measured and rejected: an explicit repartition("shingle")
-        # to skip the map-side partial collect_set — Spark still plans
-        # partial+final back-to-back in the post-exchange stage, so the
-        # extra exchange only added cost: 2.5s -> 4-5s at sf0.1.)
-        postings = (
-            sh.groupBy("shingle")
-            .agg(F.collect_set("doc_id").alias("docs"))
-            .where(F.size("docs") <= max_df)
-            .select(F.array_sort("docs").alias("docs"))
-            .localCheckpoint()
-        )
-        pair = F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("docs"),
-                    lambda x, i: F.transform(
-                        F.slice(
-                            F.col("docs"), (i + 2).cast("int"),
-                            (F.size("docs") - i - 1).cast("int"),
-                        ),
-                        lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
+    # one expensive shingle pass, materialized: postings = shingle →
+    # sorted doc list (df-capped); both pair-gen and sizes derive from
+    # it. (Measured and rejected: an explicit repartition("shingle")
+    # to skip the map-side partial collect_set — Spark still plans
+    # partial+final back-to-back in the post-exchange stage, so the
+    # extra exchange only added cost: 2.5s -> 4-5s at sf0.1.)
+    postings = (
+        sh.groupBy("shingle")
+        .agg(F.collect_set("doc_id").alias("docs"))
+        .where(F.size("docs") <= max_df)
+        .select(F.array_sort("docs").alias("docs"))
+        .localCheckpoint()
+    )
+    pair = F.explode(
+        F.flatten(
+            F.transform(
+                F.col("docs"),
+                lambda x, i: F.transform(
+                    F.slice(
+                        F.col("docs"), (i + 2).cast("int"),
+                        (F.size("docs") - i - 1).cast("int"),
                     ),
-                )
+                    lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
+                ),
             )
         )
-        inter = (
-            postings.where(F.size("docs") >= 2)
-            .select(pair.alias("p"))
-            .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-        sizes = (
-            postings.select(F.explode("docs").alias("doc_id"))
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_sh"))
-        )
-    else:
-        sh = shingle_index(docs, text_col, k, max_df)
-        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-        a = sh.alias("a")
-        b = sh.alias("b")
-        inter = (
-            a.join(
-                b,
-                (F.col("a.shingle") == F.col("b.shingle"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
+    )
+    inter = (
+        postings.where(F.size("docs") >= 2)
+        .select(pair.alias("p"))
+        .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+    sizes = (
+        postings.select(F.explode("docs").alias("doc_id"))
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("n_sh"))
+    )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
     # pin the join strategy: ``sizes`` is one (doc_id, count) row per doc —

@@ -13,10 +13,12 @@ min/max index, newest offset in the unsigned HybridTime domain, last event,
 last COMMIT txn, captured tables). The reference keeps its meters as
 on-heap counters that cost the poll loop nothing; here the partials are
 extra aggregate columns of an aggregation that already runs (the
-pipeline's window-stats pass), so lineage rows (``lineage_rows``, appended
-with pyarrow by ``MetricsSink``) and meters (``TaskMetrics.fold``) cost no
-Spark job of their own. ``batch_metrics`` is the DataFrame form of the same
-lineage rows, kept as the reference tests compare against.
+window-stats pass both front ends run, ``streaming.pipeline.window_stats``),
+so lineage rows (``lineage_rows``, appended with pyarrow by
+``MetricsSink``) and meters (``TaskMetrics.fold``) cost no Spark job of
+their own. ``batch_metrics`` and ``TaskMetrics.update`` are the DataFrame
+forms of the same lineage rows and meter ticks, kept as the references
+tests compare against.
 """
 
 from __future__ import annotations
@@ -341,10 +343,12 @@ class TaskMetrics:
 
     Spark-first shape: instead of on-heap meters ticked per record, each
     batch contributes its per-``(tablet_id, op)`` ``MeterPartial`` rows,
-    which ``fold`` adds into driver-side counters. ``CdcPipeline`` computes
-    the partials inside its window-stats pass, so a pipeline batch ticks
-    the meters at no Spark job; ``update`` takes a DataFrame, aggregates
-    its partials (one job) and runs the same fold. ``snapshot()`` returns a
+    which ``fold`` adds into driver-side counters. Both front ends
+    (``CdcPipeline`` and ``stream.apply_batch``) compute the partials
+    inside their window-stats pass, so a batch ticks the meters at no Spark
+    job. ``update`` takes a DataFrame, aggregates its partials (one job)
+    and runs the same fold: the DataFrame reference tests compare the
+    pass-fed meters against. ``snapshot()`` returns a
     dict keyed by the MXBean attribute names so a dashboard reads the same
     gauges a JMX console would. Driver state is O(#tables) + O(#tablets) —
     the same bound the reference holds on-heap.

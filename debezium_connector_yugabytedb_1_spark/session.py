@@ -20,11 +20,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or get) a SparkSession tuned for the CDC ingest engine.
 
-    ``cores`` defaults to $SPARK_GRAFT_CPUS or 32. ``shuffle_partitions``
+    ``cores`` defaults to $SPARK_GRAFT_CPUS, else the host's CPU count
+    (``os.cpu_count()``): more local threads than cores only multiply the
+    write tasks ``merge_events`` sizes from them. ``shuffle_partitions``
     defaults to 2x cores (good partial-agg fan-in locally; on a real cluster
     you would size this to total executor cores x 2-3).
     """
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     shuffle = shuffle_partitions or 2 * cores
     # make this package importable in forked Python workers regardless of the
     # caller's cwd (cluster deployments ship it via spark-submit --py-files)
@@ -81,20 +83,14 @@ def get_spark(
         # fewer, larger shuffle-write flushes (default 32k): measured ~4%
         # off the decode+shuffle stage at higher core counts, neutral at low
         .config("spark.shuffle.file.buffer", "1m")
-        # Shuffle codec by parallelism regime (override with
-        # $SPARK_GRAFT_SHUFFLE_CODEC): at <=8 local threads the replay is
-        # CPU-bound and lz4's cheaper (de)compression wins (~4%); at >=16
-        # threads the shared memory subsystem saturates and zstd's smaller
+        # Shuffle codec by parallelism regime: at <=8 local threads the
+        # replay is CPU-bound and lz4's cheaper (de)compression wins (~4%); at
+        # >=16 threads the shared memory subsystem saturates and zstd's smaller
         # shuffle blocks nearly double 32-thread throughput (measured
         # 166k -> 314k ev/s same-window). The cluster analogue is enabling
         # zstd shuffle when the network/IO fabric, not CPU, is the
         # bottleneck — same knob, same reasoning.
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get(
-                "SPARK_GRAFT_SHUFFLE_CODEC", "zstd" if cores >= 16 else "lz4"
-            ),
-        )
+        .config("spark.io.compression.codec", "zstd" if cores >= 16 else "lz4")
     )
     if master.startswith("local-cluster"):
         # separate executor JVMs: give each its memory + GC pool sized to

@@ -13,9 +13,10 @@ Spark-first execution per poll window:
     window stats, one aggregation per (tablet_id, op)  [1-slot lookahead
       thread: runs while the previous window MERGEs]
       → ack offsets, row count, touched buckets, DDL markers, table set
-      → lineage + meter partials of the rows the resume filter will keep
+      → lineage + meter partials of the rows the resume predicate keeps
     then the whole window (one pass, all JVM):
-      parquet scan (index-range + checkpoint pushdown)
+      parquet scan (index-range pushdown)
+        → resume predicate (a literal-map lookup, no join)
         → filters (pushed to scan)
         → from_json decode (codegen), per schema epoch
         → PK-update split (union)
@@ -49,7 +50,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..lake import LakeTable, MergeStats
@@ -58,7 +59,6 @@ from ..offsets import offset_struct
 from ..operators.checkpoint import (
     CheckpointStore,
     merge_offset_rows,
-    resume_filter,
     resume_predicate,
 )
 from ..operators.decode import decode_envelope, realign
@@ -118,6 +118,96 @@ def merge_window(
         manifest=m,
     )
     return mstats, [] if mstats.skipped else applied
+
+
+def window_stats(window: DataFrame, n_buckets: int, metered: Column | None) -> dict:
+    """ONE aggregation job per poll window, grouped by ``(tablet_id,
+    op)``, yields everything the driver needs: per-tablet ack offsets
+    over every row, safepoints and NOOPs included, so idle tablets advance
+    (O2, ``YugabyteDBStreamingChangeEventSource.java:788-797``), row
+    counts, the touched-bucket set (incl. PK-update old keys,
+    decoded inline for the rare pku rows), the DDL markers, the table
+    set, and — when ``metered`` is given — the ``MeterPartial`` rows of
+    the rows where it holds. ``CdcPipeline`` meters the rows its apply
+    keeps: no DDL markers, and only rows its ``resume_predicate`` passes;
+    ``apply_batch`` meters every row of the trigger. A DDL window adds a
+    point lookup of its marker rows' payloads. Collapsing these scans
+    keeps the per-batch serial fraction small enough for the N→4N
+    scaling criterion (Amdahl: every extra driver-synchronous job is
+    pure serial time), and the pipeline runs it in its lookahead thread,
+    behind the previous window's MERGE."""
+    import json
+
+    from ..lake import bucket_expr
+
+    bucket_main = F.when(
+        F.col("op").isin(*DML_OPS, "pku"), bucket_expr(n_buckets, ("repo", "path"))
+    )
+    # PK updates carry the old key top-level (record-key block), so this
+    # pass never opens the payload blob at all: with column pruning the
+    # scan reads only the narrow key/offset columns — the dominant-size
+    # payload column stays on disk (DDL payloads, if any, come from the
+    # DDL window's point lookup below; DDLs are rare by construction).
+    # A cross-repo PK update carries old_repo in the key block; when
+    # absent (same-repo rename) the repo is shared.
+    old_key_hash = F.xxhash64(
+        F.coalesce(F.col("old_repo"), F.col("repo")), F.col("old_path")
+    )
+    bucket_old = F.when(
+        F.col("op") == "pku", F.pmod(old_key_hash, F.lit(n_buckets))
+    )
+    op = F.col("op")
+    aggs = [] if metered is None else partial_aggs(metered)
+    # collect_set of a scalar bucket id is map-side combinable and its
+    # buffer is bounded by n_buckets (~16) — NOT one entry per event.
+    # (collect_list of per-event arrays buffered one element per event
+    # per tablet before array_distinct: an executor-memory blowup on a
+    # hot tablet at 10^8-event windows.)
+    rows = (
+        window.groupBy("tablet_id", "op")
+        .agg(
+            F.max(offset_struct()).alias("o"),
+            F.count(F.lit(1)).alias("n"),
+            F.array_union(
+                F.collect_set(bucket_main), F.collect_set(bucket_old)
+            ).alias("buckets"),
+            F.array_compact(
+                F.collect_list(F.when(op == "ddl", F.col("index")))
+            ).alias("ddl_idx"),
+            # table-poller input: bounded by #tables, map-side combinable
+            F.collect_set("table").alias("tables"),
+            *aggs,
+        )
+        .collect()
+    )
+    # roll the (tablet_id, op) groups up per tablet
+    offsets: dict[str, tuple] = {}
+    for r in rows:
+        o = tuple(r["o"])
+        offsets[r["tablet_id"]] = max(offsets.get(r["tablet_id"], o), o)
+    ddl_indexes = sorted(int(i) for r in rows for i in r["ddl_idx"])
+    ddls = []
+    if ddl_indexes:
+        # only the marker rows are read: a point lookup that keeps the
+        # payload column of every other row on disk
+        payloads = {
+            int(r["index"]): r["payload"]
+            for r in window.where(F.col("index").isin(*ddl_indexes) & (op == "ddl"))
+            .select("index", "payload")
+            .collect()
+        }
+        ddls = [(i, json.loads(payloads[i])) for i in ddl_indexes]
+    return {
+        "offsets": [
+            (t, term, idx, wid, "streaming")
+            for t, (term, idx, wid) in offsets.items()
+        ],
+        "n_input": sum(r["n"] for r in rows),
+        "buckets": sorted({int(b) for r in rows for b in r["buckets"]}),
+        "ddls": ddls,
+        "tables": {t for r in rows for t in r["tables"]},
+        "partials": [] if metered is None else [to_partial(r) for r in rows],
+    }
 
 
 @dataclass
@@ -347,10 +437,16 @@ class CdcPipeline:
         # lookahead thread (Spark schedulers are thread-safe). ``ckpt_rows``
         # is the checkpoint the window's ``_apply`` will resume-filter
         # against, known at submit time: the committed rows max-merged with
-        # the offsets of every window before it.
+        # the offsets of every window before it. The meters count the rows
+        # ``_apply`` keeps: no DDL markers, resume-filtered.
+        meters = self.metrics is not None or self.task_metrics is not None
+
         def submit(pool, wlo, whi, ckpt_rows):
             w = self._window(events, wlo, whi)
-            return pool.submit(self._window_stats, w, ckpt_rows), w
+            metered = (
+                (F.col("op") != "ddl") & resume_predicate(ckpt_rows) if meters else None
+            )
+            return pool.submit(window_stats, w, self.table.n_buckets, metered), w
 
         with ThreadPoolExecutor(max_workers=1) as pool:
             # the first window's stats job runs concurrently with the
@@ -433,97 +529,6 @@ class CdcPipeline:
         self.table_include = reconfigure_include(self.table_include, new)
         self.reconfigurations.append((window_lo, new))
 
-    def _window_stats(self, window: DataFrame, ckpt_rows: list | None) -> dict:
-        """ONE aggregation job per poll window, grouped by ``(tablet_id,
-        op)``, yields everything the driver needs: per-tablet ack offsets +
-        row counts, the touched-bucket set (incl. PK-update old keys,
-        decoded inline for the rare pku rows), the DDL markers, the table
-        set, and — with lineage or meters on — the ``MeterPartial`` rows of
-        exactly the rows ``_apply`` meters: no DDL markers, and only rows
-        strictly newer than ``ckpt_rows``, the checkpoint its
-        ``resume_filter`` will load. A DDL window adds a point lookup of
-        its marker rows' payloads. Collapsing these scans keeps the
-        per-batch serial fraction small enough for the N→4N scaling
-        criterion (Amdahl: every extra driver-synchronous job is pure
-        serial time), and running them in the lookahead thread hides them
-        behind the previous window's MERGE."""
-        import json
-
-        from ..lake import bucket_expr
-
-        nb = self.table.n_buckets
-        bucket_main = F.when(
-            F.col("op").isin(*DML_OPS, "pku"), bucket_expr(nb, ("repo", "path"))
-        )
-        # PK updates carry the old key top-level (record-key block), so this
-        # pass never opens the payload blob at all: with column pruning the
-        # scan reads only the narrow key/offset columns — the dominant-size
-        # payload column stays on disk (DDL payloads, if any, come from the
-        # DDL window's point lookup below; DDLs are rare by construction).
-        # A cross-repo PK update carries old_repo in the key block; when
-        # absent (same-repo rename) the repo is shared.
-        old_key_hash = F.xxhash64(
-            F.coalesce(F.col("old_repo"), F.col("repo")), F.col("old_path")
-        )
-        bucket_old = F.when(
-            F.col("op") == "pku", F.pmod(old_key_hash, F.lit(nb))
-        )
-        op = F.col("op")
-        meters = self.metrics is not None or self.task_metrics is not None
-        # the rows ``_apply`` meters: no DDL markers, resume-filtered
-        keep = (op != "ddl") & resume_predicate(ckpt_rows)
-        aggs = partial_aggs(keep) if meters else []
-        # collect_set of a scalar bucket id is map-side combinable and its
-        # buffer is bounded by n_buckets (~16) — NOT one entry per event.
-        # (collect_list of per-event arrays buffered one element per event
-        # per tablet before array_distinct: an executor-memory blowup on a
-        # hot tablet at 10^8-event windows.)
-        rows = (
-            window.groupBy("tablet_id", "op")
-            .agg(
-                F.max(offset_struct()).alias("o"),
-                F.count(F.lit(1)).alias("n"),
-                F.array_union(
-                    F.collect_set(bucket_main), F.collect_set(bucket_old)
-                ).alias("buckets"),
-                F.array_compact(
-                    F.collect_list(F.when(op == "ddl", F.col("index")))
-                ).alias("ddl_idx"),
-                # table-poller input: bounded by #tables, map-side combinable
-                F.collect_set("table").alias("tables"),
-                *aggs,
-            )
-            .collect()
-        )
-        # roll the (tablet_id, op) groups up per tablet
-        offsets: dict[str, tuple] = {}
-        for r in rows:
-            o = tuple(r["o"])
-            offsets[r["tablet_id"]] = max(offsets.get(r["tablet_id"], o), o)
-        ddl_indexes = sorted(int(i) for r in rows for i in r["ddl_idx"])
-        ddls = []
-        if ddl_indexes:
-            # only the marker rows are read: a point lookup that keeps the
-            # payload column of every other row on disk
-            payloads = {
-                int(r["index"]): r["payload"]
-                for r in window.where(F.col("index").isin(*ddl_indexes) & (op == "ddl"))
-                .select("index", "payload")
-                .collect()
-            }
-            ddls = [(i, json.loads(payloads[i])) for i in ddl_indexes]
-        return {
-            "offsets": [
-                (t, term, idx, wid, "streaming")
-                for t, (term, idx, wid) in offsets.items()
-            ],
-            "n_input": sum(r["n"] for r in rows),
-            "buckets": sorted({int(b) for r in rows for b in r["buckets"]}),
-            "ddls": ddls,
-            "tables": {t for r in rows for t in r["tables"]},
-            "partials": [to_partial(r) for r in rows] if meters else [],
-        }
-
     # ------------------------------------------------------------------
     def _apply(self, batch: DataFrame, batch_id: str, stats: dict) -> BatchResult:
         """One window's data rows (no DDL markers) through the full operator
@@ -532,7 +537,9 @@ class CdcPipeline:
         Offsets, counts, buckets, DDLs and the lineage/meter partials came
         from the window-stats pass: appending the lineage rows and folding
         the meters run on the driver with no Spark job."""
-        batch = resume_filter(batch, self.ckpt.load())
+        # the resume predicate the stats pass metered with: the checkpoint
+        # has since advanced by exactly the windows before this one
+        batch = batch.where(resume_predicate(self.ckpt.load_rows()))
         partials = stats["partials"]
         if self.metrics is not None:
             self.metrics.append(lineage_rows(partials, batch_id))

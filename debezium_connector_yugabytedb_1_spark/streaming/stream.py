@@ -5,7 +5,14 @@ driver used for tests and benchmarks; this wrapper runs the *same* apply
 path under Spark's own streaming engine (file source + availableNow
 trigger), demonstrating the production topology:
 
-    spark.readStream → withWatermark → foreachBatch(decode→fold→MERGE→ckpt)
+    spark.readStream → withWatermark
+      → foreachBatch(window stats → decode→fold→MERGE → ckpt)
+
+Each trigger costs what a pipeline window costs: one ``window_stats``
+aggregation (ack offsets, DDL markers, touched buckets, meter partials),
+one fused fold+MERGE, and a driver-side checkpoint commit and meter fold.
+A gated trigger adds the gate's own passes and a stats pass over the rows
+it releases.
 
 Watermarking note: the safepoint stream carries the source's safe time (the
 reference Merger's gate, ``Merger.java:116-133``); in Structured Streaming
@@ -41,9 +48,9 @@ from pyspark.sql import functions as F
 
 from ..lake import LakeTable
 from ..operators import filters
-from ..operators.checkpoint import CheckpointStore, batch_offsets
+from ..operators.checkpoint import CheckpointStore
 from ..sources import read_event_stream
-from .pipeline import merge_window
+from .pipeline import merge_window, window_stats
 
 
 def apply_batch(
@@ -56,9 +63,14 @@ def apply_batch(
     task_metrics=None,
 ) -> None:
     """The foreachBatch body — identical operator chain to CdcPipeline
-    (minus index windowing, which Spark's source handles).
+    (minus index windowing, which Spark's source handles), fed by the same
+    ``window_stats`` pass: ONE aggregation of the trigger gives the offsets
+    to ack, the DDL markers, the touched buckets and, with ``task_metrics``,
+    the meter partials of every wire row the trigger consumed, DDL markers
+    included. With a gate, the DDLs and buckets come from a second stats
+    pass over the rows it releases.
 
-    No ``resume_filter`` here: Structured Streaming's file source does NOT
+    No resume predicate here: Structured Streaming's file source does NOT
     deliver rows offset-ordered across triggers (files are grouped by
     listing, the corpus is in arrival order), so filtering a trigger by the
     previous trigger's max offsets would silently DROP late-arriving lower
@@ -68,15 +80,14 @@ def apply_batch(
     id), and the per-row monotonic offset guard (stale rows lose the fold).
     The engine checkpoint is still committed for observability/resume of
     the batch pipeline."""
-    import json
-
+    stats = window_stats(
+        batch, table.n_buckets, None if task_metrics is None else F.lit(True)
+    )
     if task_metrics is not None:
-        # MXBean-parity gauges (operators.metrics.TaskMetrics): one
-        # aggregation of the trigger's meter partials, then the driver-side
-        # fold CdcPipeline runs on the partials of its stats pass. Position
-        # is carried by the checkpoint commits below, so the meter skips it
-        # here rather than paying a second offsets collect per trigger
-        task_metrics.update(batch)
+        # MXBean-parity gauges, folded driver-side as CdcPipeline folds its
+        # stats partials; position is carried by the checkpoint commits
+        task_metrics.fold(stats["partials"])
+    applied = stats
     if gate is not None:
         # consistent mode: offsets are committed for the CONSUMED batch,
         # but only AFTER gate.process has persisted the held rows — the
@@ -84,22 +95,22 @@ def apply_batch(
         # pending store is durable first; a crash between the two leaves
         # un-acked offsets, which the source re-delivers and the gate's
         # replay path re-derives idempotently (gate.py module docstring)
-        offs = batch_offsets(batch)
         batch = gate.process(batch, batch_id)
-        ckpt.commit(offs)
+        ckpt.commit(stats["offsets"])
+        applied = window_stats(batch, table.n_buckets, None)
     # each DDL applies exactly at its offset: the events before/after it
     # decode under the schema of their time, and the whole trigger is one
     # fused fold+MERGE committing the DDLs with the data — the same
     # ``merge_window`` CdcPipeline applies a window with
-    ddls = sorted(
-        (int(r["index"]), json.loads(r["payload"]))
-        for r in batch.where(F.col("op") == "ddl").select("index", "payload").collect()
-    )
     merge_window(
-        table, filters.dispatchable(filters.table_filter(batch)), ddls, f"stream-{batch_id}"
+        table,
+        filters.dispatchable(filters.table_filter(batch)),
+        applied["ddls"],
+        f"stream-{batch_id}",
+        touched_buckets=applied["buckets"],
     )
     if gate is None:
-        ckpt.commit(batch_offsets(batch))
+        ckpt.commit(stats["offsets"])
     if expire_keep is not None:
         # bound version-file/dead-dir growth on long-running streams —
         # O(keep) driver-side listing, no Spark job (lake.expire_versions)

@@ -187,14 +187,12 @@ def test_streaming_multi_trigger_converges_with_batch(spark, tmp_path):
     write_events(generate_events(spark, 4000, ddl_at=(2000,)), ev)
     ta = LakeTable(spark, str(tmp_path / "la"), n_buckets=8)
     ta.init(COLS)
-    CdcPipeline(
-        spark, ev, ta, CheckpointStore(spark, str(tmp_path / "ca")), events_per_batch=900
-    ).run()
+    ca = CheckpointStore(spark, str(tmp_path / "ca"))
+    CdcPipeline(spark, ev, ta, ca, events_per_batch=900).run()
     tb = LakeTable(spark, str(tmp_path / "lb"), n_buckets=8)
     tb.init(COLS)
-    run_streaming(
-        spark, ev, tb, CheckpointStore(spark, str(tmp_path / "cb")), str(tmp_path / "sb")
-    )
+    cb = CheckpointStore(spark, str(tmp_path / "cb"))
+    run_streaming(spark, ev, tb, cb, str(tmp_path / "sb"))
     a = sorted(
         (r["repo"], r["path"], r["commit"], r["lang"], r["content"])
         for r in ta.read().collect()
@@ -205,6 +203,15 @@ def test_streaming_multi_trigger_converges_with_batch(spark, tmp_path):
     )
     assert a == b and len(a) > 0
     assert tb.read().columns == ta.read().columns  # DDL applied in both
+    # both front ends ack the log's per-tablet max offset
+    log_max = sorted(
+        (r["tablet_id"], *r["o"], "streaming")
+        for r in spark.read.parquet(ev)
+        .groupBy("tablet_id")
+        .agg(F.max(F.struct("term", "index", "write_id")).alias("o"))
+        .collect()
+    )
+    assert cb.load_rows() == ca.load_rows() == log_max
 
 
 def test_merge_events_packed_offsets_match_oracle_at_field_limits(spark, tmp_path):

@@ -151,21 +151,26 @@ def test_max_merge_monotonic(spark):
 
 
 def test_resume_filter(spark):
+    # a tablet id with SQL quote/escape characters, checkpointed at a
+    # snapshot offset (term -1): streaming rows after it are kept
+    odd = "t'3\\é"
     ev = spark.createDataFrame(
-        [("t1", 0, 1, 0), ("t1", 0, 2, 0), ("t1", 0, 3, 0), ("t2", 0, 1, 0)],
+        [("t1", 0, 1, 0), ("t1", 0, 2, 0), ("t1", 0, 3, 0), ("t2", 0, 1, 0),
+         (odd, -1, 5, 0), (odd, 0, 1, 0)],
         "tablet_id string, term long, index long, write_id long",
     )
     ck = spark.createDataFrame(
-        [("t1", 0, 2, 0, "streaming")],
+        [("t1", 0, 2, 0, "streaming"), (odd, -1, 5, 0, "snapshot")],
         "tablet_id string, term long, index long, write_id long, phase string",
     )
+    want = [(odd, 1), ("t1", 3), ("t2", 1)]
     got = sorted((r["tablet_id"], r["index"]) for r in resume_filter(ev, ck).collect())
-    assert got == [("t1", 3), ("t2", 1)]
+    assert got == want
     # the job-free predicate form over the driver-side rows keeps the same
     rows = [tuple(r) for r in ck.collect()]
     got = sorted((r["tablet_id"], r["index"]) for r in ev.where(resume_predicate(rows)).collect())
-    assert got == [("t1", 3), ("t2", 1)]
-    assert ev.where(resume_predicate(None)).count() == 4
+    assert got == want
+    assert ev.where(resume_predicate(None)).count() == 6
 
 
 # ---------------------------------------------------------------- lake unit

@@ -234,11 +234,16 @@ def test_stats_pass_meters_equal_dataframe_reference(spark, corpus_path, tmp_pat
 
 def test_meters_cost_no_spark_jobs(spark, corpus_path, tmp_path):
     """Lineage and meters on add no Spark job to a run (counted from every
-    thread, the lookahead stats thread included)."""
+    thread, the lookahead stats thread included), and task metrics add none
+    to a Structured Streaming trigger: ``apply_batch`` over the same
+    index-range triggers (the DDL in the third) runs the same jobs per
+    trigger with them on as with them off."""
+    from debezium_connector_yugabytedb_1_spark.lake import LakeTable
     from debezium_connector_yugabytedb_1_spark.operators.checkpoint import (
         CheckpointStore,
     )
     from debezium_connector_yugabytedb_1_spark.operators.metrics import MetricsSink
+    from debezium_connector_yugabytedb_1_spark.streaming.stream import apply_batch
 
     def jobs():
         return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
@@ -257,3 +262,23 @@ def test_meters_cost_no_spark_jobs(spark, corpus_path, tmp_path):
     off = count(tmp_path / "off", False)
     on = count(tmp_path / "on", True)
     assert on == off
+
+    ev = spark.read.parquet(corpus_path)
+
+    def per_trigger(root, tm):
+        t = LakeTable(spark, str(root / "lake"), n_buckets=4)
+        t.init([("commit", "string"), ("lang", "string"), ("content", "string")])
+        ck = CheckpointStore(spark, str(root / "ckpt"))
+        counts = []
+        for lo in range(0, 4000, 1000):
+            batch = ev.where((F.col("index") >= lo) & (F.col("index") < lo + 1000))
+            j0 = jobs()
+            apply_batch(batch, lo, t, ck, task_metrics=tm)
+            counts.append(jobs() - j0)
+        return counts
+
+    tm = TaskMetrics()
+    stream_off = per_trigger(tmp_path / "stream_off", None)
+    stream_on = per_trigger(tmp_path / "stream_on", tm)
+    assert stream_on == stream_off
+    assert tm.snapshot()["TotalNumberOfEventsSeen"] == ev.count()
