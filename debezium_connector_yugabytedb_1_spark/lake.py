@@ -477,13 +477,19 @@ class LakeTable:
         # exchange — each reduce partition holds whole (bucket, salt) units,
         # so partitionBy("bucket") emits at most `salt_width` files per
         # bucket with no post-agg repartition (and no third stage).
-        # ~8 units per core: enough granularity that bucket-size skew and
-        # wave quantization don't idle cores in the fold/write stage
-        # (measured on 16M-event batches: 16 units on 8 cores ran the reduce at
-        # parallelism 4.3; 64 units lifted batch throughput 335k -> 449k ev/s)
+        # ~4 units per core. The units must be fine enough that bucket-size
+        # skew and wave quantization don't idle cores in the fold/write
+        # stage: on 16M-event batches, 16 units on 8 cores ran the reduce at
+        # parallelism 4.3, and 64 units (8 per core) lifted throughput
+        # 335k -> 449k ev/s. But each unit is a write task with a fixed
+        # cost: on 4 cores, a 2k-event window over a 16-bucket lake spent
+        # 1.0-1.7 s of executor CPU deserializing its 32 write tasks, as
+        # much as their run CPU. 4 per core halved the tasks and files and
+        # cut the write stage from 1.2-1.9 to 0.9-1.1 s, and over a 10x
+        # larger lake (~112k rows) 1 salt was still faster than 2.
         salt_width = max(
             1,
-            -(-8 * self.spark.sparkContext.defaultParallelism // self.n_buckets),
+            -(-4 * self.spark.sparkContext.defaultParallelism // self.n_buckets),
         )
         bkt = bucket_expr(self.n_buckets, self.key_cols)
         salt = F.pmod(F.xxhash64(*self.key_cols, F.lit(7)), F.lit(salt_width))

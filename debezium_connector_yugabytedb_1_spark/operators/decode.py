@@ -76,91 +76,106 @@ def _parse_ddl_type(ddl: str) -> T.DataType:
     return _parse_datatype_string(ddl)
 
 
+def decode_columns(
+    df: DataFrame,
+    columns: list[tuple[str, str]] | None = None,
+    *,
+    use_pandas: bool = False,
+    name: str = "_p",
+) -> tuple[Column, dict[str, Column]]:
+    """P1 — the envelope decode as Columns over ``df``'s wire columns.
+    Returns ``(parse, fields)``: ``fields`` maps ``after``, ``changed``,
+    ``before_key``, ``ddl_action``, ``ddl_name`` and ``ddl_type`` to
+    Columns. Those that need the payload parsed read the column ``name``,
+    which the caller projects from ``parse`` one step below them: Catalyst
+    splits a ``from_json`` read through two fields into two parses, one
+    per field, but does not inline a projected parse into several
+    readers, so one projected parse is one parse per row.
+
+    The JSON wire's ``parse`` is the whole payload: ``from_json`` (pure
+    JVM), or with ``use_pandas=True`` an Arrow-batched pandas UDF with
+    identical semantics. ``columns`` (name, ddl-type) overrides the
+    after-image schema — pass the sink table's live columns so mid-stream
+    DDL (add/rename) decodes.
+
+    The pre-shredded wire (a typed ``change`` struct column from
+    ``generate_events(payload_format="shredded")``) needs no parse for its
+    DML: ``after``, ``changed`` and ``before_key`` project straight out of
+    the parquet struct, aligned to the live schema (wire fields missing
+    from ``columns`` are dropped, live columns missing on the wire decode
+    as NULL — the semantics ``from_json`` gives a narrower schema). Its
+    ``parse`` holds only the DDL fields of the JSON ``payload`` string,
+    which is non-null only on the rare marker rows; a caller that reads no
+    ``ddl_*`` field never plans it."""
+    schema = payload_schema(columns) if columns is not None else PAYLOAD_SCHEMA
+    p = F.col(name)
+    ddl = {"ddl_action": p["action"], "ddl_name": p["name"], "ddl_type": p["type"]}
+    if "change" in df.columns and isinstance(
+        df.schema["change"].dataType, T.StructType
+    ):
+        wire = df.schema["change"].dataType
+        wire_after = (
+            wire["after"].dataType if "after" in wire.names else T.StructType([])
+        )
+        after = F.when(
+            F.col("change").isNotNull(),
+            F.struct(
+                *[
+                    (
+                        F.col(f"change.after.{f.name}").cast(f.dataType)
+                        if f.name in wire_after.names
+                        else F.lit(None).cast(f.dataType)
+                    ).alias(f.name)
+                    for f in schema["after"].dataType.fields
+                ]
+            ),
+        )
+        parse = F.from_json(
+            F.col("payload"),
+            T.StructType(
+                [f for f in PAYLOAD_SCHEMA.fields if f.name in ("action", "name", "type")]
+            ),
+        )
+        return parse, {
+            "after": after,
+            "changed": F.col("change.changed"),
+            "before_key": F.col("change.before_key"),
+            **ddl,
+        }
+    if use_pandas:
+        if columns is not None and not {n for n, _ in columns} <= set(TABLE_COLUMNS):
+            raise NotImplementedError(
+                "the pandas decode path extracts the default field set only"
+            )
+        parse = _decode_payload_pandas(F.col("payload"))
+    else:
+        parse = F.from_json(F.col("payload"), schema)
+    return parse, {
+        "after": p["after"],
+        "changed": p["changed"],
+        "before_key": p["before_key"],
+        **ddl,
+    }
+
+
 def decode_envelope(
     df: DataFrame,
     *,
     use_pandas: bool = False,
     columns: list[tuple[str, str]] | None = None,
 ) -> DataFrame:
-    """P1 — parse the wire payload into typed ``after``/``changed``/``ddl``
-    columns. Default path is ``from_json`` (pure JVM); ``use_pandas=True``
-    routes through an Arrow-batched pandas UDF with identical semantics.
-    ``columns`` (name, ddl-type) overrides the after-image schema — pass the
-    sink table's live columns so mid-stream DDL (add/rename) decodes.
-
-    Pre-shredded wire (a typed ``change`` struct column from
-    ``generate_events(payload_format="shredded")``) bypasses the JSON parse
-    entirely: the envelope is projected straight out of the parquet struct,
-    aligned to the live schema (wire fields missing from ``columns`` are
-    dropped, live columns missing on the wire decode as NULL — the same
-    semantics ``from_json`` gives a narrower schema)."""
-    schema = payload_schema(columns) if columns is not None else PAYLOAD_SCHEMA
-    if "change" in df.columns and isinstance(
-        df.schema["change"].dataType, T.StructType
-    ):
-        return _decode_shredded(df, schema)
-    if use_pandas:
-        if columns is not None and not {n for n, _ in columns} <= set(TABLE_COLUMNS):
-            raise NotImplementedError(
-                "the pandas decode path extracts the default field set only"
-            )
-        decoded = _decode_payload_pandas(F.col("payload"))
-    else:
-        decoded = F.from_json(F.col("payload"), schema)
-    return (
-        df.withColumn("_p", decoded)
-        .withColumn("after", F.col("_p.after"))
-        .withColumn("changed", F.col("_p.changed"))
-        .withColumn("before_key", F.col("_p.before_key"))
-        .withColumn("ddl_action", F.col("_p.action"))
-        .withColumn("ddl_name", F.col("_p.name"))
-        .withColumn("ddl_type", F.col("_p.type"))
-        .drop("_p")
-    )
+    """P1 — ``df`` with the typed ``after``/``changed``/``before_key``/
+    ``ddl_*`` columns of ``decode_columns`` (its docstring gives the
+    wires and the options)."""
+    parse, fields = decode_columns(df, columns, use_pandas=use_pandas)
+    return df.withColumn("_p", parse).withColumns(fields).drop("_p")
 
 
-def _decode_shredded(df: DataFrame, schema: T.StructType) -> DataFrame:
-    """Decode the pre-shredded ``change`` struct: pure column projection —
-    zero parsing, zero UDF. DDL fields still come from the JSON ``payload``
-    string, which is non-null only on the rare marker rows (``from_json``
-    on a null column is a no-op per row)."""
-    wire = df.schema["change"].dataType
-    wire_after = (
-        wire["after"].dataType if "after" in wire.names else T.StructType([])
-    )
-    target_after: T.StructType = schema["after"].dataType
-    after = F.when(
-        F.col("change").isNotNull(),
-        F.struct(
-            *[
-                (
-                    F.col(f"change.after.{f.name}").cast(f.dataType)
-                    if f.name in wire_after.names
-                    else F.lit(None).cast(f.dataType)
-                ).alias(f.name)
-                for f in target_after.fields
-            ]
-        ),
-    )
-    ddl = F.from_json(
-        F.col("payload"),
-        T.StructType([f for f in PAYLOAD_SCHEMA.fields if f.name in ("action", "name", "type")]),
-    )
-    return (
-        df.withColumn("after", after)
-        .withColumn("changed", F.col("change.changed"))
-        .withColumn("before_key", F.col("change.before_key"))
-        .withColumn("_d", ddl)
-        .withColumn("ddl_action", F.col("_d.action"))
-        .withColumn("ddl_name", F.col("_d.name"))
-        .withColumn("ddl_type", F.col("_d.type"))
-        .drop("_d")
-    )
-
-
-def realign(decoded: DataFrame, cols: list, final: list) -> DataFrame:
-    """Re-key one schema epoch's decoded ``after``/``changed`` to a later
-    schema. ``cols`` (the epoch's) and ``final`` are the lake's
+def realign(
+    after: Column, changed: Column, cols: list, final: list
+) -> tuple[Column, Column]:
+    """Re-key one schema epoch's decoded ``after``/``changed`` Columns to
+    a later schema. ``cols`` (the epoch's) and ``final`` are the lake's
     ``(logical, type, physical)`` triples; columns match by PHYSICAL name,
     the lake's field-ID analogue, so a rename maps the old logical name to
     the new one, a final column the epoch lacks (added later) is unset,
@@ -169,25 +184,24 @@ def realign(decoded: DataFrame, cols: list, final: list) -> DataFrame:
     name. The epoch's events thus merge under ``final`` exactly as if
     the schema had changed between them."""
     if cols == final:
-        return decoded
+        return after, changed
     logical = {p: n for n, _, p in cols}
     pairs = [(n, t, logical.get(p)) for n, t, p in final]
-    after = F.struct(
+    struct = F.struct(
         *[
             (
-                F.col(f"after.{src}") if src is not None
+                after[src] if src is not None
                 else F.lit(None).cast(_parse_ddl_type(t))
             ).alias(n)
             for n, t, src in pairs
         ]
     )
-    changed = F.array(
-        *[F.when(F.array_contains("changed", src), F.lit(n)) for n, _, src in pairs if src]
+    names = F.array(
+        *[F.when(F.array_contains(changed, src), F.lit(n)) for n, _, src in pairs if src]
     ).cast("array<string>")
-    return decoded.withColumn(
-        "after", F.when(F.col("after").isNotNull(), after)
-    ).withColumn(
-        "changed", F.when(F.col("changed").isNotNull(), F.array_compact(changed))
+    return (
+        F.when(after.isNotNull(), struct),
+        F.when(changed.isNotNull(), F.array_compact(names)),
     )
 
 

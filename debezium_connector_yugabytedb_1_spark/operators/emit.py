@@ -7,10 +7,10 @@ Reference: ``YugabyteDBChangeRecordEmitter.emitCreateRecord:317-329``,
 ``YugabyteDBEventDispatcher.java:216-228``; truncate receiver
 ``YugabyteDBEventDispatcher.java:200-203``.
 
-Spark-first: emission is projection; the PK-update split is a two-branch
-union (Catalyst turns it into one scan with two filters when the source is
-shared). Downstream replay only distinguishes upsert ops (c/r/u) from delete
-ops (d/t) — the split rewrites 'pku' into exactly that vocabulary.
+Spark-first: emission is projection; the PK-update split is one generator
+over the input (a row yields one or two rows), so it scans its source once.
+Downstream replay only distinguishes upsert ops (c/r/u) from delete ops
+(d/t) — the split rewrites 'pku' into exactly that vocabulary.
 """
 
 from __future__ import annotations
@@ -31,30 +31,28 @@ def split_pk_updates(decoded: DataFrame) -> DataFrame:
     ``YugabyteDBChangeRecordEmitter.java:365-378``).
 
     The synthetic delete gets ``write_id`` and the create ``write_id + 1``
-    within the same (term, index) slot, preserving OpId total order.
+    within the same (term, index) slot, preserving OpId total order; every
+    other row keeps its op with ``write_id`` doubled. One ``inline`` over
+    a one- or two-element array of row structs does it in a single pass.
     """
-    non_pku = decoded.where(F.col("op") != "pku")
-    pku = decoded.where(F.col("op") == "pku")
+    w2 = F.col("write_id") * 2
 
-    deletes = pku.select(
-        *[
-            c
-            for c in decoded.columns
-            if c not in ("op", "repo", "path", "after", "changed", "write_id")
-        ],
-        F.lit("d").alias("op"),
-        F.col("before_key.repo").alias("repo"),
-        F.col("before_key.path").alias("path"),
-        F.lit(None).cast(pku.schema["after"].dataType).alias("after"),
-        F.lit(None).cast("array<string>").alias("changed"),
-        (F.col("write_id") * 2).alias("write_id"),
-    ).select(*decoded.columns)
+    def row(**over):
+        return F.struct(*[over.get(c, F.col(c)).alias(c) for c in decoded.columns])
 
-    creates = pku.withColumn("op", F.lit("c")).withColumn(
-        "write_id", F.col("write_id") * 2 + 1
+    delete = row(
+        op=F.lit("d"),
+        repo=F.col("before_key.repo"),
+        path=F.col("before_key.path"),
+        after=F.lit(None).cast(decoded.schema["after"].dataType),
+        changed=F.lit(None).cast("array<string>"),
+        write_id=w2,
     )
-    scaled = non_pku.withColumn("write_id", F.col("write_id") * 2)
-    return scaled.unionByName(deletes).unionByName(creates)
+    create = row(op=F.lit("c"), write_id=w2 + 1)
+    rows = F.when(F.col("op") == "pku", F.array(delete, create)).otherwise(
+        F.array(row(write_id=w2))
+    )
+    return decoded.select(F.inline(rows))
 
 
 def source_block(server: str = "ybcdc") -> "F.Column":

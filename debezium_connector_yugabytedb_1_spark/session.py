@@ -47,6 +47,12 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # PySpark 4 records the Python call site of every DataFrame and
+        # functions call for error messages: a stack walk plus several py4j
+        # calls per call. A poll window builds its plan from ~300 such calls,
+        # so the capture is paid on every window. Off, an error loses only its
+        # Python call-site context; extra_conf can turn it back on.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # zstd over snappy: ~1.8x smaller WAL segments and bucket files.
         # The saved scan I/O is the part of a batch that does NOT scale

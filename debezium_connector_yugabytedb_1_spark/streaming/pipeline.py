@@ -18,8 +18,9 @@ Spark-first execution per poll window:
       parquet scan (index-range pushdown)
         → resume predicate (a literal-map lookup, no join)
         → filters (pushed to scan)
-        → from_json decode (codegen), per schema epoch
-        → PK-update split (union)
+        → decode, one projection whatever the window's schema epochs
+          (shredded: pure projection; JSON: one from_json per payload)
+        → PK-update split (one generator row → 1 or 2 rows, no union)
         → ∪ the touched buckets' target rows (bucket-pruned read)
         → ONE exchange on (bucket, _salt); the LWW fold per key runs
           above it (no map-side partial aggregate, no join)
@@ -48,7 +49,6 @@ reference's explicit-checkpoint protocol
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,7 +61,7 @@ from ..operators.checkpoint import (
     merge_offset_rows,
     resume_predicate,
 )
-from ..operators.decode import decode_envelope, realign
+from ..operators.decode import decode_columns, realign
 from ..operators.emit import DML_OPS, split_pk_updates
 from ..operators.metrics import (
     MetricsSink,
@@ -88,10 +88,15 @@ def merge_window(
     Schema epoch k holds the rows at or above the k-th schema-changing
     DDL's index and below the next one's; it decodes against the
     window-start manifest ``evolve``-d through DDLs 1..k, then is
-    ``realign``-ed to the window-final schema by physical name. The
-    union of the epochs merges under the final manifest, whose columns
-    commit with the data. Returns the merge stats and the DDLs that
-    changed the schema (none when the window was already applied)."""
+    ``realign``-ed to the window-final schema by physical name. The DML
+    is projected once: ``after``, ``changed`` and ``before_key`` are each
+    one ``when(index < bound, epoch k)`` chain over the epoch bounds, so the
+    window is scanned once whatever its DDL count, and on the JSON wire
+    each row's payload is parsed once, under its own epoch's schema. Only
+    the columns ``merge_events`` reads are kept; the window merges under
+    the final manifest, whose columns commit with the data. Returns the
+    merge stats and the DDLs that changed the schema (none when the
+    window was already applied)."""
     m = table.manifest()
     epochs = [(None, table.cols3(m))]
     applied = []
@@ -102,17 +107,34 @@ def merge_window(
             epochs.append((index, table.cols3(m)))
     final = epochs[-1][1]
     dml = rows.where(F.col("op").isin(*DML_OPS, "pku"))
-    parts = []
-    for (start, cols), (end, _) in zip(epochs, epochs[1:] + [(None, None)]):
-        part = dml if start is None else dml.where(F.col("index") >= start)
-        if end is not None:
-            part = part.where(F.col("index") < end)
-        decoded = decode_envelope(
-            part, use_pandas=use_pandas, columns=[(n, t) for n, t, _ in cols]
+    idx = F.col("index")
+    bounds = [start for start, _ in epochs[1:]]
+
+    def by_epoch(per_epoch):
+        """``per_epoch[k]`` on epoch k's rows (None: NULL)."""
+        col = per_epoch[-1]
+        for bound, c in reversed(list(zip(bounds, per_epoch))):
+            col = F.when(idx < bound, c).otherwise(col)
+        return col
+
+    parses, decoded = {}, []
+    for k, (_, cols) in enumerate(epochs):
+        parse, fields = decode_columns(
+            dml, [(n, t) for n, t, _ in cols], use_pandas=use_pandas, name=f"_p{k}"
         )
-        parts.append(realign(decoded, cols, final))
+        # a payload parses only under its own epoch's schema
+        parses[f"_p{k}"] = by_epoch([parse if j == k else None for j in range(len(epochs))])
+        after, changed = realign(fields["after"], fields["changed"], cols, final)
+        decoded.append((after, changed, fields["before_key"]))
+    dml = dml.withColumns(parses).select(
+        "term", "index", "write_id", "op", *table.key_cols,
+        *[
+            by_epoch(per_epoch).alias(name)
+            for name, per_epoch in zip(("after", "changed", "before_key"), zip(*decoded))
+        ],
+    )
     mstats = table.merge_events(
-        split_pk_updates(reduce(DataFrame.unionByName, parts)),
+        split_pk_updates(dml),
         batch_id,
         touched_buckets=touched_buckets,
         manifest=m,

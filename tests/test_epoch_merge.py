@@ -14,10 +14,12 @@ same manifest version as its rows.
 import hashlib
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
+from debezium_connector_yugabytedb_1_spark import lake
 from debezium_connector_yugabytedb_1_spark.generator import generate_events, write_events
 from debezium_connector_yugabytedb_1_spark.lake import LakeTable
 from debezium_connector_yugabytedb_1_spark.operators import filters
@@ -157,6 +159,36 @@ def test_epoch_decode_equals_ddl_per_window_and_oracle(spark, tmp_path, wire):
     # not, and its rows reached the oracle comparison
     repo2 = [v for k, v in state.items() if k[0] == "org/repo-2"]
     assert repo2 and all(v["commit_sha"] and v["lang"] is None for v in repo2)
+
+
+@pytest.mark.parametrize("wire", ["shredded", "json"])
+def test_window_across_every_ddl_scans_the_log_once(spark, tmp_path, monkeypatch, wire):
+    """A window that crosses all four DDLs, over a lake that holds data:
+    the DataFrame ``merge_events`` writes scans the events once (plus the
+    lake's target read), however many schema epochs and PK-update rows the
+    window has. The shredded wire's DML needs no ``from_json`` at all; on
+    the JSON wire there is one parse per epoch, each over its own rows."""
+    ev, _ = _epoch_log(spark, wire)
+    path = str(tmp_path / "events")
+    write_events(ev, path, segment_size=W)
+    root = str(tmp_path)
+    _run(spark, path, root, W, max_batches=1)
+    written = []
+    write = lake._write_version
+    monkeypatch.setattr(
+        lake, "_write_version", lambda df, out: (written.append(df), write(df, out))
+    )
+    _, _, res = _run(spark, path, root, N - W)
+    assert [r.batch_id for r in res] == [f"b{W}-{N}"] and len(res[0].ddl_applied) == 4
+    assert len(written) == 1
+    plan = written[0]._jdf.queryExecution().executedPlan().toString()
+    # a scan's location is truncated in the plan text: tell the two apart
+    # by what they read, the log's op column or the lake's stored offsets
+    scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
+    assert len(scans) == 2, plan
+    assert len([ln for ln in scans if re.search(r"\bop#\d+", ln)]) == 1, plan
+    assert len([ln for ln in scans if "_last_index#" in ln]) == 1, plan
+    assert plan.count("from_json(") == (0 if wire == "shredded" else 5), plan
 
 
 # ---------------------------------------------------------------------------

@@ -103,8 +103,9 @@ def test_merge_events_batch_id_idempotent(spark, tmp_path):
 def test_merge_events_single_aggregation_plan(spark, tmp_path, monkeypatch):
     """The DataFrame merge_events writes, on a lake that already holds data
     (so the target read is in the plan), has ONE exchange — the
-    (bucket, _salt) repartition — and ONE aggregation above it: the fold
-    is the merge, with no aggregate below the exchange and no join."""
+    (bucket, _salt) repartition, four units per core — and ONE aggregation
+    above it: the fold is the merge, with no aggregate below the exchange
+    and no join."""
     ev = generate_events(spark, 600)
     t = LakeTable(spark, str(tmp_path / "lake"), n_buckets=4)
     t.init(COLS)
@@ -120,9 +121,12 @@ def test_merge_events_single_aggregation_plan(spark, tmp_path, monkeypatch):
     lines = plan.splitlines()
     exchanges = [i for i, ln in enumerate(lines) if "Exchange" in ln]
     assert len(exchanges) == 1, plan
-    assert re.search(
-        r"Exchange hashpartitioning\(bucket#\d+L?, _salt#\d+L?, \d+\)", lines[exchanges[0]]
-    ), plan
+    fanout = re.search(
+        r"Exchange hashpartitioning\(bucket#\d+L?, _salt#\d+L?, (\d+)\)", lines[exchanges[0]]
+    )
+    assert fanout, plan
+    cores = spark.sparkContext.defaultParallelism
+    assert int(fanout.group(1)) == t.n_buckets * max(1, -(-4 * cores // t.n_buckets)), plan
     aggs = [i for i, ln in enumerate(lines) if "Aggregate(" in ln]
     assert len(aggs) == 2 and all(i < exchanges[0] for i in aggs), plan
     assert "partial_max(" in lines[aggs[1]] and "partial_" not in lines[aggs[0]], plan

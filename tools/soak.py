@@ -63,7 +63,7 @@ def main() -> int:
     ap.add_argument("--events", type=int, default=100_000_000)
     ap.add_argument("--batches", type=int, default=200)
     ap.add_argument("--cores", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()))
     ap.add_argument("--n-tablets", type=int, default=8)
     ap.add_argument("--n-buckets", type=int, default=32)
     ap.add_argument("--vacuum-every", type=int, default=50,

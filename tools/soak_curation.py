@@ -79,7 +79,7 @@ def main() -> int:
     ap.add_argument("--dup-pct", type=int, default=10)
     ap.add_argument("--compact-every", type=int, default=10)
     ap.add_argument("--cores", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()))
     ap.add_argument("--root", default="/tmp/spark_graft_soak_curation")
     ap.add_argument("--out", default=None)
     args = ap.parse_args()
