@@ -51,6 +51,9 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .operators._store import atomic_write
+from .operators.decode import cell_set
+from .operators.emit import UPSERT_OPS
+from .operators.order import fold_aggs, newer_than_delete
 
 KEY_COLS = ("repo", "path")
 #: hidden bookkeeping columns stored per row. ``_deleted`` rows are
@@ -64,10 +67,10 @@ _META_COLS = ("_last_term", "_last_index", "_last_write_id", "content_sha256", "
 
 def _packed_offset(term, index, write_id):
     """Order-preserving single-long encoding of (term, index, write_id):
-    14/38/11-bit fields with a +2 bias (covers the snapshot term -1 and the
-    -2 sentinel). An out-of-budget field would silently carry into its
-    neighbor and scramble offset ordering — worth 6 long comparisons per
-    row to fail loudly instead (the budget is generous: term < 16,382,
+    14/38/11-bit fields with a +2 bias (covers the snapshot term -1). An
+    out-of-budget field would silently carry into its neighbor and
+    scramble offset ordering — worth 6 long comparisons per row to fail
+    loudly instead (the budget is generous: term < 16,382,
     index < 2^38-2 ≈ 2.7e11, write_id < 2,046 even after the PK-split
     doubling)."""
     t, i, w = term + 2, index + 2, write_id + 2
@@ -436,8 +439,12 @@ class LakeTable:
                 stale/redelivered events simply lose the max())
               → partitionBy("bucket") write: no second exchange, no join.
 
-        ``test_merge_events_single_aggregation_plan`` pins that plan. A
-        separate fold followed by a MERGE join would cost one more
+        The fold is ``order.fold_aggs`` with the ``order.newer_than_delete``
+        barrier — the rule ``order.fold_changes`` also uses — over a packed
+        long offset, plus the target-only aggregates the stats and the
+        sha256 reuse need (``_t_off``, ``_t_vis_off``, ``_s_off``,
+        ``_m_sha``). ``test_merge_events_single_aggregation_plan`` pins that
+        plan. A separate fold followed by a MERGE join would cost one more
         aggregation, exchange and sort — per-batch fixed cost is what caps
         N→4N scaling efficiency (Amdahl).
 
@@ -470,7 +477,6 @@ class LakeTable:
             return MergeStats(version=m["version"], skipped=True)
         cols = [c[0] for c in m["columns"]]
         key = list(self.key_cols)
-        from .operators.decode import cell_set  # local import to avoid a cycle
 
         # bucket + a key-salt computed map-side: shuffling on (bucket, salt)
         # lets the fold aggregation AND the bucketed write share ONE
@@ -495,9 +501,9 @@ class LakeTable:
         salt = F.pmod(F.xxhash64(*self.key_cols, F.lit(7)), F.lit(salt_width))
         # offsets ride the shuffle as ONE packed long instead of 3: the
         # (term, index, write_id) lexicographic order is preserved by a
-        # 14/38/11-bit split with a +2 bias (covers the snapshot term -1
-        # and the -2 sentinel). Budget: term < 2^14-2 (Raft terms are
-        # small), index < 2^38-2 ≈ 2.7e11 (27x the 10^10-event target),
+        # 14/38/11-bit split with a +2 bias (covers the snapshot term -1).
+        # Budget: term < 2^14-2 (Raft terms are small), index < 2^38-2
+        # ≈ 2.7e11 (27x the 10^10-event target),
         # write_id < 2^11-2 = 2046 — the intra-WAL-record index is single
         # digits, but split_pk_updates DOUBLES it (2w / 2w+1 for the
         # delete/create pair), so the field must hold 2*max+1 (boundary-
@@ -549,40 +555,23 @@ class LakeTable:
         u = ev.unionByName(tev, allowMissingColumns=True)
 
         off = F.col("_off")
-        is_del = F.col("op").isin("d", "t")
-        is_up = F.col("op").isin("c", "r", "u")
         is_target = F.col("_is_target").isNotNull() & F.col("_is_target")
         aggs = [
-            F.max(F.when(is_del, off)).alias("_last_del"),
-            F.max(F.when(is_up, off)).alias("_last_up"),
-            F.max(off).alias("_last_off"),
+            *fold_aggs(off, {c: (F.col(f"_v_{c}"), F.col(f"_set_{c}")) for c in cols}),
             F.max(F.when(is_target, off)).alias("_t_off"),
-            F.max(F.when(is_target & is_up, off)).alias("_t_vis_off"),
+            F.max(F.when(is_target & F.col("op").isin(*UPSERT_OPS), off)).alias("_t_vis_off"),
             F.max(F.when(~is_target, off)).alias("_s_off"),
             F.max(
                 F.when(is_target, F.struct(off.alias("off"), F.col("_sha").alias("v")))
             ).alias("_m_sha"),
         ]
-        for c in cols:
-            aggs.append(
-                F.max(
-                    F.when(
-                        is_up & F.col(f"_set_{c}"),
-                        F.struct(off.alias("off"), F.col(f"_v_{c}").alias("v")),
-                    )
-                ).alias(f"_m_{c}")
-            )
         g = (
             u.repartition(self.n_buckets * salt_width, "bucket", "_salt")
             .groupBy("bucket", "_salt", "_kh", *key)
             .agg(*aggs)
         )
 
-        neg = F.lit(0).cast("long")  # packed (-2,-2,-2) == 0: below every real offset
-        del_floor = F.coalesce(F.col("_last_del"), neg)
-        exists = F.col("_last_up").isNotNull() & (
-            F.coalesce(F.col("_last_up"), neg) > del_floor
-        )
+        exists = newer_than_delete(F.col("_last_up"), F.col("_last_del"))
         t_here = F.col("_t_off").isNotNull()
         t_vis = F.col("_t_vis_off").isNotNull()  # target row was visible
         newer = F.col("_s_off").isNotNull() & (
@@ -595,8 +584,7 @@ class LakeTable:
         ]
 
         def live(c):
-            mc = F.col(f"_m_{c}")
-            return mc.isNotNull() & (mc["off"] > del_floor)
+            return newer_than_delete(F.col(f"_m_{c}")["off"], F.col("_last_del"))
 
         out_cols = [F.col("bucket")] + [F.col(k) for k in key]
         for c in cols:

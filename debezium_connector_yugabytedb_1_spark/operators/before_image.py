@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from .decode import TABLE_COLUMNS, cell_set
 from .emit import DELETE_OPS, UPSERT_OPS
+from .order import newer_than_delete
 
 
 class BeforeImageMode(str, Enum):
@@ -66,8 +67,9 @@ def reconstruct_before_images(
     Implementation: per key, running last-set value of every column via a
     window ``last(value_if_set, ignorenulls) OVER (... ROWS BETWEEN
     UNBOUNDED PRECEDING AND 1 PRECEDING)``, nulled out across delete
-    barriers. One shuffle + per-key sort (lineage path, not the hot replay
-    path); every mode shares the same single window pass."""
+    barriers by the fold's own barrier (``order.newer_than_delete``). One
+    shuffle + per-key sort (lineage path, not the hot replay path); every
+    mode shares the same single window pass."""
     mode = BeforeImageMode(mode)
     if mode == BeforeImageMode.NOTHING:
         return decoded
@@ -80,8 +82,8 @@ def reconstruct_before_images(
         .rowsBetween(W.unboundedPreceding, -1)
     )
     off = F.struct("term", "index", "write_id")
-    last_del = F.max(F.when(F.col("op").isin(*DELETE_OPS), off)).over(w)
     is_del = F.col("op").isin(*DELETE_OPS)
+    last_del = F.max(F.when(is_del, off)).over(w)
     prior, before_fields, after_fields = {}, [], []
     for c in columns:
         last_set = F.last(
@@ -91,10 +93,7 @@ def reconstruct_before_images(
             ),
             ignorenulls=True,
         ).over(w)
-        live = last_set.isNotNull() & (
-            last_del.isNull() | (last_set["off"] > last_del)
-        )
-        prior[c] = F.when(live, last_set["v"])
+        prior[c] = F.when(newer_than_delete(last_set["off"], last_del), last_set["v"])
         if mode in (
             BeforeImageMode.MODIFIED_COLUMNS_OLD_AND_NEW,
             BeforeImageMode.CHANGE_OLD_NEW,

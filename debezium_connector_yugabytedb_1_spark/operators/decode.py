@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .emit import DELETE_OPS
+
 #: Typed schema of the decoded payload (self-describing — replaces the
 #: reference's serialized OID type registry, ``YugabyteDBTypeRegistry.java``).
 AFTER_SCHEMA = T.StructType(
@@ -280,5 +282,5 @@ def extract_new_record_state(
         src = src.where(~is_tomb)
     proj = [*[F.col(c) for c in keep_cols], F.col("repo"), F.col("path")]
     proj += [F.when(cell_set(c), F.col(f"after.{c}")).alias(c) for c in columns]
-    proj.append(F.col("op").isin("d", "t").alias("__deleted"))
+    proj.append(F.col("op").isin(*DELETE_OPS).alias("__deleted"))
     return src.select(*proj)

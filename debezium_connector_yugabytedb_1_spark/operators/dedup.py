@@ -260,42 +260,47 @@ def minhash_lsh_pairs(
 
         pool = ThreadPoolExecutor(1)
         probe = pool.submit(hot.isEmpty)
-    banded = _buckets_from_sigs(per_doc, n_hashes, bands)
-    a = banded.alias("a")
-    b_ = banded.alias("b")
-    cand = (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    try:
+        banded = _buckets_from_sigs(per_doc, n_hashes, bands)
+        a = banded.alias("a")
+        b_ = banded.alias("b")
+        cand = (
+            a.join(
+                b_,
+                (F.col("a.band") == F.col("b.band"))
+                & (F.col("a.bucket") == F.col("b.bucket"))
+                & (F.col("a.doc_id") < F.col("b.doc_id")),
+            )
+            .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+            .distinct()
         )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    # Verify ONLY the candidate pairs: join each side to its per-doc shingle
-    # set and compute the exact Jaccard expression-side. This is what makes
-    # LSH the linear-cost path — the old all-pairs exact recomputation would
-    # have discarded LSH's entire advantage. Shingle arrays are bounded by
-    # doc length (per-doc state, never per-corpus), and the same ``max_df``
-    # cap as ``ngram_jaccard_pairs`` keeps the shingle space identical, so
-    # LSH pairs are a strict subset of the exact pairs at equal thresholds.
-    if max_df is None:
-        sets = per_doc.select("doc_id", "sh")
-    else:
-        # common case: nothing exceeds the df cap — the cached per-doc sets
-        # ARE the capped sets, so skip the explode→anti-join→re-collect
-        # pass entirely. Emptiness probe only (started above, overlapped
-        # with the candidate-plan build) — no rows pulled to the driver.
-        if probe.result():
+        # Verify ONLY the candidate pairs: join each side to its per-doc
+        # shingle set and compute the exact Jaccard expression-side. This is
+        # what makes LSH the linear-cost path — the old all-pairs exact
+        # recomputation would have discarded LSH's entire advantage. Shingle
+        # arrays are bounded by doc length (per-doc state, never per-corpus),
+        # and the same ``max_df`` cap as ``ngram_jaccard_pairs`` keeps the
+        # shingle space identical, so LSH pairs are a strict subset of the
+        # exact pairs at equal thresholds.
+        if max_df is None:
             sets = per_doc.select("doc_id", "sh")
         else:
-            sets = (
-                occ.join(F.broadcast(hot), "shingle", "left_anti")
-                .groupBy("doc_id")
-                .agg(F.collect_set("shingle").alias("sh"))
-            )
-        pool.shutdown(wait=False)
+            # common case: nothing exceeds the df cap — the cached per-doc sets
+            # ARE the capped sets, so skip the explode→anti-join→re-collect
+            # pass entirely. Emptiness probe only (started above, overlapped
+            # with the candidate-plan build) — no rows pulled to the driver.
+            if probe.result():
+                sets = per_doc.select("doc_id", "sh")
+            else:
+                sets = (
+                    occ.join(F.broadcast(hot), "shingle", "left_anti")
+                    .groupBy("doc_id")
+                    .agg(F.collect_set("shingle").alias("sh"))
+                )
+    finally:
+        if pool is not None:
+            # on the error path too: no probe thread outlives the call
+            pool.shutdown(cancel_futures=True)
     sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     # join-strategy pin (see _small_input): the verify sides are doc-

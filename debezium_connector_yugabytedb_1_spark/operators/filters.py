@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .order import max_ht
+
 SYSTEM_SCHEMA_EXCLUDE = r"^(pg_catalog|information_schema|pg_temp).*"
 
 #: ops that never reach the dispatcher (watermark carriers / no-ops)
@@ -24,11 +26,14 @@ NON_DISPATCHED_OPS = ("SAFEPOINT", "NOOP", "BEGIN", "COMMIT")
 def extract_safepoint_watermark(df: DataFrame):
     """F1 side-channel — safepoints carry the stream safe time (the
     watermark the consistent Merger gates on, ``Merger.java:116-133``).
-    Returns per-tablet max safepoint commit_time as a small DataFrame."""
+    Returns ``(tablet_id, safe_time)``, one row per tablet with a
+    SAFEPOINT: the UNSIGNED max of its safepoint commit times
+    (``order.max_ht``, the aggregate ``window_stats`` also uses), as the
+    raw wire value."""
     return (
         df.where(F.col("op") == "SAFEPOINT")
         .groupBy("tablet_id")
-        .agg(F.max("commit_time").alias("safe_time"))
+        .agg(max_ht("commit_time").alias("safe_time"))
     )
 
 

@@ -31,7 +31,7 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .order import ht_key, ht_key_py, ht_to_epoch_ms, ht_to_epoch_ms_py
+from .order import ht_key, ht_key_py, ht_to_epoch_ms, ht_to_epoch_ms_py, max_ht
 
 log = logging.getLogger("ybcdc.metrics")
 
@@ -73,8 +73,7 @@ def batch_metrics(
         F.count(F.lit(1)).alias("n"),
         F.min("index").alias("min_index"),
         F.max("index").alias("max_index"),
-        # ht_key is an involution: max over keys, mapped back to the raw HT
-        ht_key(F.max(ht_key("commit_time"))).alias("max_commit_time"),
+        max_ht("commit_time").alias("max_commit_time"),
     ).withColumn(
         "ms_behind_source",
         (wall - ht_to_epoch_ms("max_commit_time")).cast("long"),
@@ -470,7 +469,8 @@ def txn_metadata(events: DataFrame) -> DataFrame:
     from the markers themselves — begin = min BEGIN commit time, end = max
     COMMIT commit time across the txn's tablet fragments; otherwise both
     fall back to the applied-DML span (markers span ALL of the txn's
-    records, so they can widen the span beyond the c/u/d subset)."""
+    records, so they can widen the span beyond the c/u/d subset). Both
+    ends are taken in the UNSIGNED hybrid-time order, as raw wire values."""
     is_dml = F.col("op").isin("c", "u", "d")
     return (
         events.where(is_dml | F.col("op").isin("BEGIN", "COMMIT"))
@@ -478,12 +478,12 @@ def txn_metadata(events: DataFrame) -> DataFrame:
         .agg(
             F.sum(is_dml.cast("long")).alias("event_count"),
             F.coalesce(
-                F.min(F.when(F.col("op") == "BEGIN", F.col("commit_time"))),
-                F.min(F.when(is_dml, F.col("commit_time"))),
+                ht_key(F.min(ht_key(F.when(F.col("op") == "BEGIN", F.col("commit_time"))))),
+                ht_key(F.min(ht_key(F.when(is_dml, F.col("commit_time"))))),
             ).alias("begin_time"),
             F.coalesce(
-                F.max(F.when(F.col("op") == "COMMIT", F.col("commit_time"))),
-                F.max(F.when(is_dml, F.col("commit_time"))),
+                max_ht(F.when(F.col("op") == "COMMIT", F.col("commit_time"))),
+                max_ht(F.when(is_dml, F.col("commit_time"))),
             ).alias("end_time"),
         )
     )

@@ -14,7 +14,23 @@ Reference semantics being re-created:
   changed-columns-only updates folding into the prior image
   (``YBTableSchemaBuilder.java:280-292``).
 
-Two Spark-first implementations:
+This module owns each ordering rule once; every other module calls it:
+
+- **The fold rule** (``fold_aggs`` + ``newer_than_delete``): per column,
+  the value of the latest upsert that set it, counted only above the key's
+  latest delete. ``fold_changes`` and the lake's fused fold+MERGE
+  (``LakeTable.merge_events``) build their aggregation from it, and the
+  before-image window (``before_image``) uses the same barrier.
+- **The safepoint watermark** (``max_ht``): a tablet's safetime is the
+  UNSIGNED max of its SAFEPOINT commit times. ``streaming.pipeline
+  .window_stats`` computes it in its stats pass and
+  ``filters.extract_safepoint_watermark`` as a DataFrame.
+- **The release threshold** (``stream_safetime``): a record is released
+  once ``commit_time <= min(safetime over every consumed tablet)``, and
+  nothing is released while a consumed tablet's safetime is unknown.
+  ``release_gate`` and ``streaming.gate.ConsistentGate`` share it.
+
+Two Spark-first implementations of per-key LWW:
 
 1. ``last_writer_wins`` — window ``row_number() OVER (PARTITION BY key ORDER
    BY offset DESC) = 1``. Exactly the north-rule formulation; one shuffle +
@@ -48,15 +64,6 @@ from .emit import DELETE_OPS, UPSERT_OPS
 
 KEY_COLS = ("repo", "path")
 
-def _neg_off() -> Column:
-    """Sentinel smaller than every real offset (snapshot term is -1 with
-    index >= 0, so (-2,..) sorts below it)."""
-    return F.struct(
-        F.lit(-2).cast("long").alias("term"),
-        F.lit(-2).cast("long").alias("index"),
-        F.lit(-2).cast("long").alias("write_id"),
-    )
-
 
 # ---------------------------------------------------------------------------
 # Unsigned hybrid-time comparison fidelity: the reference compares commit /
@@ -84,6 +91,24 @@ def ht_key_py(v: int) -> int:
     """Driver-side twin of ``ht_key`` for scalar thresholds."""
     k = (v & _U64_MASK) ^ _SIGN_BIT
     return k - (1 << 64) if k >= _SIGN_BIT else k
+
+
+def max_ht(col: Column | str) -> Column:
+    """Aggregate: the UNSIGNED max of a hybrid-time column, as the raw wire
+    value (``ht_key`` is an involution, so it maps the max key back)."""
+    return ht_key(F.max(ht_key(col)))
+
+
+def stream_safetime(safetimes: dict, consumed) -> int | None:
+    """The Merger's release threshold (``Merger.java:116-133``): the
+    UNSIGNED min of the safetimes of every ``consumed`` tablet, as the raw
+    wire value. None while any consumed tablet's safetime is unknown
+    (absent or None in ``safetimes``) or nothing is consumed: the gate is
+    then fully closed."""
+    times = [safetimes.get(t) for t in consumed]
+    if not times or None in times:
+        return None
+    return min(times, key=ht_key_py)
 
 
 def ht_to_epoch_ms(col: Column | str) -> Column:
@@ -124,7 +149,7 @@ def release_gate(
     once EVERY tablet's safe time has passed its commit time (the Merger's
     peek gate, ``Merger.java:116-133`` — ``peek`` returns a message only if
     ``commit_time <= streamSafetime``, where the stream safetime is the min
-    across tablet safetimes).
+    across tablet safetimes; the threshold is ``stream_safetime``).
 
     ``safetimes``: (tablet_id, safe_time) — the output of
     ``filters.extract_safepoint_watermark``, or the carried-forward map the
@@ -133,23 +158,27 @@ def release_gate(
     holds everything unless every consumed tablet has a known safetime
     (a tablet with events but no safepoint yet has an unknown safetime and
     must constrain the gate, ``YugabyteDBConsistentStreamingSource
-    .java:174-254``). Returns ``(released, held)``; held records re-enter
+    .java:174-254``); omitted, the tablets with a known safetime are the
+    consumed set. Returns ``(released, held)``; held records re-enter
     the next poll's merge, exactly the reference's pending queue. The gate
-    is a scalar broadcast comparison — no shuffle.
+    is a scalar broadcast comparison — no shuffle; both it and the
+    ``commit_time`` compare run UNSIGNED.
 
     For the stateful multi-trigger form (safetimes carried across polls,
     pending store on disk) see ``streaming.gate.ConsistentGate``."""
-    rows = safetimes.collect()
-    have = {r["tablet_id"]: r["safe_time"] for r in rows if r["safe_time"] is not None}
-    if consumed_tablets is not None and not set(consumed_tablets) <= set(have):
-        return df.where(F.lit(False)), df  # some tablet's safetime unknown
-    if not have:  # no safepoint seen yet: nothing is safe
+    have = {
+        r["tablet_id"]: r["safe_time"]
+        for r in safetimes.collect()
+        if r["safe_time"] is not None
+    }
+    gate = stream_safetime(have, have if consumed_tablets is None else consumed_tablets)
+    if gate is None:  # some tablet's safetime unknown: nothing is safe
         return df.where(F.lit(False)), df
-    # min / threshold comparisons run UNSIGNED (ht_key), like the reference
-    gate_key = min(ht_key_py(v) for v in have.values())
-    released = df.where(ht_key("commit_time") <= F.lit(gate_key))
-    held = df.where(ht_key("commit_time") > F.lit(gate_key))
-    return released, held
+    gate_key = F.lit(ht_key_py(gate))
+    return (
+        df.where(ht_key("commit_time") <= gate_key),
+        df.where(ht_key("commit_time") > gate_key),
+    )
 
 
 def msg_rank() -> Column:
@@ -258,27 +287,44 @@ def assert_tablet_monotonic(df: DataFrame) -> DataFrame:
     )
 
 
-def _fold_agg_exprs(columns) -> list[Column]:
-    off = offset_struct()
-    is_del = F.col("op").isin(*DELETE_OPS)
+def newer_than_delete(off: Column, last_del: Column) -> Column:
+    """The delete barrier: ``off`` is an offset (not NULL) and is newer
+    than the key's latest delete ``last_del``, or the key has no delete.
+    An upsert below the barrier is dead — a reinserted row must not
+    resurrect pre-delete column values (the tombstone/stale-update trap,
+    ``YBExtractNewRecordState.java:64-67``). Never NULL, so a lake column
+    built from it (``_deleted``) stays a required parquet field."""
+    return F.coalesce(off > last_del, off.isNotNull() & last_del.isNull())
+
+
+def fold_aggs(off: Column, cells: dict[str, tuple[Column, Column]]) -> list[Column]:
+    """The per-key LWW fold as aggregate expressions over events with an
+    ``op`` column and the orderable offset ``off``:
+
+    - ``_last_del`` / ``_last_up`` / ``_last_off``: the key's latest
+      delete, latest upsert and latest event offset;
+    - ``_m_<c>`` = ``max(struct(off, v))`` over the upserts that set ``c``,
+      one per ``cells`` entry ``c: (value, set_flag)``.
+
+    A column's final value is ``_m_<c>.v`` where
+    ``newer_than_delete(_m_<c>.off, _last_del)``; the key exists where
+    ``newer_than_delete(_last_up, _last_del)``."""
     is_up = F.col("op").isin(*UPSERT_OPS)
-    aggs = [
-        F.max(F.when(is_del, off)).alias("_last_del"),
+    return [
+        F.max(F.when(F.col("op").isin(*DELETE_OPS), off)).alias("_last_del"),
         F.max(F.when(is_up, off)).alias("_last_up"),
         F.max(off).alias("_last_off"),
-        F.count(F.lit(1)).alias("_n_events"),
+        *[
+            F.max(F.when(is_up & is_set, F.struct(off.alias("off"), v.alias("v")))).alias(f"_m_{c}")
+            for c, (v, is_set) in cells.items()
+        ],
     ]
-    for c in columns:
-        aggs.append(
-            F.max(
-                F.when(is_up & cell_set(c), F.struct(off.alias("off"), F.col(f"after.{c}").alias("v")))
-            ).alias(f"_m_{c}")
-        )
-    return aggs
 
 
 def fold_changes(decoded: DataFrame, columns=TABLE_COLUMNS, key_cols=KEY_COLS) -> DataFrame:
-    """M2 (scale path) — collapse a batch of DML events to one row per key.
+    """M2 (scale path) — collapse a batch of DML events to one row per key,
+    by the fold rule the lake's MERGE also uses (``fold_aggs`` +
+    ``newer_than_delete``).
 
     Output schema: key cols + ``<c>_val``/``<c>_set`` per column +
     ``exists`` (false ⇒ the key's final event is a delete) +
@@ -290,23 +336,20 @@ def fold_changes(decoded: DataFrame, columns=TABLE_COLUMNS, key_cols=KEY_COLS) -
     not resurrect pre-delete column values (the tombstone/stale-update trap,
     ``YBExtractNewRecordState.java:64-67``).
     """
-    folded = decoded.groupBy(*key_cols).agg(*_fold_agg_exprs(columns))
-    del_floor = F.coalesce(F.col("_last_del"), _neg_off())
-    out = folded.withColumn(
-        "exists", F.col("_last_up").isNotNull() & (F.coalesce(F.col("_last_up"), _neg_off()) > del_floor)
-    ).withColumn("had_delete", F.col("_last_del").isNotNull())
-    for c in columns:
-        m = F.col(f"_m_{c}")
-        is_live = m.isNotNull() & (m["off"] > del_floor)
-        out = out.withColumn(f"{c}_set", is_live).withColumn(
-            f"{c}_val", F.when(is_live, m["v"])
-        )
-    return out.select(
+    folded = decoded.groupBy(*key_cols).agg(
+        *fold_aggs(
+            offset_struct(), {c: (F.col(f"after.{c}"), cell_set(c)) for c in columns}
+        ),
+        F.count(F.lit(1)).alias("_n_events"),
+    )
+    last_del = F.col("_last_del")
+    live = {c: newer_than_delete(F.col(f"_m_{c}")["off"], last_del) for c in columns}
+    return folded.select(
         *key_cols,
-        "exists",
-        "had_delete",
+        newer_than_delete(F.col("_last_up"), last_del).alias("exists"),
+        last_del.isNotNull().alias("had_delete"),
         F.col("_last_off").alias("last_offset"),
         F.col("_n_events").alias("n_events"),
-        *[F.col(f"{c}_val") for c in columns],
-        *[F.col(f"{c}_set") for c in columns],
+        *[F.when(live[c], F.col(f"_m_{c}")["v"]).alias(f"{c}_val") for c in columns],
+        *[live[c].alias(f"{c}_set") for c in columns],
     )

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .decode import TABLE_COLUMNS, cell_set
+from .emit import DELETE_OPS
 from .order import ht_to_epoch_ms
 
 
@@ -39,7 +40,7 @@ def striim_compatible(decoded: DataFrame, columns=TABLE_COLUMNS) -> DataFrame:
     opname = (
         F.when(F.col("op").isin("c", "r"), "INSERT")
         .when(F.col("op") == "u", "UPDATE")
-        .when(F.col("op").isin("d", "t"), "DELETE")
+        .when(F.col("op").isin(*DELETE_OPS), "DELETE")
         .otherwise(F.upper(F.col("op")))
     )
     return decoded.select(

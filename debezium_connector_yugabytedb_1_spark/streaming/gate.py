@@ -21,6 +21,14 @@ the live remainder is compacted into one fresh segment. The safetime map is
 driver-side JSON state (one entry per tablet — the same cardinality the
 reference holds on-heap).
 
+The gate runs no pass of its own over a trigger. Its per-tablet safetimes
+come from the caller's stats pass (``streaming.pipeline.window_stats``,
+which ``apply_batch`` already runs), its release threshold is
+``order.stream_safetime``, and a segment's row count and commit-time
+extent are observed on the segment write itself. Its Spark work per
+trigger is that write, plus the read of carried segments when the gate is
+open and some exist (and a compaction's rewrite when one is due).
+
 Why this closes the two documented out-of-order caveats (stream.py): the
 released sets form commit-time-complete prefixes per trigger — the
 transport's per-tablet order + the min-over-all-tablets gate guarantee no
@@ -51,9 +59,10 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import order
 from ..operators._store import atomic_write
 from ..operators.filters import NON_DISPATCHED_OPS
 from ..operators.order import ht_key, ht_key_py
@@ -121,16 +130,12 @@ class ConsistentGate:
 
     # ---------------------------------------------------------- gate
     def stream_safetime(self, st: dict | None = None) -> int | None:
-        """min over the safetimes of every consumed tablet; None while any
-        consumed tablet's safetime is unknown (gate fully closed)."""
+        """``order.stream_safetime`` over the carried safetimes: the
+        unsigned min over every consumed tablet (the assignment, or the
+        tablets seen so far), None while any of them is unknown."""
         st = st or self.state()
-        consumed = set(self.tablets) if self.tablets is not None else set(st["seen"])
-        times = st["safetimes"]
-        if not consumed or not consumed <= set(times):
-            return None
-        # min over the UNSIGNED order (Message.toUnsignedBigInteger:173-184);
-        # the raw wire value achieving it is returned
-        return min((times[t] for t in consumed), key=ht_key_py)
+        consumed = self.tablets if self.tablets is not None else st["seen"]
+        return order.stream_safetime(st["safetimes"], consumed)
 
     # ------------------------------------------------------- segments
     def _seg_df(
@@ -171,20 +176,17 @@ class ConsistentGate:
         """Write ``df`` as a segment and record its row count + commit-time
         extent (in the UNSIGNED-order ht_key domain) — O(#segments) driver
         state used for whole-segment drops and the compaction heuristic.
-        The input plan is evaluated ONCE (the write); the stats come from a
-        cheap single-column scan of the just-written files."""
+        One job: the stats are an Observation on the write itself (an
+        empty input reports ``n=0``)."""
         full = os.path.join(self.path, name)
-        df.write.mode("overwrite").parquet(full)
-        stats = (
-            self.spark.read.schema(df.schema)
-            .parquet(full)
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.min(ht_key("commit_time")).alias("lo"),
-                F.max(ht_key("commit_time")).alias("hi"),
-            )
-            .collect()[0]
-        )
+        obs = Observation()
+        df.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.min(ht_key("commit_time")).alias("lo"),
+            F.max(ht_key("commit_time")).alias("hi"),
+        ).write.mode("overwrite").parquet(full)
+        stats = obs.get
         if stats["n"] == 0:  # nothing held this trigger — drop the husk
             shutil.rmtree(full, ignore_errors=True)
             return
@@ -255,11 +257,20 @@ class ConsistentGate:
                 shutil.rmtree(os.path.join(self.path, entry), ignore_errors=True)
 
     # -------------------------------------------------------- process
-    def process(self, batch: DataFrame, batch_id: int | str) -> DataFrame:
+    def process(
+        self, batch: DataFrame, batch_id: int | str, safetimes: dict
+    ) -> DataFrame:
         """One trigger: advance safetimes from this batch's SAFEPOINTs,
         union the carried backlog, release the ``commit_time <= safetime``
         prefix, append ONLY the newly held rows as one segment. Returns the
-        released rows (lazy — consumed by the caller's apply chain)."""
+        released rows (lazy — consumed by the caller's apply chain).
+
+        ``safetimes``: the ``window_stats`` map of ``batch`` — every tablet
+        in the trigger mapped to its unsigned-max SAFEPOINT commit time, or
+        None. Its keys join the seen-tablet set; its values are max-merged
+        (unsigned) into the carried safetimes, so a replay is idempotent.
+        Spark work: the held-rows segment write, plus the carried-segment
+        read when the gate is open over a backlog."""
         bid = str(batch_id)
         st = self.state()
         replay = st["last_bid"] is not None and bid == st["last_bid"]
@@ -277,27 +288,12 @@ class ConsistentGate:
             "segments": [dict(s) for s in st["segments"]],
             "released_upto": st["released_upto"],
         }
-        # one tiny aggregation collects both the safepoint watermarks and
-        # the consumed-tablet set (driver state is O(#tablets)); the merge
-        # is a per-tablet max — idempotent under replay
-        obs = (
-            batch.groupBy("tablet_id")
-            .agg(
-                F.max(
-                    F.when(F.col("op") == "SAFEPOINT", F.col("commit_time"))
-                ).alias("safe_time")
-            )
-            .collect()
-        )
-        for r in obs:
-            t = r["tablet_id"]
+        for t, safe in safetimes.items():
             if t not in st["seen"]:
                 st["seen"].append(t)
-            if r["safe_time"] is not None:
+            if safe is not None:
                 st["safetimes"][t] = max(
-                    st["safetimes"].get(t, r["safe_time"]),
-                    r["safe_time"],
-                    key=ht_key_py,
+                    st["safetimes"].get(t, safe), safe, key=ht_key_py
                 )
         new_rows = batch.where(~F.col("op").isin(*NON_DISPATCHED_OPS))
         gate = self.stream_safetime(st)

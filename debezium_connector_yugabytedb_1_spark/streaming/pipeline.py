@@ -71,6 +71,7 @@ from ..operators.metrics import (
     to_partial,
     warn_wal_backlog,
 )
+from ..operators.order import max_ht
 
 
 def merge_window(
@@ -149,7 +150,10 @@ def window_stats(window: DataFrame, n_buckets: int, metered: Column | None) -> d
     (O2, ``YugabyteDBStreamingChangeEventSource.java:788-797``), row
     counts, the touched-bucket set (incl. PK-update old keys,
     decoded inline for the rare pku rows), the DDL markers, the table
-    set, and — when ``metered`` is given — the ``MeterPartial`` rows of
+    set, ``safetimes`` (every tablet the window holds, mapped to the
+    UNSIGNED max commit time of its SAFEPOINTs, ``order.max_ht``, as the
+    raw wire value, or None when it has none: the consistent gate's
+    input), and — when ``metered`` is given — the ``MeterPartial`` rows of
     the rows where it holds. ``CdcPipeline`` meters the rows its apply
     keeps: no DDL markers, and only rows its ``resume_predicate`` passes;
     ``apply_batch`` meters every row of the trigger. A DDL window adds a
@@ -198,15 +202,20 @@ def window_stats(window: DataFrame, n_buckets: int, metered: Column | None) -> d
             ).alias("ddl_idx"),
             # table-poller input: bounded by #tables, map-side combinable
             F.collect_set("table").alias("tables"),
+            # op is a grouping key: only a SAFEPOINT group carries a value
+            F.when(op == "SAFEPOINT", max_ht("commit_time")).alias("safe"),
             *aggs,
         )
         .collect()
     )
     # roll the (tablet_id, op) groups up per tablet
     offsets: dict[str, tuple] = {}
+    safetimes: dict[str, int | None] = {}
     for r in rows:
-        o = tuple(r["o"])
-        offsets[r["tablet_id"]] = max(offsets.get(r["tablet_id"], o), o)
+        t, o = r["tablet_id"], tuple(r["o"])
+        offsets[t] = max(offsets.get(t, o), o)
+        if r["safe"] is not None or t not in safetimes:
+            safetimes[t] = r["safe"]
     ddl_indexes = sorted(int(i) for r in rows for i in r["ddl_idx"])
     ddls = []
     if ddl_indexes:
@@ -228,6 +237,7 @@ def window_stats(window: DataFrame, n_buckets: int, metered: Column | None) -> d
         "buckets": sorted({int(b) for r in rows for b in r["buckets"]}),
         "ddls": ddls,
         "tables": {t for r in rows for t in r["tables"]},
+        "safetimes": safetimes,
         "partials": [] if metered is None else [to_partial(r) for r in rows],
     }
 

@@ -11,8 +11,9 @@ trigger), demonstrating the production topology:
 Each trigger costs what a pipeline window costs: one ``window_stats``
 aggregation (ack offsets, DDL markers, touched buckets, meter partials),
 one fused fold+MERGE, and a driver-side checkpoint commit and meter fold.
-A gated trigger adds the gate's own passes and a stats pass over the rows
-it releases.
+A gated trigger adds the write of the rows it holds (the gate takes its
+safetimes from the trigger's own stats pass) and a stats pass over the
+rows it releases.
 
 Watermarking note: the safepoint stream carries the source's safe time (the
 reference Merger's gate, ``Merger.java:116-133``); in Structured Streaming
@@ -67,8 +68,9 @@ def apply_batch(
     ``window_stats`` pass: ONE aggregation of the trigger gives the offsets
     to ack, the DDL markers, the touched buckets and, with ``task_metrics``,
     the meter partials of every wire row the trigger consumed, DDL markers
-    included. With a gate, the DDLs and buckets come from a second stats
-    pass over the rows it releases.
+    included. With a gate, the same pass gives the gate its per-tablet
+    safetimes, and the DDLs and buckets come from a second stats pass over
+    the rows it releases.
 
     No resume predicate here: Structured Streaming's file source does NOT
     deliver rows offset-ordered across triggers (files are grouped by
@@ -95,7 +97,7 @@ def apply_batch(
         # pending store is durable first; a crash between the two leaves
         # un-acked offsets, which the source re-delivers and the gate's
         # replay path re-derives idempotently (gate.py module docstring)
-        batch = gate.process(batch, batch_id)
+        batch = gate.process(batch, batch_id, stats["safetimes"])
         ckpt.commit(stats["offsets"])
         applied = window_stats(batch, table.n_buckets, None)
     # each DDL applies exactly at its offset: the events before/after it

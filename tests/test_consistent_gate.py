@@ -22,6 +22,8 @@ from debezium_connector_yugabytedb_1_spark.streaming.gate import ConsistentGate
 from debezium_connector_yugabytedb_1_spark.streaming.pipeline import CdcPipeline
 from debezium_connector_yugabytedb_1_spark.streaming.stream import apply_batch
 
+from .gating import gate_process, trigger_safetimes
+
 N = 4000
 N_TABLETS = 4
 DDL = (N // 2,)
@@ -93,10 +95,10 @@ def test_gate_holds_all_while_any_tablet_safetime_unknown(spark, tmp_path):
     ev = _corpus(spark)
     triggers, tablets = _triggers(spark, ev)
     gate = ConsistentGate(spark, str(tmp_path / "g"), tablets=tablets)
-    released = gate.process(triggers[0], 0)
+    released = gate_process(gate, triggers[0], 0)
     assert released.count() == 0  # the DDL tablet has not spoken yet
     assert gate.stream_safetime() is None
-    released2 = gate.process(triggers[1], 1)
+    released2 = gate_process(gate, triggers[1], 1)
     assert released2.count() > 0
     # released prefix is exactly the commit-time ball below the stream safetime
     st = gate.stream_safetime()
@@ -108,7 +110,7 @@ def test_gate_pending_survives_restart(spark, tmp_path):
     ev = _corpus(spark)
     triggers, tablets = _triggers(spark, ev)
     path = str(tmp_path / "g2")
-    ConsistentGate(spark, path, tablets=tablets).process(triggers[0], 0)
+    gate_process(ConsistentGate(spark, path, tablets=tablets), triggers[0], 0)
     # fresh object over the same store: state + pending carried
     g2 = ConsistentGate(spark, path, tablets=tablets)
     assert g2.flush().count() == triggers[0].where(
@@ -144,7 +146,7 @@ def test_gate_append_only_bytes_while_closed(spark, tmp_path):
     gate = ConsistentGate(spark, path, tablets=tablets)
     seen_bytes = {}
     for i, chunk in enumerate(chunks):
-        released = gate.process(chunk, i)
+        released = gate_process(gate, chunk, i)
         assert released.count() == 0  # DDL tablet silent -> closed
         sizes = _dir_bytes(path)
         segs = [n for n in sizes if n.startswith("seg_b")]
@@ -170,9 +172,9 @@ def test_gate_replay_of_same_trigger_is_idempotent(spark, tmp_path):
 
     # direct unit: process twice with the state save in between
     g = ConsistentGate(spark, str(tmp_path / "g_unit"), tablets=tablets)
-    g.process(triggers[0], 0)
-    rel_a = sorted(str(r) for r in g.process(triggers[1], 1).collect())
-    rel_b = sorted(str(r) for r in g.process(triggers[1], 1).collect())
+    gate_process(g, triggers[0], 0)
+    rel_a = sorted(str(r) for r in gate_process(g, triggers[1], 1).collect())
+    rel_b = sorted(str(r) for r in gate_process(g, triggers[1], 1).collect())
     assert rel_b == rel_a and len(rel_a) > 0
 
     # end-to-end: every trigger applied twice (replay) through apply_batch
@@ -203,9 +205,10 @@ def test_gate_sweep_drops_released_segments_and_compacts(spark, tmp_path):
     gate = ConsistentGate(spark, path, tablets=["a", "b"])
     for i, lo in enumerate((1, 11, 21)):  # three closed-gate segments
         batch = mk([("a", "c", ct, f"k{ct}") for ct in range(lo, lo + 10)])
-        assert gate.process(batch, i).count() == 0
+        assert gate_process(gate, batch, i).count() == 0
     # safepoints open the gate at min(100, 17) = 17
-    rel = gate.process(
+    rel = gate_process(
+        gate,
         mk([("a", "SAFEPOINT", 100, None), ("b", "SAFEPOINT", 17, None)]), 3
     )
     assert sorted(r["commit_time"] for r in rel.collect()) == list(range(1, 18))
@@ -221,7 +224,7 @@ def test_gate_sweep_drops_released_segments_and_compacts(spark, tmp_path):
         range(18, 31)
     )
     # a NEW trigger id proves the previous one committed -> physical cleanup
-    gate.process(mk([("a", "NOOP", 101, None)]), 4)
+    gate_process(gate, mk([("a", "NOOP", 101, None)]), 4)
     left = {n for n in os.listdir(path) if n.startswith(("seg_", "compact_"))}
     assert left == {"compact_b3"}
     assert sorted(r["commit_time"] for r in gate.flush().collect()) == list(
@@ -242,18 +245,20 @@ def test_gate_late_row_below_watermark_released_not_lost(spark, tmp_path):
         return spark.createDataFrame(rows, schema)
 
     gate = ConsistentGate(spark, str(tmp_path / "g_late"))  # tablets unknown
-    rel1 = gate.process(
+    rel1 = gate_process(
+        gate,
         mk([("a", "c", 50, "k50"), ("a", "SAFEPOINT", 100, None)]), 0
     )
     assert [r["commit_time"] for r in rel1.collect()] == [50]
     # tablet b appears with rows at 80 and 120; its safetime is unknown, so
     # the gate is fully closed — but 80 is already below the watermark 100
-    rel2 = gate.process(mk([("b", "c", 80, "k80"), ("b", "c", 120, "k120")]), 1)
+    rel2 = gate_process(gate, mk([("b", "c", 80, "k80"), ("b", "c", 120, "k120")]), 1)
     assert sorted(r["commit_time"] for r in rel2.collect()) == [80]
     # 120 is genuinely pending; nothing was lost
     assert sorted(r["commit_time"] for r in gate.flush().collect()) == [120]
     # when b's safetime arrives the pending row releases normally
-    rel3 = gate.process(
+    rel3 = gate_process(
+        gate,
         mk([("a", "SAFEPOINT", 130, None), ("b", "SAFEPOINT", 125, None)]), 2
     )
     assert [r["commit_time"] for r in rel3.collect()] == [120]
@@ -274,13 +279,14 @@ def test_gate_release_read_prunes_segments_by_extent(spark, tmp_path):
     # three disjoint-extent segments accumulate while the gate is closed
     for i, lo in enumerate((1, 101, 201)):
         batch = mk([("a", "c", ct, f"k{ct}") for ct in range(lo, lo + 10)])
-        assert gate.process(batch, i).count() == 0
+        assert gate_process(gate, batch, i).count() == 0
     # closed gate + deep backlog: the release path reads NO segment files
-    assert gate.process(mk([("a", "c", 301, "k301")]), 3).count() == 0
+    assert gate_process(gate, mk([("a", "c", 301, "k301")]), 3).count() == 0
     # (the current trigger's own segment is written after the read: live=3)
     assert gate.last_release_scan == {"segments_read": 0, "segments_live": 3}
     # gate opens at 5: only the (1..10) segment is extent-eligible
-    rel = gate.process(
+    rel = gate_process(
+        gate,
         mk([("a", "SAFEPOINT", 500, None), ("b", "SAFEPOINT", 5, None)]), 4
     )
     assert sorted(r["commit_time"] for r in rel.collect()) == [1, 2, 3, 4, 5]
@@ -291,3 +297,39 @@ def test_gate_release_read_prunes_segments_by_extent(spark, tmp_path):
         list(range(6, 11)) + list(range(101, 111)) + list(range(201, 211))
         + [301]
     )
+
+
+def test_gate_process_runs_one_spark_job(spark, tmp_path):
+    """The gate runs no pass of its own: its safetimes come from the
+    trigger's stats pass and a segment's stats from an Observation on its
+    write. With no carried segment and no compaction, ``process`` runs
+    exactly one Spark job (the held-rows write), whether the gate stays
+    closed or opens."""
+    schema = "tablet_id string, op string, commit_time long, k string"
+
+    def jobs():
+        return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+    ev = _corpus(spark)
+    triggers, tablets = _triggers(spark, ev)
+    opening = spark.createDataFrame(
+        [
+            ("a", "c", 50, "k50"),
+            ("b", "c", 150, "k150"),
+            ("a", "SAFEPOINT", 100, None),
+            ("b", "SAFEPOINT", 120, None),
+        ],
+        schema,
+    )
+    cases = [
+        (ConsistentGate(spark, str(tmp_path / "g_closed"), tablets=tablets), triggers[0]),
+        (ConsistentGate(spark, str(tmp_path / "g_open"), tablets=["a", "b"]), opening),
+    ]
+    for gate, batch in cases:
+        safetimes = trigger_safetimes(batch)
+        j0 = jobs()
+        released = gate.process(batch, 0, safetimes)
+        assert jobs() - j0 == 1
+        assert len(gate.state()["segments"]) == 1  # the held rows, observed
+    assert [r["commit_time"] for r in released.collect()] == [50]
+    assert gate.state()["segments"][0]["rows"] == 1

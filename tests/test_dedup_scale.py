@@ -235,6 +235,32 @@ def test_minhash_index_failed_write_waits_out_writers(spark, tmp_path, monkeypat
     assert idx._manifest() == before
 
 
+
+def test_minhash_lsh_probe_thread_ends_with_a_failed_call(spark, monkeypatch):
+    """The df-cap probe runs in a worker thread while the candidate plan is
+    built; when that build fails, the call still shuts the probe pool down
+    and waits it out — no probe thread outlives the call."""
+    import threading
+
+    from debezium_connector_yugabytedb_1_spark.operators import dedup
+
+    docs = _seeded_docs(spark, n_base=6)
+
+    def pool_threads():
+        return {
+            t for t in threading.enumerate()
+            if t.name.startswith("ThreadPoolExecutor") and t.is_alive()
+        }
+
+    def failing(*args, **kwargs):
+        raise RuntimeError("injected candidate-plan failure")
+
+    running = pool_threads()
+    monkeypatch.setattr(dedup, "_buckets_from_sigs", failing)
+    with pytest.raises(RuntimeError, match="injected"):
+        minhash_lsh_pairs(docs, max_df=64)
+    assert not pool_threads() - running
+
 def test_minhash_index_pruned_reads_bounded_and_compact(spark, tmp_path):
     """The 100 TB claim, tested: an increment's reads are bounded by the
     partitions its own buckets/candidates touch, NOT by corpus size —

@@ -28,6 +28,8 @@ from debezium_connector_yugabytedb_1_spark.streaming.gate import (
     ConsistentGate,
 )
 
+from .gating import gate_process
+
 N_TRIGGERS = 60
 
 
@@ -55,7 +57,7 @@ def test_gate_segments_bounded_under_cold_tablet(spark, tmp_path):
         w = ev.where(
             (F.col("index") >= i * per) & (F.col("index") < (i + 1) * per)
         )
-        released += gate.process(w, i).count()
+        released += gate_process(gate, w, i).count()
         st = gate.state()
         max_segments = max(max_segments, len(st["segments"]))
         max_state_bytes = max(
@@ -84,7 +86,7 @@ def test_gate_segments_bounded_under_cold_tablet(spark, tmp_path):
         .withColumn("op", F.lit("SAFEPOINT"))
         .withColumn("commit_time", F.lit(2**62))
     )
-    out = gate.process(safepoint, N_TRIGGERS).count()
+    out = gate_process(gate, safepoint, N_TRIGGERS).count()
     drained = gate.flush()
     leftover = 0 if drained is None else drained.count()
     assert out + leftover == total_dispatched

@@ -12,7 +12,12 @@ from debezium_connector_yugabytedb_1_spark.operators.order import (
     ht_key_py,
     release_gate,
 )
+from debezium_connector_yugabytedb_1_spark.operators.filters import (
+    extract_safepoint_watermark,
+)
 from debezium_connector_yugabytedb_1_spark.streaming.gate import ConsistentGate
+
+from .gating import gate_process, trigger_safetimes
 
 U64 = 1 << 64
 SCHEMA = (
@@ -21,8 +26,8 @@ SCHEMA = (
 )
 
 
-def _row(ct, op="c", idx=0):
-    return ("t1", op, ct, ct, 1, idx, 0)
+def _row(ct, op="c", idx=0, tablet="t1"):
+    return (tablet, op, ct, ct, 1, idx, 0)
 
 
 @given(st_.integers(-(1 << 63), (1 << 63) - 1), st_.integers(-(1 << 63), (1 << 63) - 1))
@@ -50,19 +55,53 @@ def test_release_gate_unsigned_threshold(spark):
     released, held = release_gate(df, safetimes, consumed_tablets=["t1"])
     assert sorted(r["commit_time"] for r in released.collect()) == [-7, 10]
     assert [r["commit_time"] for r in held.collect()] == [-3]
+    # the watermark itself: a second, OLDER safepoint (raw 5) in the same
+    # batch must not win a signed max over -5
+    points = spark.createDataFrame(
+        [_row(5, op="SAFEPOINT"), _row(-5, op="SAFEPOINT")], SCHEMA
+    )
+    safetimes = extract_safepoint_watermark(points)
+    assert [tuple(r) for r in safetimes.collect()] == [("t1", -5)]
+    released, held = release_gate(df, safetimes, consumed_tablets=["t1"])
+    assert sorted(r["commit_time"] for r in released.collect()) == [-7, 10]
+    assert [r["commit_time"] for r in held.collect()] == [-3]
+
+
+def test_window_stats_safetimes_take_the_unsigned_max(spark):
+    """Every tablet of the window maps to its unsigned-max SAFEPOINT commit
+    time, or None when it has rows but no SAFEPOINT."""
+    batch = spark.createDataFrame(
+        [
+            _row(5, op="SAFEPOINT"),
+            _row(-5, op="SAFEPOINT"),
+            _row(10),
+            _row(7, tablet="t2"),
+            _row(8, op="NOOP", tablet="t2"),
+        ],
+        SCHEMA,
+    )
+    assert trigger_safetimes(batch) == {"t1": -5, "t2": None}
 
 
 def test_consistent_gate_unsigned_threshold(spark, tmp_path):
     g = ConsistentGate(spark, str(tmp_path / "g"), tablets=["t1"])
     batch = spark.createDataFrame(
-        [_row(10), _row(-7), _row(-3), _row(-5, op="SAFEPOINT")], SCHEMA
+        [
+            _row(10),
+            _row(-7),
+            _row(-3),
+            _row(5, op="SAFEPOINT"),
+            _row(-5, op="SAFEPOINT"),
+        ],
+        SCHEMA,
     )
-    rel = g.process(batch, 0)
+    rel = gate_process(g, batch, 0)
+    assert g.state()["safetimes"]["t1"] == -5
     assert sorted(r["commit_time"] for r in rel.collect()) == [-7, 10]
     assert [r["commit_time"] for r in g.flush().collect()] == [-3]
     # a later LOWER-unsigned safepoint must not regress the safetime max-merge
     batch2 = spark.createDataFrame([_row(99, op="SAFEPOINT")], SCHEMA)
-    assert g.process(batch2, 1).count() == 0
+    assert gate_process(g, batch2, 1).count() == 0
     assert g.state()["safetimes"]["t1"] == -5
 
 
@@ -110,3 +149,17 @@ def test_lineage_and_meters_take_the_unsigned_max_commit_time(spark):
     assert snap["LastTransactionId"] == "B"
     assert snap["LastEvent"] == "COMMIT/t1/3"
     assert snap["MilliSecondsBehindSource"] == 100
+
+
+def test_txn_metadata_span_is_unsigned(spark):
+    """A transaction whose last DML has a sign-bit HT (a negative long on
+    the wire) ends at that HT and begins at the small one."""
+    from debezium_connector_yugabytedb_1_spark.operators.metrics import txn_metadata
+
+    small, big = 5 << 12, ht_key_py(5 << 12)
+    df = spark.createDataFrame(
+        [("A", "c", small), ("A", "u", big)],
+        "txn_id string, op string, commit_time long",
+    )
+    row = txn_metadata(df).collect()[0]
+    assert (row["begin_time"], row["end_time"]) == (small, big)

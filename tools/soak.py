@@ -100,7 +100,7 @@ def main() -> int:
     for i in range(args.batches):
         lo = i * per
         # materialize the window ONCE: apply_batch runs several actions
-        # (offsets agg, gate safepoint agg, DDL probe, segment write, the
+        # (stats agg, DDL probe, segment write, released-side stats, the
         # merge) and each would otherwise recompute the generation lineage
         w = generate_events(
             spark, per, start=lo, n_tablets=args.n_tablets,
