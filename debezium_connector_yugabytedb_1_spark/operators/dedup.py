@@ -17,6 +17,15 @@ Scale notes (the whole point of each design):
   ``sum`` aggregates (no Python anywhere); near-dup = identical band
   prefixes.
 - **embedding cosine**: see similarity.py (shares the kNN machinery).
+
+Each shared rule has one definition here: ``_band_pairs`` is the LSH band
+collision self-join (MinHash+LSH, SimHash, ``MinHashIndex``'s new × new
+candidates), ``_verify_jaccard`` the exact-Jaccard verify of candidate
+pairs with its join-strategy pin, ``_jaccard_at_least`` the threshold
+test (also n-gram Jaccard's), and ``_input_sizes`` the input-size probe
+behind every size-regime switch (``_spread``, ``_small_input``,
+``mixing``). The persisted indexes (``ExactDedupIndex``,
+``MinHashIndex``) add and compact through ``_store.BatchStore``.
 """
 
 from __future__ import annotations
@@ -24,9 +33,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..config import validate_config
 from ..functions import norm_tokens, word_shingles
-from ._store import BatchStore, write_batch
+from ._store import BatchStore
 
+
+def _input_sizes(df: DataFrame) -> list[int] | None:
+    """Byte sizes of the files behind ``df`` (``[]`` when it is not
+    file-backed), or None when they cannot be probed. The one input-size
+    probe of the regime switches: ``_spread``, ``_small_input`` and the
+    ``mixing`` broadcast and two-pass choices."""
+    import os
+
+    try:
+        return [os.path.getsize(f.replace("file:", "")) for f in df.inputFiles()]
+    except Exception:
+        return None
 
 
 def _spread(df: DataFrame, min_bytes: int = 256 << 10, cols=None) -> DataFrame:
@@ -40,12 +62,8 @@ def _spread(df: DataFrame, min_bytes: int = 256 << 10, cols=None) -> DataFrame:
     this partitioning (``HashPartitioning ⊆ ClusteredDistribution``), so the
     aggregations run complete-mode in the SAME stage — the one doc shuffle
     replaces the (larger) exploded-token/shingle shuffle entirely."""
-    import os
-
-    try:
-        files = df.inputFiles()
-        total = sum(os.path.getsize(f.replace("file:", "")) for f in files)
-    except Exception:
+    sizes = _input_sizes(df)
+    if not sizes or sum(sizes) <= min_bytes:
         return df
     # full fan-out on purpose (measured r7): shingling/token expansion is
     # CPU-dense per input byte, so even sub-MB inputs want every core — a
@@ -53,10 +71,8 @@ def _spread(df: DataFrame, min_bytes: int = 256 << 10, cols=None) -> DataFrame:
     # shingle aggregations and ran minhash/ngram 2.2-2.4x SLOWER at sf0.1
     target = df.sparkSession.sparkContext.defaultParallelism
     if cols:
-        if files and total > min_bytes:
-            return df.repartition(target, *cols)
-        return df
-    if files and total > min_bytes and len(files) < target:
+        return df.repartition(target, *cols)
+    if len(sizes) < target:
         return df.repartition(target)
     return df
 
@@ -70,14 +86,60 @@ def _small_input(df: DataFrame, max_bytes: int = 64 << 20) -> bool:
     sf1.0, inherited from r6). Callers broadcast the doc-bounded side
     explicitly when this returns True and pin a sort-merge join when it
     does not — the choice must never ride on a post-explode estimate."""
-    import os
+    sizes = _input_sizes(df)
+    return bool(sizes) and sum(sizes) <= max_bytes
 
-    try:
-        files = df.inputFiles()
-        total = sum(os.path.getsize(f.replace("file:", "")) for f in files)
-        return bool(files) and total <= max_bytes
-    except Exception:
-        return False
+
+def _jaccard_at_least(threshold: float):
+    """``inter / (na + nb - inter) >= threshold`` over integer counts,
+    without the division: exact, and replicable by the oracle."""
+    return F.col("inter") * F.lit(1.0) >= F.lit(threshold) * (
+        F.col("na") + F.col("nb") - F.col("inter")
+    )
+
+
+def _band_pairs(banded: DataFrame) -> DataFrame:
+    """(doc_a, doc_b), doc_a < doc_b, for every two docs of ``banded``
+    (doc_id, band, bucket) that share a (band, bucket): the LSH band
+    collision self-join. A pair colliding in several bands repeats;
+    callers take ``distinct``."""
+    return (
+        banded.select(F.col("doc_id").alias("doc_a"), "band", "bucket")
+        .join(
+            banded.select(F.col("doc_id").alias("doc_b"), "band", "bucket"),
+            ["band", "bucket"],
+        )
+        .where(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b")
+    )
+
+
+def _verify_jaccard(
+    cand: DataFrame, sets: DataFrame, docs: DataFrame, threshold: float
+) -> DataFrame:
+    """The candidate pairs of ``cand`` (doc_a, doc_b) whose shingle sets in
+    ``sets`` (doc_id, sh) reach ``threshold`` exact Jaccard, as (doc_a,
+    doc_b, inter, na, nb). Only candidates are verified, expression-side:
+    that is what keeps LSH the linear-cost path, and the shingle arrays
+    are per-doc state, never per-corpus.
+
+    Join-strategy pin (see ``_small_input``): the set sides are
+    doc-bounded, while ``cand`` sits on fabricated checkpoint stats and
+    must never become the broadcast build of these joins above the
+    small-input bound of ``docs``."""
+    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
+    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
+    if not _small_input(docs):
+        cand = cand.hint("merge")
+        sa, sb = sa.hint("merge"), sb.hint("merge")
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    na, nb = F.size("sh_a"), F.size("sh_b")
+    return (
+        cand.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .select("doc_a", "doc_b", inter.alias("inter"), na.alias("na"), nb.alias("nb"))
+        .where(_jaccard_at_least(threshold))
+    )
 
 
 # ---------------------------------------------------------------- exact
@@ -162,7 +224,7 @@ def ngram_jaccard_pairs(
     return (
         inter.join(sa, "doc_a")
         .join(sb, "doc_b")
-        .where(F.col("inter") * F.lit(1.0) >= F.lit(threshold) * (F.col("na") + F.col("nb") - F.col("inter")))
+        .where(_jaccard_at_least(threshold))
         .select("doc_a", "doc_b", "inter", "na", "nb")
     )
 
@@ -236,11 +298,7 @@ def minhash_lsh_pairs(
     the same materialized rows. With ``max_df`` the
     df-cap is applied by exploding the cached sets (cheap — no re-shingling
     of text) and anti-joining the broadcast hot-shingle list."""
-    if n_hashes % bands != 0:
-        raise ValueError(
-            f"n_hashes ({n_hashes}) must be divisible by bands ({bands}); "
-            "a non-integer rows-per-band would silently floor-divide"
-        )
+    validate_config({"n_hashes": n_hashes, "bands": bands})
     per_doc = _doc_sets_sigs(docs, text_col, k, n_hashes)
     # df-cap probe launched as a background job the moment the per-doc rows
     # exist: whether any shingle exceeds max_df decides which verify-set
@@ -261,25 +319,8 @@ def minhash_lsh_pairs(
         pool = ThreadPoolExecutor(1)
         probe = pool.submit(hot.isEmpty)
     try:
-        banded = _buckets_from_sigs(per_doc, n_hashes, bands)
-        a = banded.alias("a")
-        b_ = banded.alias("b")
-        cand = (
-            a.join(
-                b_,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-            .distinct()
-        )
-        # Verify ONLY the candidate pairs: join each side to its per-doc
-        # shingle set and compute the exact Jaccard expression-side. This is
-        # what makes LSH the linear-cost path — the old all-pairs exact
-        # recomputation would have discarded LSH's entire advantage. Shingle
-        # arrays are bounded by doc length (per-doc state, never per-corpus),
-        # and the same ``max_df`` cap as ``ngram_jaccard_pairs`` keeps the
+        cand = _band_pairs(_buckets_from_sigs(per_doc, n_hashes, bands)).distinct()
+        # The same ``max_df`` cap as ``ngram_jaccard_pairs`` keeps the
         # shingle space identical, so LSH pairs are a strict subset of the
         # exact pairs at equal thresholds.
         if max_df is None:
@@ -301,27 +342,7 @@ def minhash_lsh_pairs(
         if pool is not None:
             # on the error path too: no probe thread outlives the call
             pool.shutdown(cancel_futures=True)
-    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    # join-strategy pin (see _small_input): the verify sides are doc-
-    # bounded; the candidate side sits on fabricated checkpoint stats and
-    # must never become the broadcast build of these joins at scale
-    if not _small_input(docs):
-        cand = cand.hint("merge")
-        sa, sb = sa.hint("merge"), sb.hint("merge")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    na, nb = F.size("sh_a"), F.size("sh_b")
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a", "doc_b", inter.alias("inter"), na.alias("na"), nb.alias("nb")
-        )
-        .where(
-            F.col("inter") * F.lit(1.0)
-            >= F.lit(threshold) * (F.col("na") + F.col("nb") - F.col("inter"))
-        )
-    )
+    return _verify_jaccard(cand, sets, docs, threshold)
 
 
 # ---------------------------------------------------------------- simhash
@@ -400,17 +421,7 @@ def simhash_pairs(docs: DataFrame, text_col: str = "text", prefix_bits: int = 16
             )
         ).alias("band", "bucket"),
     )
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    return _band_pairs(banded).distinct()
 
 
 # ----------------------------------------------------- group resolution
@@ -647,26 +658,11 @@ class ExactDedupIndex(BatchStore):
             .select("text_md5", F.col("_batch_first").alias("first_id"))
             .withColumn("hkey", self._hkey())
         )
-        n = self._next_slot()
         # the result materialization and the store write are independent
-        # jobs over the checkpointed batch (the write's ``batch=<n>`` dir
-        # is invisible until the manifest commit, and ``out``'s plan reads
-        # only the committed dirs listed above) — run them concurrently so
-        # the add's tail pays the longer job, not the sum; ``out`` must
-        # still materialize BEFORE the commit (a later add/compact may
-        # delete the committed dirs its plan reads)
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _write_new():
-            write_batch(new, self._hashes, "hkey", n)
-
-        with ThreadPoolExecutor(2) as ex:
-            fut_out = ex.submit(out_plan.localCheckpoint)
-            fut_write = ex.submit(_write_new)
-            out = fut_out.result()
-            fut_write.result()  # re-raise any write failure before the commit
-        self._commit_manifest(self._manifest() + [n])
-        return out
+        # jobs over the checkpointed batch: ``out``'s plan reads only the
+        # committed dirs listed above, so it runs as the add's body while
+        # the store writes ``new``
+        return self._add_batch([(new, self._hashes, "hkey")], out_plan.localCheckpoint)[1]
 
     def compact(self) -> int:
         """Fold every committed batch into one (listing stays O(n_parts) on
@@ -675,20 +671,9 @@ class ExactDedupIndex(BatchStore):
         batches = self._manifest()
         if len(batches) <= 1:
             return 0
-        stored, _, _ = self._pruned_read(
-            self._hashes, "hkey", set(range(self.n_parts))
-        )
-        if stored is None:  # committed batches with zero data rows
-            self._commit_compacted(max(batches), self._hashes)
-            return len(batches)
-        n = self._next_slot()
         # hashes are add-once (only unseen ones are written), so the fold
-        # is a plain rewrite; project away read-side partition cols
-        write_batch(
-            stored.select("text_md5", "first_id").withColumn("hkey", self._hkey()),
-            self._hashes, "hkey", n,
-        )
-        self._commit_compacted(n, self._hashes)
+        # is a plain rewrite
+        self._compact({self._hashes: "hkey"})
         return len(batches)
 
 
@@ -717,11 +702,14 @@ class MinHashIndex(BatchStore):
       the candidate set is small); the re-add guard reads just the tiny
       doc_id column of the new batch's skey partitions.
 
-    Partition dirs accumulate per batch (O(#batches × parts) directories);
-    ``compact()`` rewrites the store into ONE batch so listing and
-    per-partition file counts stay flat on long-running ingest. Per-add
-    scan stats land in ``last_add_stats`` (partitions read vs total) — the
-    boundedness is tested, not claimed.
+    Both stores follow ``_store.BatchStore``'s protocol: ``add`` writes
+    them as one slot while the candidate/verify phase runs, and commits it
+    once that phase's pairs are materialized. Partition dirs accumulate
+    per batch (O(#batches × parts) directories); ``compact()`` rewrites
+    both stores into ONE batch so listing and per-partition file counts
+    stay flat on long-running ingest. Per-add scan stats land in
+    ``last_add_stats`` (partitions read vs total) — the boundedness is
+    tested, not claimed.
 
     ``add`` returns verified pairs among (new × stored) ∪ (new × new) at
     the configured threshold — exactly the pairs batch
@@ -747,10 +735,7 @@ class MinHashIndex(BatchStore):
     ):
         import os
 
-        if n_hashes % bands != 0:
-            raise ValueError(
-                f"n_hashes ({n_hashes}) must be divisible by bands ({bands})"
-            )
+        validate_config({"n_hashes": n_hashes, "bands": bands})
         # the index geometry is baked into the stored postings/sets:
         # reopening with different (k, n_hashes, bands) would join
         # incomparable hash families, and different partition counts would
@@ -798,37 +783,16 @@ class MinHashIndex(BatchStore):
             "pkey", self._pkey()
         )
         committed = self._manifest()
-        # ---- the two store writes depend ONLY on per_doc (checkpointed)
-        # and banded (a projection over it), never on the candidate/verify
-        # phase, and the new ``batch=<n>`` dirs stay invisible until the
-        # manifest commit — so submit them NOW and let their wall hide under
-        # the entire candidate phase instead of joining its tail. A
-        # retried failed add (incl. a guard rejection below) reuses slot n
-        # (max+1 is stable until the commit) and overwrites the orphan.
-        from concurrent.futures import ThreadPoolExecutor
-
-        n = self._next_slot()
-
-        def _write_buckets():
-            write_batch(banded, self._buckets, "pkey", n)
-
-        def _write_sets():
-            write_batch(
-                per_doc.select("doc_id", "sh").withColumn("skey", self._skey()),
-                self._sets, "skey", n,
-            )
-
-        # leaving the ``with`` block waits both writers out on every exit
-        # path, a failed write or candidate phase included (a caller may
-        # delete the store directory on error; racing writers corrupt
-        # nothing uncommitted, but must not outlive the call)
-        with ThreadPoolExecutor(2) as pool:
-            write_futs = [pool.submit(_write_buckets), pool.submit(_write_sets)]
-            pairs = self._candidate_verify_phase(per_doc, banded, committed, docs)
-            for f in write_futs:
-                f.result()  # re-raise any write failure before the commit
-        self._commit_manifest(self._manifest() + [n])  # atomically visible
-        return pairs
+        # the two store writes depend ONLY on per_doc (checkpointed) and
+        # banded (a projection over it), never on the candidate/verify
+        # phase, so their wall hides under that whole phase, which runs as
+        # the add's body. A retried failed add (incl. a guard rejection
+        # below) reuses the slot and overwrites the orphan.
+        sets = per_doc.select("doc_id", "sh").withColumn("skey", self._skey())
+        return self._add_batch(
+            [(banded, self._buckets, "pkey"), (sets, self._sets, "skey")],
+            lambda: self._candidate_verify_phase(per_doc, banded, committed, docs),
+        )[1]
 
     def _candidate_verify_phase(self, per_doc, banded, committed, docs):
         """Candidates + pruned verify + the pairs materialization — every
@@ -882,15 +846,7 @@ class MinHashIndex(BatchStore):
             # fast path; an add against a fresh index previously still paid
             # three driver jobs to learn the store was empty)
             stored_b, g_read, g_total, p_read, p_total = None, 0, 0, 0, 0
-        cand = (
-            banded.select(F.col("doc_id").alias("doc_a"), "band", "bucket")
-            .join(
-                banded.select(F.col("doc_id").alias("doc_b"), "band", "bucket"),
-                ["band", "bucket"],
-            )
-            .where(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b")
-        )
+        cand = _band_pairs(banded)
         if stored_b is not None:
             vs_stored = (
                 stored_b.select(F.col("doc_id").alias("old_id"), "band", "bucket")
@@ -945,27 +901,7 @@ class MinHashIndex(BatchStore):
             "set_partitions_read": s_read,
             "set_partitions_total": s_total,
         }
-        sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-        sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-        # join-strategy pin (see _small_input): above the small-input bound
-        # the verify joins must not ride on fabricated checkpoint stats
-        verify_cand = cand
-        if not _small_input(docs):
-            verify_cand = cand.hint("merge")
-            sa, sb = sa.hint("merge"), sb.hint("merge")
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        na, nb = F.size("sh_a"), F.size("sh_b")
-        pairs_plan = (
-            verify_cand.join(sa, "doc_a")
-            .join(sb, "doc_b")
-            .select(
-                "doc_a", "doc_b", inter.alias("inter"), na.alias("na"), nb.alias("nb")
-            )
-            .where(
-                F.col("inter") * F.lit(1.0)
-                >= F.lit(self.threshold) * (F.col("na") + F.col("nb") - F.col("inter"))
-            )
-        )
+        pairs_plan = _verify_jaccard(cand, sets, docs, self.threshold)
         # the pairs result must materialize BEFORE the manifest commit in
         # ``add`` (a later add/compact may delete the very dirs its plan
         # reads); the store writes this phase overlaps with never touch
@@ -979,21 +915,8 @@ class MinHashIndex(BatchStore):
         consolidated batch becomes visible only at the manifest swap; old
         dirs are deleted after, and a crash before the swap leaves an
         orphan slot the next writer overwrites. Returns #batches merged."""
-        import os
-
         batches = self._manifest()
         if len(batches) <= 1:
             return 0
-        n = self._next_slot()
-        for root in (self._buckets, self._sets):
-            dirs = [
-                os.path.join(root, f"batch={b}")
-                for b in batches
-                if os.path.isdir(os.path.join(root, f"batch={b}"))
-            ]
-            df = self.spark.read.option("basePath", root).parquet(*dirs)
-            key = "pkey" if root == self._buckets else "skey"
-            cols = ["doc_id", "band", "bucket"] if key == "pkey" else ["doc_id", "sh"]
-            write_batch(df.select(*cols, key), root, key, n)
-        self._commit_compacted(n, self._buckets, self._sets)
+        self._compact({self._buckets: "pkey", self._sets: "skey"})
         return len(batches)

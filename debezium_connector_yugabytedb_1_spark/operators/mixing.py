@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import token_count, word_shingles
-from .dedup import _spread
+from .dedup import _input_sizes, _spread
 
 
 def decontaminate(
@@ -68,24 +68,17 @@ def decontaminate(
     strings — comfortably inside executor memory, far under the 8 GB
     broadcast cap — while any real benchmark suite is kilobytes.
     """
-    import os
-
     bench = benchmark.select(
         F.explode(word_shingles(text_col, k)).alias("shingle")
     ).distinct()
-    try:
-        files = benchmark.inputFiles()
-        if files:
-            total = sum(os.path.getsize(f.replace("file:", "")) for f in files)
-            force_broadcast = total <= max_broadcast_input_bytes
-        else:
-            # not file-backed: an in-memory benchmark (LocalRelation) is
-            # driver-resident already — broadcasting it is safe by
-            # construction, and the planner's post-explode estimate would
-            # needlessly shuffle the corpus
-            force_broadcast = True
-    except Exception:
-        force_broadcast = False
+    # not file-backed: an in-memory benchmark (LocalRelation) is
+    # driver-resident already — broadcasting it is safe by construction,
+    # and the planner's post-explode estimate would needlessly shuffle the
+    # corpus
+    sizes = _input_sizes(benchmark)
+    force_broadcast = sizes is not None and (
+        not sizes or sum(sizes) <= max_broadcast_input_bytes
+    )
     if force_broadcast:
         bench = F.broadcast(bench)
     sh = _spread(docs).select(
@@ -221,16 +214,10 @@ def pack_sequences(
         F.col(id_col).alias("doc_id"), *strat, toks.alias("n_tokens")
     )
     if two_pass is None:
-        import os
-
-        try:
-            files = docs.inputFiles()
-            total = sum(os.path.getsize(f.replace("file:", "")) for f in files)
-            # 64 MB: past this, a dominant stratum's single window task is
-            # worth two extra sub-second driver jobs to avoid
-            two_pass = bool(files) and total > (64 << 20)
-        except Exception:
-            two_pass = False
+        # 64 MB: past this, a dominant stratum's single window task is
+        # worth two extra sub-second driver jobs to avoid
+        sizes = _input_sizes(docs)
+        two_pass = sizes is not None and sum(sizes) > (64 << 20)
     if not two_pass:
         w = (
             Window.partitionBy(skey)

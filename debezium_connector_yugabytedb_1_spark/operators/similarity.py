@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import cosine_similarity
-from ._store import BatchStore, write_batch
+from ._store import BatchStore
 from .dedup import _spread
 
 
@@ -247,6 +247,16 @@ def ivf_topk(
     )
 
 
+def _latest_copy():
+    """``_w``: the (list_id, emb) of a vec_id's copy from the highest
+    committed batch, ties within a batch broken on the vector itself — the
+    deterministic latest-batch-wins rule for re-added ids."""
+    return F.max_by(
+        F.struct("list_id", "emb"),
+        F.struct(F.col("batch").cast("long").alias("b"), F.col("emb").alias("e")),
+    ).alias("_w")
+
+
 class IvfIndex(BatchStore):
     """Persisted IVF-Flat index — the ANN complement of ``MinHashIndex``:
     a training-data pipeline embeds documents continuously, and re-running
@@ -263,9 +273,10 @@ class IvfIndex(BatchStore):
       partitioned by ``lkey = list_id % n_parts``. A query probing
       ``nprobe`` lists reads only those lkey partitions — bytes read per
       query ∝ nprobe/n_lists of the corpus, never the corpus.
-    - ``manifest.json``: the same crash-safe batch commit protocol as
-      ``MinHashIndex`` (write batch dirs, then atomically commit the
-      batch id; orphans from a crashed add() are overwritten on retry).
+    - ``manifest.json``: ``_store.BatchStore``'s crash-safe add and
+      compaction protocol, shared with the dedup indexes (write the batch
+      dirs, then atomically commit the batch id; orphans from a crashed
+      add() are overwritten on retry).
 
     ``compact()`` folds all committed batches into one so directory
     listings stay flat on long-running ingest. Per-query scan stats land
@@ -298,6 +309,9 @@ class IvfIndex(BatchStore):
         self.seed = seed
         self.last_query_stats: dict = {}
         self._vectors = os.path.join(path, "vectors")
+
+    def _lkey(self):
+        return F.pmod(F.col("list_id"), F.lit(self.n_parts)).cast("int")
 
     @property
     def trained(self) -> bool:
@@ -374,15 +388,8 @@ class IvfIndex(BatchStore):
         it folds the store to one row per id, keeping the latest batch."""
         if not self.trained:
             raise ValueError("train() the quantizer before add()")
-        n = self._next_slot()
-        write_batch(
-            self._assigned(batch).withColumn(
-                "lkey", F.pmod(F.col("list_id"), F.lit(self.n_parts)).cast("int")
-            ),
-            self._vectors, "lkey", n,
-        )
-        self._commit_manifest(self._manifest() + [n])
-        return n
+        rows = self._assigned(batch).withColumn("lkey", self._lkey())
+        return self._add_batch([(rows, self._vectors, "lkey")])[0]
 
     def query(self, queries: DataFrame, k: int = 5, nprobe: int = 4) -> DataFrame:
         """IVF-Flat search against the store: probe each query's ``nprobe``
@@ -423,16 +430,8 @@ class IvfIndex(BatchStore):
             # re-adds physically (one row per vec_id, latest batch) and is
             # the contract for upsert visibility (see add())
             .groupBy("query_id", "vec_id")
-            .agg(
-                F.max_by(
-                    F.struct("list_id", "emb"),
-                    F.struct(F.col("batch").cast("long").alias("b"), F.col("emb").alias("e")),
-                ).alias("_w")
-            )
-            .select(
-                "query_id", "vec_id",
-                F.col("_w.list_id").alias("list_id"), F.col("_w.emb").alias("emb"),
-            )
+            .agg(_latest_copy())
+            .select("query_id", "vec_id", "_w.list_id", "_w.emb")
         )
         q = queries.select(
             F.col(self.id_col).alias("query_id"), F.col(self.vec_col).alias("q_vec")
@@ -453,37 +452,19 @@ class IvfIndex(BatchStore):
 
     def compact(self) -> int:
         """Fold every committed batch into one (listing stays O(n_parts) on
-        long-running ingest). Returns the new batch id."""
-        old = self._manifest()
-        if not old:
+        long-running ingest). Returns the new batch id, -1 on an empty
+        store."""
+        if not self._manifest():
             return -1
-        stored, _, _ = self._pruned_read(
-            self._vectors, "lkey", set(range(self.n_parts))
+        # re-added ids are resolved PHYSICALLY here with the same
+        # latest-batch-wins rule query() applies, so the folded store holds
+        # one row per vec_id; the read-side partition columns (batch, lkey)
+        # are projected away — carrying them bakes a stale `batch` data
+        # column into the new files
+        return self._compact(
+            {self._vectors: "lkey"},
+            lambda stored: stored.groupBy("vec_id")
+            .agg(_latest_copy())
+            .select("vec_id", "_w.list_id", "_w.emb")
+            .withColumn("lkey", self._lkey()),
         )
-        n = self._next_slot()
-        write_batch(
-            # project away the read-side partition columns (batch, lkey) —
-            # carrying them bakes a stale `batch` data column into the new
-            # files and every later read logs a shadowed-column conflict.
-            # Re-added ids are resolved PHYSICALLY here with the same
-            # latest-batch-wins rule query() applies, so the folded store
-            # holds one row per vec_id.
-            stored.groupBy("vec_id")
-            .agg(
-                F.max_by(
-                    F.struct("list_id", "emb"),
-                    F.struct(F.col("batch").cast("long").alias("b"), F.col("emb").alias("e")),
-                ).alias("_w")
-            )
-            .select(
-                "vec_id",
-                F.col("_w.list_id").alias("list_id"),
-                F.col("_w.emb").alias("emb"),
-            )
-            .withColumn(
-                "lkey", F.pmod(F.col("list_id"), F.lit(self.n_parts)).cast("int")
-            ),
-            self._vectors, "lkey", n,
-        )
-        self._commit_compacted(n, self._vectors)
-        return n

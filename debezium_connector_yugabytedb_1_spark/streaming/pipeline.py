@@ -176,11 +176,9 @@ def window_stats(window: DataFrame, n_buckets: int, metered: Column | None) -> d
     # DDL window's point lookup below; DDLs are rare by construction).
     # A cross-repo PK update carries old_repo in the key block; when
     # absent (same-repo rename) the repo is shared.
-    old_key_hash = F.xxhash64(
-        F.coalesce(F.col("old_repo"), F.col("repo")), F.col("old_path")
-    )
     bucket_old = F.when(
-        F.col("op") == "pku", F.pmod(old_key_hash, F.lit(n_buckets))
+        F.col("op") == "pku",
+        bucket_expr(n_buckets, (F.coalesce(F.col("old_repo"), F.col("repo")), "old_path")),
     )
     op = F.col("op")
     aggs = [] if metered is None else partial_aggs(metered)
@@ -467,18 +465,17 @@ class CdcPipeline:
         # hiding the stats pass behind the merge — the GetChanges prefetch
         # the reference gets from its poll loop, expressed as a 1-slot
         # lookahead thread (Spark schedulers are thread-safe). ``ckpt_rows``
-        # is the checkpoint the window's ``_apply`` will resume-filter
-        # against, known at submit time: the committed rows max-merged with
-        # the offsets of every window before it. The meters count the rows
-        # ``_apply`` keeps: no DDL markers, resume-filtered.
+        # is the checkpoint the window resumes from, known at submit time:
+        # the committed rows max-merged with the offsets of every window
+        # before it. ``kept`` (no DDL markers, resume-filtered) selects the
+        # rows ``_apply`` gets, and the meters count exactly those.
         meters = self.metrics is not None or self.task_metrics is not None
 
         def submit(pool, wlo, whi, ckpt_rows):
             w = self._window(events, wlo, whi)
-            metered = (
-                (F.col("op") != "ddl") & resume_predicate(ckpt_rows) if meters else None
-            )
-            return pool.submit(window_stats, w, self.table.n_buckets, metered), w
+            kept = (F.col("op") != "ddl") & resume_predicate(ckpt_rows)
+            metered = kept if meters else None
+            return pool.submit(window_stats, w, self.table.n_buckets, metered), w.where(kept)
 
         with ThreadPoolExecutor(max_workers=1) as pool:
             # the first window's stats job runs concurrently with the
@@ -493,23 +490,19 @@ class CdcPipeline:
                 return []
             while lo <= max_index and (max_batches is None or n < max_batches):
                 hi = lo + self.events_per_batch
-                if fut is None:
-                    fut, window = submit(pool, lo, hi, self.ckpt.load_rows())
                 stats = fut.result()
                 if self.auto_add_tables:
                     self._poll_tables(stats["tables"], lo)
                 nxt_lo, nxt_hi = hi, hi + self.events_per_batch
                 if nxt_lo <= max_index and (max_batches is None or n + 1 < max_batches):
-                    nxt_fut, nxt_window = submit(
+                    nxt = submit(
                         pool, nxt_lo, nxt_hi,
                         merge_offset_rows(self.ckpt.load_rows(), stats["offsets"]),
                     )
                 else:
-                    nxt_fut, nxt_window = None, None
+                    nxt = None, None
                 # DDL markers reach the merge through ``stats["ddls"]``
-                results.append(
-                    self._apply(window.where(F.col("op") != "ddl"), f"b{lo}-{hi}", stats)
-                )
+                results.append(self._apply(window, f"b{lo}-{hi}", stats))
                 # offsets were part of the single stats pass; commit + advance
                 self.ckpt.commit(stats["offsets"], meta={"next_lo": hi})
                 if self.expire_keep is not None:
@@ -530,7 +523,7 @@ class CdcPipeline:
                     self.pruned_segments += prune_wal_segments(
                         self.events_path, hi
                     )
-                fut, window = nxt_fut, nxt_window
+                fut, window = nxt
                 lo = hi
                 n += 1
         return results
@@ -563,15 +556,12 @@ class CdcPipeline:
 
     # ------------------------------------------------------------------
     def _apply(self, batch: DataFrame, batch_id: str, stats: dict) -> BatchResult:
-        """One window's data rows (no DDL markers) through the full operator
-        chain — a single Spark job (epoch decode→fold→MERGE write) whose
+        """One window's kept rows (no DDL markers, resume-filtered by
+        ``run``) through the full operator chain — a single Spark job (epoch decode→fold→MERGE write) whose
         manifest commit also carries the window's DDLs (``merge_window``).
         Offsets, counts, buckets, DDLs and the lineage/meter partials came
         from the window-stats pass: appending the lineage rows and folding
         the meters run on the driver with no Spark job."""
-        # the resume predicate the stats pass metered with: the checkpoint
-        # has since advanced by exactly the windows before this one
-        batch = batch.where(resume_predicate(self.ckpt.load_rows()))
         partials = stats["partials"]
         if self.metrics is not None:
             self.metrics.append(lineage_rows(partials, batch_id))

@@ -197,9 +197,14 @@ def test_minhash_index_retry_publishes_nothing_of_a_rejected_add(spark, tmp_path
         assert {r["doc_id"] for r in slot.select("doc_id").distinct().collect()} == {2}
 
 
-def test_minhash_index_failed_write_waits_out_writers(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize(
+    "kind, root",
+    [("exact", "hashes"), ("minhash", "buckets"), ("ivf", "vectors")],
+    ids=["exact", "minhash", "ivf"],
+)
+def test_index_failed_write_waits_out_writers(spark, tmp_path, monkeypatch, kind, root):
     """A failed store write fails the add with the manifest unchanged, and
-    only once the sibling write has finished: no writer pool thread outlives
+    only once every other write has finished: no writer pool thread outlives
     the call (a caller may delete the store directory on error)."""
     import os
     import threading
@@ -207,18 +212,34 @@ def test_minhash_index_failed_write_waits_out_writers(spark, tmp_path, monkeypat
 
     from pyspark.sql import DataFrameWriter
 
-    from debezium_connector_yugabytedb_1_spark.operators.dedup import MinHashIndex
+    from debezium_connector_yugabytedb_1_spark.operators.dedup import (
+        ExactDedupIndex,
+        MinHashIndex,
+    )
+    from debezium_connector_yugabytedb_1_spark.operators.similarity import IvfIndex
 
-    docs = _seeded_docs(spark, n_base=6)
-    idx = MinHashIndex(spark, str(tmp_path / "idx"), k=3)
-    idx.add(docs.where(F.col("doc_id") < 3)).collect()
+    from .test_ivf_index import _emb
+
+    path = str(tmp_path / "idx")
+    if kind == "ivf":
+        data, id_col = _emb(spark), "vec_id"
+        idx = IvfIndex(spark, path, n_lists=8, n_parts=4)
+        idx.train(data)
+    else:
+        data, id_col = _seeded_docs(spark, n_base=6), "doc_id"
+        idx = (
+            MinHashIndex(spark, path, k=3)
+            if kind == "minhash"
+            else ExactDedupIndex(spark, path, n_parts=4)
+        )
+    idx.add(data.where(F.col(id_col) < 3))
     before = idx._manifest()
     parquet = DataFrameWriter.parquet
 
     def failing(self, path, *args, **kwargs):
-        if f"{os.sep}buckets{os.sep}" in path:
+        if f"{os.sep}{root}{os.sep}" in path:
             raise OSError("injected store write failure")
-        time.sleep(2)  # the sets write still runs when the buckets write fails
+        time.sleep(2)  # a sibling write still runs when the failing one fails
         return parquet(self, path, *args, **kwargs)
 
     def pool_threads():
@@ -230,10 +251,9 @@ def test_minhash_index_failed_write_waits_out_writers(spark, tmp_path, monkeypat
     running = pool_threads()
     monkeypatch.setattr(DataFrameWriter, "parquet", failing)
     with pytest.raises(OSError, match="injected"):
-        idx.add(docs.where(F.col("doc_id") >= 3))
+        idx.add(data.where(F.col(id_col) >= 3))
     assert not pool_threads() - running
     assert idx._manifest() == before
-
 
 
 def test_minhash_lsh_probe_thread_ends_with_a_failed_call(spark, monkeypatch):
@@ -421,11 +441,6 @@ def test_exact_index_null_text_not_dropped(spark, tmp_path):
     out = {r["doc_id"]: (r["is_duplicate"], r["dup_of"]) for r in idx.add(docs).collect()}
     assert len(out) == 3                      # nothing vanished
     assert out[2] == (False, None) and out[3] == (True, 2)
-    # empty-store compact over zero-row batches is a no-op, not a crash
-    e = ExactDedupIndex(spark, str(tmp_path / "e"), n_parts=4)
-    empty = docs.where("doc_id < 0")
-    e.add(empty); e.add(empty)
-    assert e.compact() == 2
 
 
 def test_pair_joins_never_broadcast_unbounded_side(spark, tmp_path, monkeypatch):

@@ -1,7 +1,8 @@
-"""``BatchStore._commit_compacted``, as every index's ``compact()`` uses it:
-after compaction exactly one ``batch=<n>`` slot dir is left under each
-store root (the manifest's only batch), and the index answers the same
-as an uncompacted copy of itself."""
+"""``BatchStore._compact``, as every index's ``compact()`` uses it: after
+compaction exactly one ``batch=<n>`` slot dir is left under each store
+root (the manifest's only batch), and the index answers the same as an
+uncompacted copy of itself — also when the committed batches hold no
+rows at all."""
 
 import os
 import shutil
@@ -86,3 +87,22 @@ def test_compact_leaves_one_slot_and_same_answers(spark, tmp_path, kind):
     assert len(uncompacted._manifest()) == 3
     got = answer(idx)
     assert got and got == answer(uncompacted)
+
+
+@pytest.mark.parametrize("kind", [_exact, _minhash, _ivf], ids=["exact", "minhash", "ivf"])
+def test_compact_of_empty_batches(spark, tmp_path, kind):
+    """Two adds of an empty batch, then ``compact()``: no crash, one slot
+    dir per root, and the index answers as a fresh, empty one does."""
+    open_, chunks, roots, answer = kind(spark)
+    path = str(tmp_path / "idx")
+    idx = open_(path)
+    empty = chunks[0].where(F.lit(False))
+    idx.add(empty)
+    idx.add(empty)
+    merged = idx.compact()
+    (n,) = idx._manifest()
+    assert merged == (n if kind is _ivf else 2)
+    for root in roots:
+        slots = [d for d in os.listdir(os.path.join(path, root)) if d.startswith("batch=")]
+        assert slots == [f"batch={n}"], root
+    assert answer(idx) == answer(open_(str(tmp_path / "fresh")))
