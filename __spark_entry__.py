@@ -633,13 +633,16 @@ def q_text_line_dedup(spark, sf_dir):
     5-word lines (deterministically, same formula as the oracle), then a
     line repeated anywhere in the corpus survives only at its globally
     first (doc_id, position) occurrence and texts are rebuilt."""
+    from debezium_connector_yugabytedb_1_spark.functions import let
     from debezium_connector_yugabytedb_1_spark.operators.text import line_dedup
 
     W = 5
-    ws = F.split(F.col("text"), " ")
-    lines_arr = F.transform(
-        F.sequence(F.lit(0), F.ceil(F.size(ws) / F.lit(W)).cast("int") - 1),
-        lambda g: F.array_join(F.slice(ws, g * W + 1, W), " "),
+    lines_arr = let(
+        F.split(F.col("text"), " "),
+        lambda ws: F.transform(
+            F.sequence(F.lit(0), F.ceil(F.size(ws) / F.lit(W)).cast("int") - 1),
+            lambda g: F.array_join(F.slice(ws, g * W + 1, W), " "),
+        ),
     )
     ml = _docs(spark, sf_dir).select(
         "doc_id", F.array_join(lines_arr, "\n").alias("text")

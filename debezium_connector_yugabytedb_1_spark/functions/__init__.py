@@ -6,8 +6,22 @@ UDF).
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+
+def let(value: Column, body: Callable[[Column], Column]) -> Column:
+    """``body(value)`` with ``value`` evaluated once per row: it is bound to
+    a lambda variable, ``element_at(transform(array(value), body), 1)``.
+
+    A per-row expression used inside a higher-order function's lambda is
+    evaluated again on every element, because Catalyst eliminates no
+    common subexpression inside a lambda body and higher-order functions
+    run interpreted. Bind such an expression with ``let`` and use the
+    variable inside the lambda instead."""
+    return F.element_at(F.transform(F.array(value), body), 1)
 
 
 def norm_tokens(col: Column | str) -> Column:
@@ -15,7 +29,9 @@ def norm_tokens(col: Column | str) -> Column:
     fingerprints, simhash, bigrams): lowercase → collapse whitespace runs →
     trim → split on single space. This expression is also the Spark twin of
     the DuckDB oracle's ``_TOK_NORM`` — keep them in lockstep or oracle
-    equivalence silently breaks."""
+    equivalence silently breaks. A caller that reads the tokens inside a
+    lambda (``word_shingles``, ``repetition_features``' bigrams) binds
+    them with ``let``, so the tokenizer runs once per row."""
     c = F.col(col) if isinstance(col, str) else col
     return F.split(F.trim(F.regexp_replace(F.lower(c), r"\s+", " ")), " ")
 
@@ -58,22 +74,28 @@ def stopword_count(col: Column | str, stopwords=EN_STOPWORDS) -> Column:
 
 
 def word_shingles(col: Column | str, k: int = 3) -> Column:
-    """Array of k-word shingles (JVM: split + transform over a sequence)."""
-    c = F.col(col) if isinstance(col, str) else col
-    toks = norm_tokens(c)
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(-1)))
-    return F.when(
-        n >= k,
-        F.array_distinct(
-            F.transform(
-                idx,
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(toks, (i + j + 1).cast("int")) for j in range(k)]
-                ),
-            )
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", toks)))
+    """Distinct k-word shingles of ``norm_tokens(col)`` in first-occurrence
+    order; fewer than k tokens yield the one shingle of the whole token
+    list (``''`` for NULL or blank text). The tokens are bound with
+    ``let``: the tokenizer runs once per row, not once per shingle
+    position and word (JVM: split + transform over a sequence)."""
+
+    def shingles(toks: Column) -> Column:
+        n = F.size(toks)
+        idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(-1)))
+        return F.when(
+            n >= k,
+            F.array_distinct(
+                F.transform(
+                    idx,
+                    lambda i: F.concat_ws(
+                        " ", *[F.element_at(toks, (i + j + 1).cast("int")) for j in range(k)]
+                    ),
+                )
+            ),
+        ).otherwise(F.array(F.concat_ws(" ", toks)))
+
+    return let(norm_tokens(col), shingles)
 
 
 # ---------------------------------------------------------------- vectors

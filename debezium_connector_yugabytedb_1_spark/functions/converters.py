@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from . import let
+
 # ---- special sentinels (reference :84-116) --------------------------------
 #: micros-since-epoch sentinels for ``timestamp 'infinity'`` rows — the
 #: PGStatement DATE_POSITIVE_INFINITY / DATE_NEGATIVE_INFINITY constants the
@@ -358,10 +360,11 @@ def convert_varbit_bytes(col: Column | str) -> Column:
     nbits = F.length(F.regexp_replace(c, r"^0+", ""))  # bitset.length()
     nbytes = F.ceil(nbits / 8).cast("int")
     be = F.unhex(F.lpad(val, nbytes * 2, "0"))  # big-endian bytes
-    # reverse to little-endian byte order
+    # reverse to little-endian byte order (``be`` bound once per row)
     idx = F.sequence(nbytes.cast("int"), F.lit(1), F.lit(-1))
-    le = F.array_join(
-        F.transform(idx, lambda i: F.hex(F.substring(be, i, 1))), ""
+    le = let(
+        be,
+        lambda b: F.array_join(F.transform(idx, lambda i: F.hex(F.substring(b, i, 1))), ""),
     )
     return F.when(nbits == 0, F.unhex(F.lit(""))).otherwise(F.unhex(le))
 

@@ -7,7 +7,11 @@ Scale notes (the whole point of each design):
 - **ngram_jaccard**: shingle-inverted-index self-join. The join explodes on
   frequent shingles, so shingles above a document-frequency cap are dropped
   (standard trick; a shingle shared by thousands of docs carries no dedup
-  signal but quadratic cost). All JVM.
+  signal but quadratic cost). All JVM. The shingle pass tokenizes each
+  document once: ``word_shingles`` binds the ``norm_tokens`` array with
+  ``functions.let``, because a tokenizer read inside the shingle lambda
+  would run again for every shingle position and word. MinHash+LSH and
+  ``MinHashIndex`` shingle through the same function.
 - **minhash_lsh**: signatures via ``min(xxhash64(shingle, seed_i))`` per
   band — pure JVM aggregates, no UDF, deterministic; band-bucket join
   produces candidates; exact Jaccard verifies. This is the 100 TB path:

@@ -7,10 +7,11 @@ JVM; regex/array built-ins vectorize per batch in Tungsten.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import (
+    let,
     norm_tokens,
     punct_count,
     rolling_fingerprint,
@@ -93,7 +94,9 @@ def repetition_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
                             number inside the scan stage (7.5 s → ~1 s at
                             sf0.1, and no shuffle to skew at 100 TB).
 
-    Zero shuffles end to end: one projection over the corpus.
+    Zero shuffles end to end: one projection over the corpus. The
+    tokenizer runs once per row: the tokens are bound with ``let`` outside
+    the bigram lambda, and so is the bigram array outside the count.
 
     Output: (doc_id, n_lines, dup_line_frac, n_bigrams, top_bigram_share).
     Single-line docs have dup_line_frac 0; docs with <2 tokens have one
@@ -102,45 +105,61 @@ def repetition_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
     t = F.col(text_col)
     lines = F.split(t, "\n")
     nl = F.size(lines)
-    # NON-distinct bigrams (counts matter here — word_shingles dedups)
-    toks = norm_tokens(t)  # the shared canonical tokenizer (oracle twin)
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - 2, F.lit(-1)))
-    bigrams = F.when(
-        n >= 2,
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(toks, (i + 1).cast("int")),
-                F.element_at(toks, (i + 2).cast("int")),
-            ),
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", toks)))
-    # longest equal run in the SORTED array = max occurrence count
     zero = F.lit(0).cast("long")
-    run_scan = F.aggregate(
-        F.array_sort(bigrams),
-        F.struct(
-            F.lit(None).cast("string").alias("prev"),
-            zero.alias("run"),
-            zero.alias("best"),
-        ),
-        lambda a, x: F.struct(
-            x.alias("prev"),
-            F.when(x == a["prev"], a["run"] + 1).otherwise(F.lit(1).cast("long")).alias("run"),
-            F.greatest(
-                a["best"],
-                F.when(x == a["prev"], a["run"] + 1).otherwise(F.lit(1).cast("long")),
-            ).alias("best"),
-        ),
-    )
+
+    def bigram_stats(toks: Column) -> Column:
+        # NON-distinct bigrams (counts matter here — word_shingles dedups)
+        n = F.size(toks)
+        idx = F.sequence(F.lit(0), F.greatest(n - 2, F.lit(-1)))
+        bigrams = F.when(
+            n >= 2,
+            F.transform(
+                idx,
+                lambda i: F.concat_ws(
+                    " ",
+                    F.element_at(toks, (i + 1).cast("int")),
+                    F.element_at(toks, (i + 2).cast("int")),
+                ),
+            ),
+        ).otherwise(F.array(F.concat_ws(" ", toks)))
+        return let(bigrams, top_count)
+
+    def top_count(bigrams: Column) -> Column:
+        # longest equal run in the SORTED array = max occurrence count
+        run_scan = F.aggregate(
+            F.array_sort(bigrams),
+            F.struct(
+                F.lit(None).cast("string").alias("prev"),
+                zero.alias("run"),
+                zero.alias("best"),
+            ),
+            lambda a, x: F.struct(
+                x.alias("prev"),
+                F.when(x == a["prev"], a["run"] + 1).otherwise(F.lit(1).cast("long")).alias("run"),
+                F.greatest(
+                    a["best"],
+                    F.when(x == a["prev"], a["run"] + 1).otherwise(F.lit(1).cast("long")),
+                ).alias("best"),
+            ),
+        )
+        return F.struct(F.size(bigrams).alias("n"), run_scan["best"].alias("best"))
+
+    # the shared canonical tokenizer (oracle twin), run once per row: the
+    # tokens and the bigram array are each bound with ``let``, and the
+    # bigram count and top count come out as one struct for the outer
+    # select (a second project, so the struct is not inlined twice)
+    stats = let(norm_tokens(t), bigram_stats)
     return docs.select(
         "doc_id",
         nl.cast("long").alias("n_lines"),
         (F.lit(1.0) - F.size(F.array_distinct(lines)) / nl).alias("dup_line_frac"),
-        F.size(bigrams).cast("long").alias("n_bigrams"),
-        (run_scan["best"] / F.size(bigrams)).alias("top_bigram_share"),
+        stats.alias("_bigrams"),
+    ).select(
+        "doc_id",
+        "n_lines",
+        "dup_line_frac",
+        F.col("_bigrams.n").cast("long").alias("n_bigrams"),
+        (F.col("_bigrams.best") / F.col("_bigrams.n")).alias("top_bigram_share"),
     )
 
 
